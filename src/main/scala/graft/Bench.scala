@@ -355,36 +355,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // pinned like Verify's session: without it a Bench launched outside
-      // sbt would time a DIFFERENT workload (host-TZ calendar bucketing)
-      // than the one whose correctness was verified
-      .config("spark.sql.session.timeZone", "UTC")
-      // r13 (guide §2.2): route small-R no-map-side-agg shuffles through
-      // the sort writer (ONE output file per map task) instead of the
-      // bypass-merge writer (R files per map task + an NIO concat). On
-      // containerized/overlay filesystems file creation is expensive and
-      // thread dumps showed executor workers pinned in FileChannel
-      // map/transferTo; measured 3-5× task-time drop on join-heavy
-      // queries (q374 213→51 CPU-s, q330 37→11, q369 51→10). Scale-
-      // neutral: production shuffles have R > 200 and never took the
-      // bypass path anyway. Env-overridable for A/B.
-      .config("spark.shuffle.sort.bypassMergeThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_BYPASS_MERGE_THRESHOLD", "1"))
-      // r13: the JVM-wide whole-stage-codegen class cache defaults to 100
-      // entries — a 387-query catalog (and per-round literal variants in
-      // the iterative ops) thrashes it, so executor tasks re-run Janino
-      // per stage (thread dumps showed workers pinned in
-      // UnitCompiler.compile; q359 task time 58→17 s with the raise).
-      // ~10k entries covers the catalog across bench passes; class
-      // metadata cost is ~100-250 MB, fine for any long-lived executor.
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "10000"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.local(Sessions.cpus)
     spark.sparkContext.setLogLevel("WARN")
     // untimed warmup: JIT/codegen/session init out of the measurements
     try {

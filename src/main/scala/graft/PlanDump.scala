@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: write `.explain("formatted")` for catalog queries to files —
   * the before/after plan evidence the optimization rounds commit under
   * `plans/rNN/`. Usage:
@@ -16,27 +14,7 @@ object PlanDump {
       sys.exit(2)
     }
     val Array(sfDir, outDir, suffix, list) = args.take(4)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // r13: sort writer for small-R no-agg shuffles (see Bench.scala —
-      // bypass-merge writes R files per map task, pathological on this
-      // filesystem; scale-neutral since production R > 200)
-      .config("spark.shuffle.sort.bypassMergeThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_BYPASS_MERGE_THRESHOLD", "1"))
-      // r13: the JVM-wide whole-stage-codegen class cache defaults to 100
-      // entries — a 387-query catalog (and per-round literal variants in
-      // the iterative ops) thrashes it, so executor tasks re-run Janino
-      // per stage (thread dumps showed workers pinned in
-      // UnitCompiler.compile; q359 task time 58→17 s with the raise).
-      // ~10k entries covers the catalog across bench passes; class
-      // metadata cost is ~100-250 MB, fine for any long-lived executor.
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "10000"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.local(Sessions.cpus)
     spark.sparkContext.setLogLevel("WARN")
     val names =
       if (list == "all") SparkEntry.queries.keys.toSeq.sorted

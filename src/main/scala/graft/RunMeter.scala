@@ -1,0 +1,61 @@
+package graft
+
+import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.atomic.AtomicLong
+
+import org.apache.spark.SparkContext
+import org.apache.spark.scheduler._
+import org.apache.spark.sql.GraftSqlBridge
+
+/** Execution counters for a measured run: jobs, stages, tasks, summed
+  * task run and GC time, shuffle bytes read and written, and run time per
+  * stage name. Wall ≫ taskMs/cores means scheduling or planning overhead
+  * dominates; taskMs ≈ wall means one single-threaded stage is the
+  * bottleneck. Listener events arrive asynchronously: call [[settle]]
+  * after the measured action, before reading. */
+final class RunMeter private (sc: SparkContext) extends SparkListener {
+  val jobs, stages, tasks, taskMs, gcMs, shuffleRead, shuffleWrite = new AtomicLong
+  /** Executor run time (ms) summed per stage name. */
+  val stageMs = new ConcurrentHashMap[String, Long]
+
+  override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+
+  override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
+    stages.incrementAndGet()
+    val si = e.stageInfo
+    val ms = Option(si.taskMetrics).map(_.executorRunTime).getOrElse(0L)
+    stageMs.merge(si.name.take(120), ms, (a, b) => a + b)
+  }
+
+  override def onTaskEnd(e: SparkListenerTaskEnd): Unit = {
+    tasks.incrementAndGet()
+    val m = e.taskMetrics
+    if (m != null) {
+      taskMs.addAndGet(m.executorRunTime)
+      gcMs.addAndGet(m.jvmGCTime)
+      shuffleRead.addAndGet(m.shuffleReadMetrics.totalBytesRead)
+      shuffleWrite.addAndGet(m.shuffleWriteMetrics.bytesWritten)
+    }
+  }
+
+  /** Block until Spark's listener bus has delivered every event posted so
+    * far (an action posts its job, stage and task end events before it
+    * returns). Throws `TimeoutException` after 30 s. */
+  def settle(): Unit = GraftSqlBridge.waitForListeners(sc, 30000L)
+
+  def reset(): Unit = {
+    Seq(jobs, stages, tasks, taskMs, gcMs, shuffleRead, shuffleWrite).foreach(_.set(0))
+    stageMs.clear()
+  }
+
+  def close(): Unit = sc.removeSparkListener(this)
+}
+
+object RunMeter {
+  /** A meter registered on `sc`'s listener bus. */
+  def attach(sc: SparkContext): RunMeter = {
+    val m = new RunMeter(sc)
+    sc.addSparkListener(m)
+    m
+  }
+}

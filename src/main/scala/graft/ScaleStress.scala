@@ -1,8 +1,5 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicLong
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -31,37 +28,12 @@ object ScaleStress {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // r13: sort writer for small-R no-agg shuffles (see Bench.scala —
-      // bypass-merge writes R files per map task, pathological on this
-      // filesystem; scale-neutral since production R > 200)
-      .config("spark.shuffle.sort.bypassMergeThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_BYPASS_MERGE_THRESHOLD", "1"))
-      // r13: the JVM-wide whole-stage-codegen class cache defaults to 100
-      // entries — a 387-query catalog (and per-round literal variants in
-      // the iterative ops) thrashes it, so executor tasks re-run Janino
-      // per stage (thread dumps showed workers pinned in
-      // UnitCompiler.compile; q359 task time 58→17 s with the raise).
-      // ~10k entries covers the catalog across bench passes; class
-      // metadata cost is ~100-250 MB, fine for any long-lived executor.
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "10000"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = Sessions.cpus
+    val spark = Sessions.local(cpus)
     spark.sparkContext.setLogLevel("WARN")
 
-    // shuffle accounting: stage-completion metrics, accumulated per run
-    val shuffleWrite = new AtomicLong(0)
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onStageCompleted(s: SparkListenerStageCompleted): Unit = {
-        val m = s.stageInfo.taskMetrics
-        if (m != null) shuffleWrite.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-      }
-    })
+    // shuffle accounting, accumulated per run
+    val meter = RunMeter.attach(spark.sparkContext)
 
     val docs1x = spark.read.parquet(s"$sfDir/documents.parquet")
       .select("doc_id", "text")
@@ -74,24 +46,9 @@ object ScaleStress {
         (col("doc_id") + lit(i * stride)).as("doc_id"),
         translate(col("text"), alpha, rot).as("text"))
     }
-    copies.reduce(_ unionAll _).repartition(cpus.toInt)
+    copies.reduce(_ unionAll _).repartition(cpus)
       .write.mode("overwrite").parquet(corpusDir)
     val docs10x = spark.read.parquet(corpusDir)
-
-    /** Wait until the async listener bus has visibly drained: poll the
-      * accumulated counter until it stops changing (a fixed sleep after a
-      * many-round CC run can undercount — late stage events would be
-      * zeroed by the next run's reset). */
-    def drainListeners(): Unit = {
-      var prev = -1L
-      var same = 0
-      var waited = 0
-      while (same < 3 && waited < 5000) {
-        Thread.sleep(200); waited += 200
-        val cur = shuffleWrite.get
-        if (cur == prev) same += 1 else { same = 0; prev = cur }
-      }
-    }
 
     // optional second arg: comma-separated op allowlist (re-measure a
     // few rows without paying for the whole harness)
@@ -100,15 +57,15 @@ object ScaleStress {
 
     def timed(scale: String, op: String)(f: => (Long, String)): String = {
       if (opFilter.exists(!_.contains(op))) return ""
-      drainListeners()
-      shuffleWrite.set(0)
+      meter.settle()
+      meter.reset()
       val t0 = System.nanoTime()
       val (n, planSig) = f
       val secs = (System.nanoTime() - t0) / 1e9
       Caches.releaseAll()
-      drainListeners()
+      meter.settle()
       val line = s"""{"scale":"$scale","op":"$op","sec":${f"$secs%.2f"},""" +
-        s""""rows":$n,"shuffle_write_mb":${shuffleWrite.get / 1024 / 1024},""" +
+        s""""rows":$n,"shuffle_write_mb":${meter.shuffleWrite.get / 1024 / 1024},""" +
         s""""plan":"$planSig"}"""
       println(line)
       line
@@ -1107,7 +1064,7 @@ object ScaleStress {
       emb1x.select((col("vec_id") + lit(i * embStride)).as("vec_id"),
         concat(slice(col("embedding"), i + 1, 64 - i),
           slice(col("embedding"), 1, i)).as("embedding"))
-    }.reduce(_ unionAll _).repartition(cpus.toInt)
+    }.reduce(_ unionAll _).repartition(cpus)
       .write.mode("overwrite").parquet(embDir)
     val emb10x = spark.read.parquet(embDir)
     def runKmeans(scale: String, emb: DataFrame): Unit =
@@ -1324,7 +1281,7 @@ object ScaleStress {
       ev1x.select((col("event_id") + lit(i * eStride)).as("event_id"),
         (col("user_id") + lit(i * uStride)).as("user_id"),
         col("event_type"), col("value"), col("tus"))
-    }.reduce(_ unionAll _).repartition(cpus.toInt)
+    }.reduce(_ unionAll _).repartition(cpus)
       .write.mode("overwrite").parquet(evDir)
     val ev10x = spark.read.parquet(evDir)
     def runEvents(scale: String, ev: DataFrame): Unit = {

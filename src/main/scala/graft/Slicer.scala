@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import graft.workspace.{Workspace, WorkspaceConfig}
 import graft.materialize.Materialize
 
@@ -28,14 +27,6 @@ import graft.materialize.Materialize
   * stopping at the first, and exits 1 iff errors were found. */
 object Slicer {
 
-  private def sparkSession(): SparkSession = SparkSession.builder()
-    .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-    .config("spark.sql.shuffle.partitions",
-      sys.env.getOrElse("SPARK_SHUFFLE_PARTITIONS", "32"))
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
   def main(args: Array[String]): Unit = args.toList match {
     case "serve" :: config :: rest =>
       rest.headOption.foreach { p =>
@@ -44,7 +35,7 @@ object Slicer {
           sys.exit(2)
         }
       }
-      val spark = sparkSession()
+      val spark = Sessions.serving()
       val (ws, cfg) = WorkspaceConfig.loadWithConfig(spark, config)
       val port = rest.headOption.flatMap(_.toIntOption)
         .getOrElse(WorkspaceConfig.serverPort(cfg))
@@ -70,7 +61,7 @@ object Slicer {
       Thread.currentThread().join() // serve until killed
 
     case "denormalize" :: config :: cube :: target :: rest =>
-      val spark = sparkSession()
+      val spark = Sessions.serving()
       val ws = WorkspaceConfig.load(spark, config)
       println(s"denormalizing cube '$cube' into '$target'")
       Materialize.writeDenormalized(ws.browser(cube), target,
@@ -78,7 +69,7 @@ object Slicer {
       spark.stop()
 
     case "aggregate" :: config :: cube :: target :: drilldown =>
-      val spark = sparkSession()
+      val spark = Sessions.serving()
       val ws = WorkspaceConfig.load(spark, config)
       val dd = if (drilldown.nonEmpty) drilldown
         else ws.cube(cube).dimensions.map(_.name)
@@ -103,7 +94,7 @@ object Slicer {
       spark.stop()
 
     case "extract-dimension" :: config :: cube :: dim :: target :: Nil =>
-      val spark = sparkSession()
+      val spark = Sessions.serving()
       val ws = WorkspaceConfig.load(spark, config)
       println(s"extracting dimension '$dim' of cube '$cube' into '$target'")
       Materialize.extractDimension(ws.browser(cube), dim, target)
@@ -113,7 +104,7 @@ object Slicer {
       val (flags, files) = rest.partition(_.startsWith("--"))
       files match {
         case config :: Nil =>
-          val spark = sparkSession()
+          val spark = Sessions.serving()
           val ws = WorkspaceConfig.load(spark, config)
           listCubes(ws, verbose = flags.contains("--verbose"))
           spark.stop()
@@ -126,7 +117,7 @@ object Slicer {
       val (flags, files) = rest.partition(_.startsWith("--"))
       files match {
         case config :: cubeNames =>
-          val spark = sparkSession()
+          val spark = Sessions.serving()
           val ws = WorkspaceConfig.load(spark, config)
           val errors = testCubes(ws, cubeNames,
             aggregate = flags.contains("--aggregate"))

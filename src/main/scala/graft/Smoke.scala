@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Ad-hoc local smoke runner: runs the flagship entry + every catalog query
   * at a small SF and prints row counts (and optionally plans). Not part of
   * the driver contract. Usage: runMain graft.Smoke [sfDir] [--explain q01] */
@@ -15,27 +13,7 @@ object Smoke {
     val only = args.sliding(2).collectFirst {
       case Array("--only", q) => q
     }
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      // r13: sort writer for small-R no-agg shuffles (see Bench.scala —
-      // bypass-merge writes R files per map task, pathological on this
-      // filesystem; scale-neutral since production R > 200)
-      .config("spark.shuffle.sort.bypassMergeThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_BYPASS_MERGE_THRESHOLD", "1"))
-      // r13: the JVM-wide whole-stage-codegen class cache defaults to 100
-      // entries — a 387-query catalog (and per-round literal variants in
-      // the iterative ops) thrashes it, so executor tasks re-run Janino
-      // per stage (thread dumps showed workers pinned in
-      // UnitCompiler.compile; q359 task time 58→17 s with the raise).
-      // ~10k entries covers the catalog across bench passes; class
-      // metadata cost is ~100-250 MB, fine for any long-lived executor.
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "10000"))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.local(Sessions.cpus)
     spark.sparkContext.setLogLevel("ERROR")
 
     if (only.isEmpty) {

@@ -1,6 +1,5 @@
 package graft.server
 
-import org.apache.spark.sql.SparkSession
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.net.URI
 
@@ -11,10 +10,7 @@ object ServerSmoke {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.filterNot(_.startsWith("--"))
       .getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.Sessions.serving()
     spark.sparkContext.setLogLevel("ERROR")
     val ws = new graft.workspace.Workspace(spark)
       .registerCube(graft.tpch.TpchModel.cube)

@@ -428,26 +428,10 @@ final class SlicerServer(workspace: Workspace, port: Int = 0,
           }
           result0.copy(cells = paged, unpagedCells = Some(persisted))
         }
-      if (fmt == "json_lines") {
-        // streamed cells, one JSON object per line (the facts treatment,
-        // reference JSONLinesGenerator server/utils.py:105-108): no record
-        // limit and nothing driver-buffered — the last collect() on the
-        // aggregate read path. Summary/levels/count are the json format's
-        // envelope; a line stream is just the cell records.
-        import scala.jdk.CollectionConverters._
-        Resp(200, "", "application/x-json-lines",
-          stream = Some(result.cells.toJSON.toLocalIterator.asScala))
-      } else if (fmt == "csv") {
-        val (csv, truncated) = toCsv(result.cells,
-          header = csvHeader(name, result.cells.columns.toSeq, q))
-        Resp(200, csv, "text/csv", truncated,
-          attachment = Some("aggregate.csv"))
-      } else if (fmt == "xlsx") {
-        val (bytes, truncated) =
-          graft.formats.Formats.xlsxBytes(result.cells, limit = 10000)
-        Resp(200, "", XlsxMime, truncated, raw = Some(bytes),
-          attachment = Some("aggregate.xlsx"))
-      } else {
+      // json_lines/csv/xlsx carry only the cell records; summary, levels
+      // and the cell count are the json format's envelope
+      if (fmt != "json") frameResponse(result.cells, q, name, stem = "aggregate")
+      else {
         val summary = result.summary
           .map(df => graft.formats.Formats.toJsonArray(df, 1).stripPrefix("[").stripSuffix("]"))
           .filter(_.nonEmpty).getOrElse("{}")
@@ -614,9 +598,6 @@ final class SlicerServer(workspace: Workspace, port: Int = 0,
         s"""{"from": ${levelRecordsJson(from)}, "to": ${levelRecordsJson(to)}}"""
     }
 
-    /** DataFrame → json array / csv / xlsx response per `format`
-      * (reference `blueprint.py:309-470` — json|csv|xlsx downloads with a
-      * Content-Disposition filename). */
     /** `format` param, validated against the served set (reference
       * `validated_parameter`, blueprint.py:314-317 — unknown → 400, so a
       * typo can never silently fall back to the json path and its
@@ -628,6 +609,9 @@ final class SlicerServer(workspace: Workspace, port: Int = 0,
       fmt
     }
 
+    /** DataFrame → json array / json lines / csv / xlsx response per
+      * `format` (reference `blueprint.py:309-470` — json|csv|xlsx downloads
+      * with a Content-Disposition filename `<stem>.<ext>`). */
     private def frameResponse(df: DataFrame, q: Map[String, String],
         cubeName: String, stem: String = "facts"): Resp = {
       val fmt = validatedFormat(q)
@@ -755,9 +739,6 @@ final class SlicerServer(workspace: Workspace, port: Int = 0,
       s"""{"name": ${jstr(name)}${lbl(c.label)}, "dimensions": $dims, "measures": $measures, "aggregates": $aggs}"""
     }
 
-    /** RFC-4180 CSV: quote any value with a comma, quote, or line break
-      * (embedded newlines would otherwise corrupt the row structure).
-      * Returns the text plus whether the row limit truncated it. */
     /** CSV header cells per the `header` request param (reference
       * `header_type` names|labels|none, blueprint.py:319-372): `names` =
       * column refs, `labels` (the reference default) = model labels where
@@ -780,10 +761,12 @@ final class SlicerServer(workspace: Workspace, port: Int = 0,
           throw new IllegalArgumentException(s"unknown header type '$other'")
       }
 
-    /** Quote-on-the-stringified-value CSV: any cell whose rendering
-      * contains a comma, quote, or line break (arrays/structs render with
-      * commas) is quoted and inner quotes doubled. `header` = Some(cells)
-      * renders a header row, None omits it. */
+    /** RFC-4180 CSV, quoting on the stringified value: any cell whose
+      * rendering contains a comma, quote, or line break (arrays/structs
+      * render with commas; embedded newlines would otherwise corrupt the
+      * row structure) is quoted and inner quotes doubled. `header` =
+      * Some(cells) renders a header row, None omits it. Returns the text
+      * plus whether the row limit truncated it. */
     private def toCsv(df: DataFrame, limit: Int = 10000,
         header: Option[Seq[String]]): (String, Boolean) = {
       val fetched = df.limit(limit + 1).collect()

@@ -10,9 +10,14 @@ import org.apache.spark.sql.types.StructType
   * public `new Column(expr)` constructor; `classic.ExpressionUtils` is the
   * blessed internal path), plus `internalCreateDataFrame` for wrapping an
   * `RDD[InternalRow]` back into a DataFrame (used by iterative algorithms
-  * to truncate Catalyst lineage per round without a checkpoint directory).
+  * to truncate Catalyst lineage per round without a checkpoint directory),
+  * and the `private[spark]` listener-bus drain behind `graft.RunMeter`.
   */
 object GraftSqlBridge {
+  /** Wait until every listener event posted so far has been delivered. */
+  def waitForListeners(sc: org.apache.spark.SparkContext, timeoutMs: Long): Unit =
+    sc.listenerBus.waitUntilEmpty(timeoutMs)
+
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
 

@@ -1,7 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row}
 import graft.model._
 import graft.cells._
 import graft.star.StarSchema
@@ -11,14 +11,7 @@ import graft.browser.Browser
   * test data (FIXTURES.md §2: 16 rows, amounts cycling 1,2,4,8 over years
   * 2010-2013 ⇒ amount_sum == 60, count == 16; plus a tiny star for join /
   * range / split semantics). */
-class BrowserSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class BrowserSpec extends AnyFunSuite with SharedSpark {
 
   import spark.implicits._
 

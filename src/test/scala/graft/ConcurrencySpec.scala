@@ -7,7 +7,6 @@ import java.util.concurrent.{CountDownLatch, Executors, TimeUnit}
 import scala.util.Try
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 
 import graft.ops.{Caches, Dedup}
 import graft.tpch.TpchModel
@@ -22,14 +21,7 @@ import graft.workspace.Workspace
   * (round-2 finding: one request's releaseAll unpersisted another's
   * in-flight band table); nothing previously proved the thread-scoped
   * design under real concurrency. */
-class ConcurrencySpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[8]")
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class ConcurrencySpec extends AnyFunSuite with SharedSpark {
 
   import spark.implicits._
 

@@ -1,7 +1,6 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.nio.file.Files
@@ -10,14 +9,7 @@ import graft.workspace.WorkspaceConfig
 /** Workspace-from-config + server-from-config (reference `slicer serve
   * --config slicer.ini`, `slicer/commands.py:52-67`, config format
   * `examples/hello_world/slicer.ini`). */
-class ConfigSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class ConfigSpec extends AnyFunSuite with SharedSpark {
 
   private val modelJson =
     """{

@@ -1,21 +1,13 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.formats.CrossTable
 
 /** Cross-table presentation formatters (reference `formatters.py:311-391`:
   * CrossTableFormatter JSON shape, HTMLCrossTableFormatter table, text). */
-class CrossTableFormatSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class CrossTableFormatSpec extends AnyFunSuite with SharedSpark {
 
   import spark.implicits._
 

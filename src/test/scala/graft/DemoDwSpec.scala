@@ -1,7 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.model.ModelJson
 import graft.star.StarSchema
@@ -14,14 +14,7 @@ import graft.cells._
   * 2015-01-01) browsed through its own `model.json`
   * (`tests/sql/dw/model.json`) loaded by our JSON loader. A cubes user's
   * model + data should Just Work. */
-class DemoDwSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class DemoDwSpec extends AnyFunSuite with SharedSpark {
 
   import spark.implicits._
 

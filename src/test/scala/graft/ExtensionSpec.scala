@@ -11,14 +11,7 @@ import graft.star.StarSchema
 /** ServiceLoader extension discovery (reference `ext.py:24-75` pkg_resources
   * entry points): a provider on the classpath contributes aggregate
   * functions that dispatch through the normal model/browser path. */
-class ExtensionSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class ExtensionSpec extends AnyFunSuite with SharedSpark {
 
   import spark.implicits._
 

@@ -1,7 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import graft.cells.{Cell, PointCut}
 import graft.federation.SlicerStore
 import graft.server.SlicerServer
@@ -11,14 +11,7 @@ import graft.workspace.Workspace
   * live in-process slicer server and must see exactly what a local browse
   * sees (reference `SlicerStore`/`SlicerBrowser`,
   * `cubes/server/store.py`, `cubes/server/browser.py`). */
-class FederationSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class FederationSpec extends AnyFunSuite with SharedSpark {
 
   private val modelJson =
     """{

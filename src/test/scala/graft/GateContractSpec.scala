@@ -1,7 +1,6 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** The Verify gate's export contract: no gate query may emit
@@ -11,14 +10,7 @@ import org.apache.spark.sql.functions._
   * though a handful of queries run small construction-time actions
   * (relative cutoffs from count(), literal vocab/centroid collection),
   * so it is cheap, not free. */
-class GateContractSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class GateContractSpec extends AnyFunSuite with SharedSpark {
 
   import spark.implicits._
 

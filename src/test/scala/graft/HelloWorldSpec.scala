@@ -1,31 +1,23 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.cells.{Cell, PointCut}
 import graft.workspace.Workspace
 
-/** The reference's own hello_world tutorial, end-to-end through graft:
-  * its shipped `model.json` (bare-column mappings, expression measure and
-  * aggregate) over its shipped `data.csv`, running the exact queries of
-  * `examples/hello_world/aggregate.py` — summary, drilldown by item,
-  * point-cut slice + drilldown. Golden values are the tutorial's own
-  * published output (total 1,116,860), independently recomputed from the
-  * CSV. This is the "a reference user could switch" proof at the whole-
-  * example grain, not the per-operator grain. */
-class HelloWorldSpec extends AnyFunSuite {
+/** A hello_world tutorial end-to-end through graft: its `model.json`
+  * (bare-column mappings, expression measure, expression aggregate) over
+  * its `data.csv` (src/test/resources/models/hello_world), running the
+  * tutorial's queries — summary, drilldown by item, point-cut slice +
+  * drilldown. Golden values were computed from the CSV with DuckDB, e.g.
+  * `SELECT "Category", count(*), sum("Amount"), max("Amount") -
+  * min("Amount") FROM read_csv('data.csv', header=true) GROUP BY 1`. */
+class HelloWorldSpec extends AnyFunSuite with SharedSpark {
 
-  private val exampleDir = "/root/reference/examples/hello_world"
+  private val exampleDir = java.nio.file.Paths.get(
+    getClass.getResource("/models/hello_world").toURI).toString
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  /** data.csv loaded the way the reference's prepare_data.py does it:
+  /** data.csv loaded the way the tutorial's prepare_data step does it:
     * columns are renamed POSITIONALLY onto the model's physical names. */
   private lazy val fact = {
     val raw = spark.read.option("header", "true").option("inferSchema", "true")
@@ -47,11 +39,12 @@ class HelloWorldSpec extends AnyFunSuite {
   private def num(r: org.apache.spark.sql.Row, c: String): Long =
     r.getAs[Number](c).longValue()
 
-  test("summary: record count, amount sum, expression-aggregate double sum") {
+  test("summary: record count, amount sum, expression measure and aggregate") {
     val row = browser.aggregate().summary.get.collect().head
-    assert(num(row, "record_count") == 62L)
-    assert(num(row, "amount_sum") == 1116860L)
-    assert(num(row, "double_amount_sum") == 2233720L)
+    assert(num(row, "record_count") == 26L)
+    assert(num(row, "amount_sum") == 494746L)
+    assert(num(row, "double_amount_sum") == 989492L)
+    assert(num(row, "amount_range") == 86310L)
   }
 
   test("drilldown by item: the tutorial's category table") {
@@ -61,11 +54,11 @@ class HelloWorldSpec extends AnyFunSuite {
       r.getAs[String]("item.category"),
       r.getAs[String]("item.category_label"),
       num(r, "record_count"), num(r, "amount_sum"),
-      num(r, "double_amount_sum")))
+      num(r, "double_amount_sum"), num(r, "amount_range")))
     assert(got.toSeq == Seq(
-      ("a", "Assets", 32L, 558430L, 1116860L),
-      ("e", "Equity", 8L, 77592L, 155184L),
-      ("l", "Liabilities", 22L, 480838L, 961676L)))
+      ("a", "Assets", 12L, 256534L, 513068L, 86310L),
+      ("e", "Equity", 6L, 112771L, 225542L, 40209L),
+      ("l", "Liabilities", 8L, 125441L, 250882L, 23500L)))
   }
 
   test("slice Category = Equity, drill to subcategory") {
@@ -77,9 +70,8 @@ class HelloWorldSpec extends AnyFunSuite {
       r.getAs[String]("item.subcategory_label"),
       num(r, "record_count"), num(r, "amount_sum")))
     assert(got.toSeq == Seq(
-      ("cs", "Capital Stock", 2L, 22983L),
-      ("da", "Deferred Amounts", 2L, 672L),
-      ("oe", "Other", 2L, -4726L),
-      ("re", "Retained Earnings", 2L, 58663L)))
+      ("cs", "Capital Stock", 2L, 50000L),
+      ("oe", "Other", 2L, -5421L),
+      ("re", "Retained Earnings", 2L, 68192L)))
   }
 }

@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import graft.model._
 
-class ModelJsonSpec extends AnyFunSuite {
+class ModelJsonSpec extends AnyFunSuite with SharedSpark {
 
   private val json =
     """{
@@ -35,6 +35,12 @@ class ModelJsonSpec extends AnyFunSuite {
       |}""".stripMargin
 
   lazy val cube: Cube = ModelJson.loadString(json).head
+
+  /** A model fixture under src/test/resources/models. */
+  private def fixture(rel: String): String =
+    java.nio.file.Paths.get(getClass.getResource(s"/models/$rel").toURI).toString
+  private def fixtureText(rel: String): String =
+    new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(fixture(rel))), "UTF-8")
 
   test("cube basics + key + fact table") {
     assert(cube.name == "sales")
@@ -197,8 +203,6 @@ class ModelJsonSpec extends AnyFunSuite {
   }
 
   test("localization: Workspace.cube(name, locale) + unknown locale no-op") {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[2]").config("spark.ui.enabled", "false").getOrCreate()
     val ws = new graft.workspace.Workspace(spark)
       .registerCube(cube)
       .importTranslations(Map("de" -> translation))
@@ -397,13 +401,10 @@ class ModelJsonSpec extends AnyFunSuite {
           issues.map(_.render).mkString("; "))
     }
 
-    // and the reference's shipped models stay clean under the stricter
-    // sweep (the allowlists must match the schemas, not under-approximate)
-    Seq("/root/reference/doc/files/tutorial_model.json",
-      "/root/reference/examples/hello_world/model.json").foreach { p =>
-      val text = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(p)), "UTF-8")
-      assert(!ModelValidator.validateString(text).exists(_.severity == "error"), p)
+    // and well-formed models stay clean under the stricter sweep (the
+    // allowlists must match the schemas, not under-approximate)
+    Seq("tutorial_model.json", "hello_world/model.json").foreach { p =>
+      assert(!ModelValidator.validateString(fixtureText(p)).exists(_.severity == "error"), p)
     }
   }
 
@@ -447,36 +448,35 @@ class ModelJsonSpec extends AnyFunSuite {
       i.severity == "error" && i.message.contains("unknown level 'zz'")))
   }
 
-  test("reference doc models load and validate clean (tutorial + hierarchy recipe + date dim)") {
-    // the shipped standalone date dimension parses as a dimension object
-    val dateText = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get("/root/reference/examples/date/dim_date.json")), "UTF-8")
+  test("doc models load and validate clean (tutorial + hierarchy recipe + date dim)") {
+    // a standalone date dimension file parses as a dimension object
     val dateDim = ModelJson.parseDimension(
-      org.json4s.jackson.JsonMethods.parse(dateText)
+      org.json4s.jackson.JsonMethods.parse(fixtureText("dim_date.json"))
         .asInstanceOf[org.json4s.JObject])
     assert(dateDim.levels.map(_.name) ==
       Seq("year", "quarter", "month", "day", "weekday"))
-    assert(dateDim.allHierarchies.map(_.name).contains("ymd"))
+    assert(dateDim.allHierarchies.map(_.name) == Seq("ymd", "yqmd", "yw"))
+    assert(dateDim.hierarchy(None).levelNames == Seq("year", "month", "day"))
 
-    Seq("/root/reference/doc/files/tutorial_model.json",
-      "/root/reference/doc/files/hierarchy_recipe_model.json").foreach { path =>
-      val text = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(path)), "UTF-8")
+    Seq("tutorial_model.json", "hierarchy_recipe_model.json").foreach { path =>
+      val text = fixtureText(path)
       val cubes = ModelJson.loadString(text)
       assert(cubes.nonEmpty, path)
       val issues = ModelValidator.validateString(text)
       assert(!issues.exists(_.severity == "error"),
         s"$path: ${issues.filter(_.severity == "error").map(_.render).mkString("; ")}")
     }
+    // the hierarchy recipe: one dimension, several drill paths
+    val geo = ModelJson.loadString(fixtureText("hierarchy_recipe_model.json"))
+      .head.dimension("geography")
+    assert(geo.allHierarchies.map(_.name) == Seq("by_region", "by_continent"))
+    assert(geo.hierarchy(Some("by_continent")).levelNames == Seq("continent", "country"))
   }
 
-  test("reference hello_world model loads and validates clean (authentic fixture)") {
-    // the reference's own shipped example (examples/hello_world/model.json):
+  test("hello_world model loads and validates clean") {
     // bare-column mappings (table defaults to the fact), an expression
     // measure, an expression aggregate, a flat time dimension
-    val path = "/root/reference/examples/hello_world/model.json"
-    val text = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(path)), "UTF-8")
+    val text = fixtureText("hello_world/model.json")
     val cubes = ModelJson.loadString(text)
     assert(cubes.map(_.name) == Seq("irbd_balance"))
     val c = cubes.head
@@ -485,20 +485,21 @@ class ModelJsonSpec extends AnyFunSuite {
     assert(c.dimension("item").levels.map(_.name) ==
       Seq("category", "subcategory", "line_item"))
     assert(c.measures.map(_.name) == Seq("amount", "double_amount"))
+    assert(c.measures(1).expression.contains("amount * 2"))
     assert(c.aggregates.map(_.name) ==
-      Seq("amount_sum", "double_amount_sum", "record_count"))
+      Seq("amount_sum", "double_amount_sum", "amount_range", "record_count"))
+    assert(c.aggregates(2).expression.contains("max(amount) - min(amount)"))
     val issues = ModelValidator.validateString(text)
     assert(!issues.exists(_.severity == "error"),
       issues.filter(_.severity == "error").map(_.render).mkString("; "))
   }
 
-  test("reference webshop bundle: broken member files are findings, valid parts still validate") {
-    // the reference ships this bundle with two genuinely malformed JSON
-    // members (cube_webvisits.json, dim_date_base.json) — validate must
-    // report BOTH and still reason about the nine parsable files
+  test("webshop bundle: broken member files are findings, valid parts still validate") {
+    // the bundle holds two malformed JSON members (cube_webvisits.json,
+    // dim_date_base.json) — validate must report BOTH and still reason
+    // about the nine parsable files
     val sink = new StringBuilder
-    val code = Slicer.validateModel(
-      "/root/reference/examples/webshop.cubesmodel",
+    val code = Slicer.validateModel(fixture("webshop.cubesmodel"),
       out = s => sink.append(s).append('\n'))
     val out = sink.toString
     assert(code == 1)
@@ -509,13 +510,13 @@ class ModelJsonSpec extends AnyFunSuite {
     // CASCADE: date_sale/date_visit template the (malformed, skipped)
     // date_base, and the validator reports that dangling template rather
     // than silently losing the dimensions
-    val (metadata, readIssues) = ModelBundle.readLenient(
-      "/root/reference/examples/webshop.cubesmodel")
+    val (metadata, readIssues) = ModelBundle.readLenient(fixture("webshop.cubesmodel"))
     assert(readIssues.size == 2)
     val issues = ModelValidator.validate(metadata)
-    assert(issues.exists(i => i.severity == "error" &&
-      i.obj.contains("date_sale") &&
-      i.message.contains("unknown dimension template 'date_base'")))
+    Seq("date_sale", "date_visit").foreach { d =>
+      assert(issues.exists(i => i.severity == "error" && i.obj.contains(d) &&
+        i.message.contains("unknown dimension template 'date_base'")), d)
+    }
     // the nine parsable members are all present in the assembled metadata
     import org.json4s._
     val dimNames = (metadata \ "dimensions") match {
@@ -523,7 +524,14 @@ class ModelJsonSpec extends AnyFunSuite {
         o.obj.collectFirst { case ("name", JString(s)) => s } }.flatten
       case _ => Nil
     }
-    assert(dimNames.contains("product") && !dimNames.contains("date_base"))
+    assert(dimNames.toSet == Set("date_sale", "date_visit", "product",
+      "customer", "country", "browser", "newsletter"))
+    val cubeNames = (metadata \ "cubes") match {
+      case JArray(cs) => cs.collect { case o: JObject =>
+        o.obj.collectFirst { case ("name", JString(s)) => s } }.flatten
+      case _ => Nil
+    }
+    assert(cubeNames == Seq("sales"))
   }
 
   test("lenient bundle read reports duplicate-name members instead of silently dropping them") {

@@ -1,18 +1,12 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.ops.{Clustering, Dedup, Similarity, TextAnalysis, Multimodal}
 import graft.functions.{NativeHashes, HashImpls}
 
-class OpsSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class OpsSpec extends AnyFunSuite with SharedSpark {
 
   import spark.implicits._
 

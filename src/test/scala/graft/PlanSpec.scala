@@ -1,21 +1,13 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import graft.cells._
 import graft.tpch.TpchModel
 
 /** Plan-shape regression tests: the scale properties (pushdown, pruning,
   * broadcast) asserted on the actual physical plans, so a refactor that
   * silently breaks them fails CI — at 100 TB these ARE correctness. */
-class PlanSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class PlanSpec extends AnyFunSuite with SharedSpark {
 
   private def b = TpchModel.browser(spark, "/root/testdata/sf0.001")
 

@@ -1,7 +1,6 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.net.URI
 import graft.workspace.Workspace
@@ -10,14 +9,7 @@ import graft.tpch.TpchModel
 
 /** Drives the slicer HTTP server over a real socket with a real Spark
   * session — the reference's server test tier (`tests/test_server.py`). */
-class ServerSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class ServerSpec extends AnyFunSuite with SharedSpark {
 
   lazy val (server, port) = {
     val ws = new Workspace(spark)

@@ -1,7 +1,6 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.streaming.Streaming
 import graft.browser.ReportItem
@@ -12,17 +11,12 @@ import graft.formats.Formats
 /** Streaming + materialize + report coverage: drive a real streaming query
   * from the events parquet through a memory sink, and exercise the
   * materialization/report/format paths end-to-end. */
-class StreamingSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class StreamingSpec extends AnyFunSuite with SharedSpark {
 
   import spark.implicits._
+  // read parquet TIMESTAMP(NANOS) columns as int64 nanos, the form
+  // eventsTable rebuilds timestamps from
+  spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
 
   private def eventsDf =
     graft.tpch.EventsModel.eventsTable(spark, "/root/testdata/sf0.001")
