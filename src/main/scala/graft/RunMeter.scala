@@ -6,19 +6,27 @@ import java.util.concurrent.atomic.AtomicLong
 import org.apache.spark.SparkContext
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.GraftSqlBridge
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 
-/** Execution counters for a measured run: jobs, stages, tasks, summed
+/** Execution counters for a measured run: SQL queries (top-level
+  * executions, one per Dataset action), jobs, stages, tasks, summed
   * task run and GC time, shuffle bytes read and written, and run time per
   * stage name. Wall ≫ taskMs/cores means scheduling or planning overhead
   * dominates; taskMs ≈ wall means one single-threaded stage is the
   * bottleneck. Listener events arrive asynchronously: call [[settle]]
   * after the measured action, before reading. */
 final class RunMeter private (sc: SparkContext) extends SparkListener {
-  val jobs, stages, tasks, taskMs, gcMs, shuffleRead, shuffleWrite = new AtomicLong
+  val queries, jobs, stages, tasks, taskMs, gcMs, shuffleRead, shuffleWrite = new AtomicLong
   /** Executor run time (ms) summed per stage name. */
   val stageMs = new ConcurrentHashMap[String, Long]
 
   override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+
+  override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+    case s: SparkListenerSQLExecutionStart if s.rootExecutionId.forall(_ == s.executionId) =>
+      queries.incrementAndGet()
+    case _ =>
+  }
 
   override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
     stages.incrementAndGet()
@@ -44,7 +52,7 @@ final class RunMeter private (sc: SparkContext) extends SparkListener {
   def settle(): Unit = GraftSqlBridge.waitForListeners(sc, 30000L)
 
   def reset(): Unit = {
-    Seq(jobs, stages, tasks, taskMs, gcMs, shuffleRead, shuffleWrite).foreach(_.set(0))
+    Seq(queries, jobs, stages, tasks, taskMs, gcMs, shuffleRead, shuffleWrite).foreach(_.set(0))
     stageMs.clear()
   }
 

@@ -9,6 +9,7 @@ import graft.cells._
 import graft.star.StarSchema
 import graft.functions.{AggFunctions, WindowCalcs}
 import graft.exprs.ExprLang
+import graft.formats.Formats
 
 /** Result of an aggregate browse (reference `AggregationResult`,
   * `query/browser.py:676-862`). Everything stays lazy DataFrames; actions
@@ -24,13 +25,15 @@ final case class AggregationResult(
     /** The effective (restricted) cell browsed. */
     cell: Cell = Cell.empty,
     hasSplit: Boolean = false,
-    /** The drilldown frame BEFORE pagination (when pagination applied). */
-    unpagedCells: Option[DataFrame] = None
-) {
-  /** Total drilldown cell count before pagination (the reference's third
-    * query, `sql/browser.py:436-439`). */
-  def totalCellCount: Long = unpagedCells.getOrElse(cells).count()
-}
+    /** Builds the json response's rows in response order, unpaged: the
+      * summary row first when the plan computes it alongside the cells
+      * (the fused path, on a non-empty cell), then every drilldown cell.
+      * Columns [[Browser.IsSummary]] and [[Browser.RowJson]] (the row as
+      * `Dataset.toJSON` writes it). A function, so callers that only read
+      * `cells` or `summary` do not pay for analyzing it. None when no
+      * local browser built the result. */
+    rows: Option[() => DataFrame] = None
+)
 
 /** One level's detail record (reference `_path_details` item,
   * `query/browser.py:589-627`): every level attribute's value plus the
@@ -269,16 +272,19 @@ final class Browser(
       attributes = ddRefs,
       cell = effCell,
       hasSplit = split.isDefined,
-      unpagedCells = if (page.isDefined || pageSize.isDefined) Some(unpaged) else None)
+      rows = Some(() => unpaged.select(lit(false).as(Browser.IsSummary),
+        Formats.jsonObject(unpaged.columns.toSeq).as(Browser.RowJson))))
   }
 
   /** One-pass summary + drilldown: GROUPING SETS ((dd...), ()) computes
     * both in a single shuffle over the fact (the reference issues two SQL
     * statements, `sql/browser.py:378-383`; SURVEY §7.4.3 calls for the
-    * fused plan). The grouped result is persisted — it is tiny relative to
-    * the input — so `cells` and `summary` are two cheap reads of one
-    * computation instead of two scans of the fact. Window calculators /
-    * pagination are not supported here; use [[aggregate]] for those. */
+    * fused plan). `rows` answers both in one ordered query, the summary
+    * row first; `cells` is the lazy cell slice of the same plan. `summary`
+    * is the plain global aggregate, as in [[aggregate]]: on an empty cell
+    * the grouping sets yield no summary row, while the global aggregate
+    * still yields one (a count of 0). Window calculators and split are
+    * not supported here; use [[aggregate]] for those. */
   def aggregateFused(
       cell: Cell = Cell.empty,
       drilldown: Seq[String],
@@ -292,6 +298,7 @@ final class Browser(
       .filterNot(_.function.exists(WindowCalcs.isWindowFunction))
     require(aggs.nonEmpty, "aggregateFused needs at least one builtin aggregate")
     val dd = resolveDrilldown(effCell, drilldown)
+    require(dd.nonEmpty, "aggregateFused needs a drilldown")
     // same refusal semantics as aggregate(): the server routes eligible
     // requests here, so the fused path must not silently return wrong
     // nonadditive sums or unpaginated high-cardinality drilldowns
@@ -305,28 +312,30 @@ final class Browser(
     val gid = ddRefs.foldLeft(lit(0))((acc, r) => acc * 2 + grouping(bcol(r)))
       .cast("long").as("__gid__")
     val aggCols = aggs.map(builtinAggColumn(filtered, _)) :+ gid
-    // persisted so cells + summary share the one grouping-sets pass;
-    // registered with Caches so the consumer's releaseAll frees it (a
-    // long-lived server must not pin one table per call)
-    val grouped = graft.ops.Caches.registerDf(filtered
+    val grouped = filtered
       .groupingSets(Seq(ddRefs.map(bcol), Seq.empty), ddRefs.map(bcol): _*)
       .agg(aggCols.head, aggCols.tail: _*)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
 
-    val fullMask = (1L << ddRefs.size) - 1
+    val isCell = col("__gid__") === 0
+    val isSummary = col("__gid__") === ((1L << ddRefs.size) - 1)
+    val cellCols = grouped.columns.toSeq.filterNot(_ == "__gid__")
+    val summaryCols = cellCols.filterNot(ddRefs.toSet)
     val sortCols = orderColumns(dd, order, hasSplit = false)
-    val cells0 = grouped.filter(col("__gid__") === 0).drop("__gid__")
+    val rows = () => grouped.filter(isCell || isSummary)
+      .orderBy(isSummary.desc +: sortCols: _*)
+      .select(isSummary.as(Browser.IsSummary),
+        when(isSummary, Formats.jsonObject(summaryCols))
+          .otherwise(Formats.jsonObject(cellCols)).as(Browser.RowJson))
+    val cells0 = grouped.filter(isCell).drop("__gid__")
     val sorted = if (sortCols.nonEmpty) cells0.orderBy(sortCols: _*) else cells0
     AggregationResult(
       paginate(sorted, page, pageSize),
-      Some(grouped.filter(col("__gid__") === fullMask)
-        .drop("__gid__").drop(ddRefs: _*)),
+      Some(groupedAgg(filtered, Nil, aggs)),
       dd.map(d => d.dim.name -> d.levelNames).toMap,
       aggregates = aggs.map(_.name),
       attributes = ddRefs,
       cell = effCell,
-      unpagedCells =
-        if (page.isDefined || pageSize.isDefined) Some(sorted) else None)
+      rows = Some(rows))
   }
 
   /** Cuboid aggregation (reference enumerates dimension/level combinations
@@ -598,7 +607,7 @@ final class Browser(
 
   private def paginate(df: DataFrame, page: Option[Int], pageSize: Option[Int]): DataFrame =
     (page, pageSize) match {
-      case (Some(p), Some(n)) => df.offset(p * n).limit(n)
+      case (Some(p), Some(n)) => df.offset(Math.multiplyExact(p, n)).limit(n)
       case (None, Some(n))    => df.limit(n)
       case _                  => df
     }
@@ -927,6 +936,11 @@ final class Browser(
 }
 
 object Browser {
+  /** Columns of [[AggregationResult.rows]]: the summary flag and the
+    * row's JSON object. */
+  val IsSummary = "__summary__"
+  val RowJson = "__json__"
+
   /** Functions whose partial aggregate carries a per-group OBJECT buffer
     * (quantile summaries, HLL sketches) rather than a few codegen'd
     * scalars. */

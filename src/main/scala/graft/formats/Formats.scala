@@ -1,6 +1,7 @@
 package graft.formats
 
-import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.spark.sql.{Column, DataFrame, SaveMode}
+import org.apache.spark.sql.functions.{col, struct, to_json}
 
 /** Result output formats (reference `cubes/formatters.py:58-150`): CSV and
   * JSON-lines as distributed writers (each scales with the result), JSON
@@ -29,6 +30,12 @@ object Formats {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
+
+  /** The named columns of a row as one JSON object, with the bytes
+    * `Dataset.toJSON` writes for that row (both use the session's JSON
+    * options): rows rendered inside a query, ahead of its limit. */
+  def jsonObject(columns: Seq[String]): Column =
+    to_json(struct(columns.map(c => col(s"`$c`")): _*))
 
   /** Driver-side JSON array string for small results (server responses). */
   def toJsonArray(df: DataFrame, limit: Int = 10000): String =

@@ -4,8 +4,9 @@ import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.net.URI
 
 /** Dev runner: boot the slicer on the testdata workspace, hit a few
-  * endpoints, print the responses. `runMain graft.server.ServerSmoke
-  * [sfDir] [--serve]` — with `--serve` it stays up for manual curls. */
+  * endpoints, print each response and the Spark work it cost (SQL
+  * queries, jobs, tasks). `runMain graft.server.ServerSmoke [sfDir]
+  * [--serve]` — with `--serve` it stays up for manual curls. */
 object ServerSmoke {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.filterNot(_.startsWith("--"))
@@ -23,14 +24,21 @@ object ServerSmoke {
       Thread.currentThread().join()
     } else {
       val client = HttpClient.newHttpClient()
+      val meter = graft.RunMeter.attach(spark.sparkContext)
       def get(p: String): Unit = {
+        meter.settle()
+        meter.reset()
         val r = client.send(
           HttpRequest.newBuilder(URI.create(s"http://127.0.0.1:$port$p")).GET().build(),
           HttpResponse.BodyHandlers.ofString())
+        meter.settle()
         println(s"[server] GET $p -> ${r.statusCode()} ${r.body().take(300)}")
+        println(s"[server]   queries=${meter.queries.get} jobs=${meter.jobs.get} " +
+          s"tasks=${meter.tasks.get}")
       }
       get("/cubes")
       get("/cube/sales/aggregate?cut=customer:ASIA&drilldown=returnflag&aggregates=quantity_sum%7Cfact_count")
+      get("/cube/sales/aggregate?drilldown=returnflag")
       get("/cube/sales/members/customer?depth=1")
       get("/cube/sales/aggregate?drilldown=returnflag&aggregates=fact_count&format=csv")
       server.stop()

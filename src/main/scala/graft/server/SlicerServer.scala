@@ -7,7 +7,7 @@ import org.apache.spark.sql.DataFrame
 import org.json4s._
 import org.json4s.jackson.JsonMethods
 import graft.workspace.Workspace
-import graft.browser.{ReportItem, TimeCuts}
+import graft.browser.{AggregationResult, Browser, ReportItem, TimeCuts}
 import graft.cells.{Cell, CutParser}
 
 /** The "slicer" HTTP server (reference `cubes/server/blueprint.py`):
@@ -31,10 +31,7 @@ final class SlicerServer(workspace: Workspace, port: Int = 0,
     /** Bind address; loopback by default, `[server] host` in slicer.ini. */
     host: String = "127.0.0.1",
     /** Request-handler threads. Spark's scheduler is thread-safe and FAIR
-      * scheduling interleaves jobs, so concurrent slices genuinely overlap;
-      * the per-request persist registry ([[graft.ops.Caches]]) is
-      * thread-scoped, which a pool of handler threads matches exactly
-      * (one request per thread at a time, release in the finally). */
+      * scheduling interleaves jobs, so concurrent slices genuinely overlap. */
     threads: Int = 8,
     /** Server "about" block served by `/` and `/info` (reference
       * `[workspace] info` keys, `workspace.py:27-38` — name, label,
@@ -124,6 +121,10 @@ final class SlicerServer(workspace: Workspace, port: Int = 0,
         * .py:105-108`). Single-use; never cached. */
       stream: Option[Iterator[String]] = None)
 
+  /** Rows in one json, csv or xlsx response (`json_record_limit` in
+    * `/info`); more set `X-Graft-Truncated`. */
+  private val RecordLimit = 10000
+
   private val XlsxMime =
     "application/vnd.openxmlformats-officedocument.spreadsheetml.sheet"
 
@@ -178,12 +179,7 @@ final class SlicerServer(workspace: Workspace, port: Int = 0,
           respond(ex, Resp(404, s"""{"error": ${jstr(e.getMessage)}}""", "application/json"))
         case e: Throwable =>
           respond(ex, Resp(500, s"""{"error": ${jstr(String.valueOf(e))}}""", "application/json"))
-      } finally {
-        // free operator-internal persists accumulated by this request —
-        // a long-lived server must not grow one cached table per call
-        graft.ops.Caches.releaseAll()
-        ex.close()
-      }
+      } finally ex.close()
 
     /** Identity: `?identity=` / `?api_key=` query param or
       * `Authorization: Bearer <id>` header (reference http_get/parameter
@@ -204,7 +200,7 @@ final class SlicerServer(workspace: Workspace, port: Int = 0,
       val authType = if (workspace.authorizer.isDefined) "identity" else "none"
       val authIdentity = id.map(i => s""", "identity": ${jstr(i)}""").getOrElse("")
       (about ++ Seq(
-        s""""json_record_limit": 10000""",
+        s""""json_record_limit": $RecordLimit""",
         s""""cubes_version": "0.1.0"""",
         s""""timezone": ${jstr(tz)}""",
         s""""first_weekday": 0""",
@@ -354,7 +350,8 @@ final class SlicerServer(workspace: Workspace, port: Int = 0,
       case List("cube", name, "facts") =>
         logged("facts", name, q, id, attribField = "fields") {
           val b = workspace.browserFor(id, name)
-          val df = b.facts(cell(name, q), fields(q), order(q), page(q), pageSize(q))
+          val (page, pageSize) = paging(q)
+          val df = b.facts(cell(name, q), fields(q), order(q), page, pageSize)
           frameResponse(df, q, cubeName = name)
         }
       case List("cube", name, "fact", key) =>
@@ -363,9 +360,10 @@ final class SlicerServer(workspace: Workspace, port: Int = 0,
       case List("cube", name, "members", dim) =>
         logged("members", name, q, id) {
           val b = workspace.browserFor(id, name)
+          val (page, pageSize) = paging(q)
           frameResponse(b.members(cell(name, q), dim,
             q.get("depth").map(_.toInt), q.get("hierarchy"), q.get("level"),
-            page(q), pageSize(q)), q, cubeName = name, stem = "members")
+            page, pageSize), q, cubeName = name, stem = "members")
         }
       case List("cube", name, "cell") =>
         val b = workspace.browserFor(id, name)
@@ -390,8 +388,9 @@ final class SlicerServer(workspace: Workspace, port: Int = 0,
       val aggregates = listParam(q, "aggregates")
       val split = q.get("split").map(s => TimeCuts.parseCell(b.cube, s))
       val reqCell = cell(name, q) // parsed once: browse + response "cell"
+      val (page, pageSize) = paging(q)
       // the fused (one grouping-sets pass) plan answers summary + cells +
-      // count from a single scan — eligible whenever there is a plain
+      // count in one query — eligible whenever there is a plain
       // builtin-aggregate drilldown (no split, no window calculators)
       val resolvedAggs = aggregates.map(b.cube.aggregate)
       val fusible = drilldown.nonEmpty && split.isEmpty && aggregates.nonEmpty &&
@@ -401,42 +400,18 @@ final class SlicerServer(workspace: Workspace, port: Int = 0,
         // path (see Browser.groupedAgg) — fused grouping-sets would hit the
         // per-distinct-value sketch-buffer blowup
         !graft.browser.Browser.mixesDistinctAndSketch(resolvedAggs)
-      val result0 =
-        if (fusible)
-          b.aggregateFused(reqCell, drilldown, aggregates, order(q),
-            page(q), pageSize(q))
-        else
-          b.aggregate(reqCell, drilldown, aggregates, split,
-            order(q), page(q), pageSize(q))
-      // the default total_cell_count must not re-run the aggregation as a
-      // second job: on the non-fused path persist the (small, already
-      // aggregated) unpaged frame for the request — cells render and the
-      // count both read it; Caches.releaseAll frees it after the response
-      val fmt = validatedFormat(q)
-      val wantCount = !q.get("include_cell_count").contains("false") &&
-        fmt == "json"
       val result =
-        if (fusible || !wantCount) result0
-        else {
-          val persisted = graft.ops.Caches.registerDf(
-            result0.unpagedCells.getOrElse(result0.cells)
-              .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-          val paged = (page(q), pageSize(q)) match {
-            case (Some(p), Some(n)) => persisted.offset(p * n).limit(n)
-            case (None, Some(n))    => persisted.limit(n)
-            case _                  => persisted
-          }
-          result0.copy(cells = paged, unpagedCells = Some(persisted))
-        }
+        if (fusible)
+          b.aggregateFused(reqCell, drilldown, aggregates, order(q), page, pageSize)
+        else
+          b.aggregate(reqCell, drilldown, aggregates, split, order(q), page, pageSize)
       // json_lines/csv/xlsx carry only the cell records; summary, levels
       // and the cell count are the json format's envelope
-      if (fmt != "json") frameResponse(result.cells, q, name, stem = "aggregate")
+      if (validatedFormat(q) != "json") frameResponse(result.cells, q, name, stem = "aggregate")
       else {
-        val summary = result.summary
-          .map(df => graft.formats.Formats.toJsonArray(df, 1).stripPrefix("[").stripSuffix("]"))
-          .filter(_.nonEmpty).getOrElse("{}")
-        val (cellsJson, truncated) =
-          graft.formats.Formats.toJsonArrayTruncated(result.cells)
+        val withCount = !q.get("include_cell_count").contains("false")
+        val (summary, cellsJson, truncated, count) =
+          aggregateJson(result, page, pageSize, withCount)
         val levels = result.levels.map { case (d, ls) =>
           s"${jstr(d)}: ${ls.map(jstr).mkString("[", ",", "]")}"
         }.mkString("{", ",", "}")
@@ -447,15 +422,50 @@ final class SlicerServer(workspace: Workspace, port: Int = 0,
         val aggsJson = result.aggregates.map(jstr).mkString("[", ",", "]")
         val attrsJson = result.attributes.map(jstr).mkString("[", ",", "]")
         val cellJson = reqCell.cuts.map(cutJson).mkString("[", ",", "]")
-        val countJson =
-          if (q.get("include_cell_count").contains("false")) ""
-          else s""", "total_cell_count": ${result.totalCellCount}"""
+        val countJson = count.map(n => s""", "total_cell_count": $n""").getOrElse("")
         Resp(200,
           s"""{"summary": $summary, "cells": $cellsJson, "levels": $levels, """ +
             s""""aggregates": $aggsJson, "attributes": $attrsJson, """ +
             s""""cell": $cellJson, "has_split": ${result.hasSplit}$countJson}""",
           "application/json", truncated)
       }
+    }
+
+    /** The json envelope's summary object, cell page, truncation flag and
+      * (when `withCount`) total cell count, from ONE ordered fetch of
+      * `result.rows` that stops at the page's end or after 10,001 cells,
+      * whichever is later. A fetch that comes back short holds every
+      * cell, so it gives the count too; only a drilldown with more cells
+      * than that counts them in a second query. When the fetch holds no
+      * summary row (a non-fused plan, or an empty cell), `result.summary`
+      * is its own query. */
+    private def aggregateJson(result: AggregationResult, page: Option[Int],
+        pageSize: Option[Int], withCount: Boolean)
+        : (String, String, Boolean, Option[Long]) = {
+      val rows = result.rows.getOrElse(throw new IllegalStateException(
+        "aggregate result has no response rows"))()
+      val offset = (page, pageSize) match {
+        case (Some(p), Some(n)) => p * n // paging() keeps this in Int range
+        case _                  => 0
+      }
+      val pageRows = pageSize.fold(RecordLimit + 1)(math.min(_, RecordLimit + 1))
+      // + 1: the summary row
+      val limit = math.min(math.max(offset.toLong + pageRows, RecordLimit + 1L) + 1,
+        Int.MaxValue.toLong).toInt
+      val fetched = rows.limit(limit).collect()
+      val (summaries, cells) = fetched.partition(_.getBoolean(0))
+      val summaryJson = summaries.headOption.map(_.getString(1)).orElse(
+        result.summary.flatMap { df =>
+          df.select(graft.formats.Formats.jsonObject(df.columns.toSeq))
+            .head(1).headOption.map(_.getString(0))
+        })
+      val onPage = cells.iterator.drop(offset).take(pageRows).map(_.getString(1)).toSeq
+      val count =
+        if (!withCount) None
+        else if (fetched.length < limit) Some(cells.length.toLong)
+        else Some(rows.filter(!org.apache.spark.sql.functions.col(Browser.IsSummary)).count())
+      (summaryJson.getOrElse("{}"), onPage.take(RecordLimit).mkString("[", ",", "]"),
+        onPage.length > RecordLimit, count)
     }
 
     /** One cut from its JSON-dict form (reference `cut_from_dict`,
@@ -630,7 +640,7 @@ final class SlicerServer(workspace: Workspace, port: Int = 0,
         Resp(200, csv, "text/csv", truncated, attachment = Some(s"$stem.csv"))
       } else if (fmt == "xlsx") {
         val (bytes, truncated) =
-          graft.formats.Formats.xlsxBytes(df, limit = 10000)
+          graft.formats.Formats.xlsxBytes(df, limit = RecordLimit)
         Resp(200, "", XlsxMime, truncated, raw = Some(bytes),
           attachment = Some(s"$stem.xlsx"))
       } else {
@@ -680,9 +690,21 @@ final class SlicerServer(workspace: Workspace, port: Int = 0,
         }
       }
 
-    private def page(q: Map[String, String]): Option[Int] = q.get("page").map(_.toInt)
-    private def pageSize(q: Map[String, String]): Option[Int] =
-      q.get("pagesize").map(_.toInt)
+    /** `page` and `pagesize`: non-negative, with a row offset
+      * (page × pagesize) that fits Spark's Int OFFSET — anything else is
+      * the client's error (400), never a wrapped offset or a Spark 500. */
+    private def paging(q: Map[String, String]): (Option[Int], Option[Int]) = {
+      def nonNegative(k: String): Option[Int] = q.get(k).map { v =>
+        val n = v.toInt
+        require(n >= 0, s"'$k' must be non-negative, got $n")
+        n
+      }
+      val (page, pageSize) = (nonNegative("page"), nonNegative("pagesize"))
+      for (p <- page; n <- pageSize)
+        require(p.toLong * n <= Int.MaxValue,
+          s"page × pagesize = ${p.toLong * n} is past the last addressable row")
+      (page, pageSize)
+    }
 
     private def parseKey(s: String): Any =
       try java.lang.Long.valueOf(s) catch { case _: NumberFormatException => s }
@@ -767,7 +789,7 @@ final class SlicerServer(workspace: Workspace, port: Int = 0,
       * row structure) is quoted and inner quotes doubled. `header` =
       * Some(cells) renders a header row, None omits it. Returns the text
       * plus whether the row limit truncated it. */
-    private def toCsv(df: DataFrame, limit: Int = 10000,
+    private def toCsv(df: DataFrame, limit: Int = RecordLimit,
         header: Option[Seq[String]]): (String, Boolean) = {
       val fetched = df.limit(limit + 1).collect()
       val rows = fetched.take(limit)

@@ -14,13 +14,12 @@ import graft.server.SlicerServer
 import graft.workspace.Workspace
 
 /** Concurrency stress for the thread-scoped persist-hygiene model
-  * ([[graft.ops.Caches]]): the server handles requests on a pool, each
-  * request registers/releases its own persisted intermediates, and a
-  * concurrent dedup pipeline on another thread must keep its LSH band
-  * table alive until ITS release. A process-global registry fails this
-  * (round-2 finding: one request's releaseAll unpersisted another's
-  * in-flight band table); nothing previously proved the thread-scoped
-  * design under real concurrency. */
+  * ([[graft.ops.Caches]]): the server handles requests on a pool (they
+  * persist nothing), and a concurrent dedup pipeline on another thread
+  * must keep its LSH band table alive until ITS release. A
+  * process-global registry fails this (round-2 finding: one request's
+  * releaseAll unpersisted another's in-flight band table); nothing
+  * previously proved the thread-scoped design under real concurrency. */
 class ConcurrencySpec extends AnyFunSuite with SharedSpark {
 
   import spark.implicits._
@@ -36,8 +35,7 @@ class ConcurrencySpec extends AnyFunSuite with SharedSpark {
     val pool = Executors.newFixedThreadPool(6)
     try {
       val start = new CountDownLatch(1)
-      // 4 server requests: 2 fused aggregates + 2 counted (persist-path)
-      // aggregates, all released inside the server's finally
+      // 4 server requests: 2 unpaged and 2 paged, counted aggregates
       val serverTasks = (1 to 4).map { i =>
         pool.submit(new java.util.concurrent.Callable[Try[String]] {
           override def call(): Try[String] = { start.await(); Try {
@@ -45,7 +43,7 @@ class ConcurrencySpec extends AnyFunSuite with SharedSpark {
               // fused path (drilldown + builtin aggregates)
               s"http://127.0.0.1:$port/cube/sales/aggregate?drilldown=returnflag&aggregates=quantity_sum%7Cfact_count"
             else
-              // non-fused persist path (cell-count persists the unpaged frame)
+              // paged: the cell count comes from the same fetch
               s"http://127.0.0.1:$port/cube/sales/aggregate?drilldown=customer:nation&aggregates=fact_count&pagesize=3"
             val r = client.send(
               HttpRequest.newBuilder(URI.create(url)).GET().build(),

@@ -329,8 +329,7 @@ class OpsSpec extends AnyFunSuite with SharedSpark {
 
   test("persist hygiene: releaseAll leaves no persisted RDDs behind") {
     graft.ops.Caches.releaseAll() // clean slate for this thread
-    // operators that persist internally: LSH candidates, CC rounds,
-    // fused aggregate (grouping-sets persist)
+    // operators that persist internally: LSH candidates, CC rounds
     val d = (1L to 20L).map(i => (i, s"common text shared by doc $i"))
       .toDF("doc_id", "text")
     val pairs = Dedup.minhashCandidates(d, "doc_id", "text", 8, 4, 3)

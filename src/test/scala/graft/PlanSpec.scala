@@ -177,19 +177,23 @@ class PlanSpec extends AnyFunSuite with SharedSpark {
   test("fused aggregate: summary + cells share ONE shuffle (grouping sets)") {
     val r = b.aggregateFused(drilldown = Seq("returnflag"),
       aggregates = Seq("quantity_sum", "fact_count"))
+    val plan = physicalPlan(r.cells)
+    // one hash shuffle (the grouping-sets aggregation); the only other
+    // allowed exchange is the final sort's range partitioning over the
+    // already-aggregated (tiny) result
+    val hashExchanges = plan.linesIterator.count(_.contains("hashpartitioning"))
+    assert(hashExchanges == 1,
+      s"expected exactly 1 hash Exchange (the fused grouping-sets pass), got $hashExchanges:\n$plan")
+    // the json response reads the summary row and every cell in one query
+    val meter = RunMeter.attach(spark.sparkContext)
     try {
-      val plan = physicalPlan(r.cells)
-      // one hash shuffle (the grouping-sets aggregation); the only other
-      // allowed exchange is the final sort's range partitioning over the
-      // already-aggregated (tiny) result
-      val hashExchanges = plan.linesIterator.count(_.contains("hashpartitioning"))
-      assert(hashExchanges == 1,
-        s"expected exactly 1 hash Exchange (the fused grouping-sets pass), got $hashExchanges:\n$plan")
-      // both frames read the same persisted pass after the first action
-      r.cells.count()
-      assert(physicalPlan(r.summary.get).contains("InMemoryTableScan"),
-        "summary should read the persisted grouping-sets result")
-    } finally graft.ops.Caches.releaseAll()
+      meter.settle()
+      meter.reset()
+      val rows = r.rows.get().collect()
+      meter.settle()
+      assert(meter.queries.get == 1, s"${meter.queries.get} queries for the fused rows")
+      assert(rows.map(_.getBoolean(0)).toSeq == Seq(true, false, false, false))
+    } finally meter.close()
   }
 
   test("boilerplate-line removal: frequent-line set returns via broadcast anti-join") {

@@ -11,10 +11,11 @@ import graft.tpch.TpchModel
   * session — the reference's server test tier (`tests/test_server.py`). */
 class ServerSpec extends AnyFunSuite with SharedSpark {
 
+  lazy val ws: Workspace = new Workspace(spark)
+    .registerCube(TpchModel.cube)
+    .registerTableDir("/root/testdata/sf0.001")
+
   lazy val (server, port) = {
-    val ws = new Workspace(spark)
-      .registerCube(TpchModel.cube)
-      .registerTableDir("/root/testdata/sf0.001")
     val s = new SlicerServer(ws)
     (s, s.start())
   }
@@ -128,6 +129,135 @@ class ServerSpec extends AnyFunSuite with SharedSpark {
     val (_, noCount) = get(
       "/cube/sales/aggregate?drilldown=returnflag&include_cell_count=false")
     assert(!noCount.contains("total_cell_count"))
+  }
+
+  test("aggregate json equals the in-process browser's frames: pages, order, empty cell, no drilldown, split, window") {
+    import graft.browser.TimeCuts
+    import graft.formats.Formats
+    val b = ws.browserFor(None, "sales")
+    val nation = "drilldown=customer:nation&aggregates=quantity_sum%7Cfact_count"
+    // (query string, cut, drilldown, aggregates, split, order, page, pagesize)
+    val cases = Seq(
+      (nation, None, Seq("customer:nation"), Seq("quantity_sum", "fact_count"),
+        None, Nil, None, None),
+      (s"$nation&page=1&pagesize=7", None, Seq("customer:nation"),
+        Seq("quantity_sum", "fact_count"), None, Nil, Some(1), Some(7)),
+      // 25 nations: the last page holds 4
+      (s"$nation&page=3&pagesize=7", None, Seq("customer:nation"),
+        Seq("quantity_sum", "fact_count"), None, Nil, Some(3), Some(7)),
+      (s"$nation&page=9&pagesize=7", None, Seq("customer:nation"),
+        Seq("quantity_sum", "fact_count"), None, Nil, Some(9), Some(7)),
+      (s"$nation&order=quantity_sum:desc&pagesize=10", None, Seq("customer:nation"),
+        Seq("quantity_sum", "fact_count"), None, Seq("quantity_sum" -> Some("desc")),
+        None, Some(10)),
+      // an empty cell: no grouping-sets summary row, the summary is still
+      // the global aggregate's (a count of 0)
+      (s"cut=returnflag:ZZZ&$nation", Some("returnflag:ZZZ"), Seq("customer:nation"),
+        Seq("quantity_sum", "fact_count"), None, Nil, None, None),
+      ("cut=customer:ASIA&aggregates=quantity_sum%7Cfact_count", Some("customer:ASIA"),
+        Nil, Seq("quantity_sum", "fact_count"), None, Nil, None, None),
+      ("drilldown=returnflag&aggregates=quantity_sum%7Cfact_count&split=customer:ASIA",
+        None, Seq("returnflag"), Seq("quantity_sum", "fact_count"),
+        Some("customer:ASIA"), Nil, None, None),
+      ("drilldown=customer:nation&aggregates=quantity_sum%7Cquantity_sma&page=2&pagesize=10",
+        None, Seq("customer:nation"), Seq("quantity_sum", "quantity_sma"), None, Nil,
+        Some(2), Some(10)))
+    cases.foreach { case (qs, cut, dd, aggs, split, order, page, pageSize) =>
+      val (code, body) = get(s"/cube/sales/aggregate?$qs")
+      assert(code == 200, s"$qs: $body")
+      val cell = cut.map(TimeCuts.parseCell(b.cube, _)).getOrElse(graft.cells.Cell.empty)
+      val splitCell = split.map(TimeCuts.parseCell(b.cube, _))
+      val paged = b.aggregate(cell, dd, aggs, splitCell, order, page, pageSize)
+      val all = b.aggregate(cell, dd, aggs, splitCell, order)
+      val summary = Formats.toJsonArray(paged.summary.get, 1).stripPrefix("[").stripSuffix("]")
+      val cells = Formats.toJsonArray(paged.cells)
+      assert(body.startsWith(s"""{"summary": $summary, "cells": $cells, """), qs)
+      assert(body.endsWith(s""""total_cell_count": ${all.cells.count()}}"""), qs)
+      if (page.contains(9)) assert(cells == "[]" && body.endsWith(""""total_cell_count": 25}"""))
+    }
+  }
+
+  test("aggregate json past 10,000 cells: truncated page, exact count, one extra query") {
+    import org.apache.spark.sql.functions.col
+    import graft.model._
+    val n = 10050
+    val cube = Cube(name = "big", factTable = "big",
+      dimensions = Seq(Dimension.flat("item")),
+      measures = Seq(Measure("amount")),
+      aggregates = Seq(
+        MeasureAggregate("amount_sum", function = Some("sum"), measure = Some("amount")),
+        MeasureAggregate("count", function = Some("count"))),
+      keyColumn = Some("id"))
+    val big = new Workspace(spark).registerCube(cube).registerTable("big",
+      spark.range(n).select(col("id"), (col("id") * 7 % n).as("item"), (col("id") % 5).as("amount")))
+    val srv = new SlicerServer(big)
+    val p = srv.start()
+    try {
+      def fetch(qs: String) = client.send(HttpRequest.newBuilder(
+        URI.create(s"http://127.0.0.1:$p/cube/big/aggregate?$qs")).GET().build(),
+        HttpResponse.BodyHandlers.ofString())
+      // fused (explicit aggregates) and non-fused (cube defaults) paths
+      for (qs <- Seq("drilldown=item&aggregates=amount_sum%7Ccount", "drilldown=item")) {
+        val r = fetch(qs)
+        assert(r.statusCode() == 200, r.body())
+        assert(r.headers().firstValue("X-Graft-Truncated").orElse("") == "true", qs)
+        val j = org.json4s.jackson.JsonMethods.parse(r.body())
+        assert((j \ "cells").children.size == 10000, qs)
+        assert((j \ "total_cell_count") == org.json4s.JInt(n), qs)
+        assert((j \ "summary" \ "count") == org.json4s.JInt(n), qs)
+        // the last cell of the page is the 10,000th item in key order
+        assert(((j \ "cells").children.last \ "item") == org.json4s.JInt(9999), qs)
+        // the page after it: the remaining 50 cells, not truncated
+        val tail = fetch(s"$qs&page=1&pagesize=10000")
+        assert(!tail.headers().firstValue("X-Graft-Truncated").isPresent, qs)
+        val tj = org.json4s.jackson.JsonMethods.parse(tail.body())
+        assert((tj \ "cells").children.size == n - 10000, qs)
+        assert((tj \ "total_cell_count") == org.json4s.JInt(n), qs)
+      }
+    } finally srv.stop()
+  }
+
+  test("aggregate json: a fused request runs 1 query, a non-fused one 2, and nothing stays cached") {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val queries = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        queries.incrementAndGet()
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit =
+        queries.incrementAndGet()
+    }
+    def queriesOf(path: String): Int = {
+      org.apache.spark.sql.GraftSqlBridge.waitForListeners(spark.sparkContext, 30000L)
+      queries.set(0)
+      val (code, body) = get(path)
+      assert(code == 200, body)
+      org.apache.spark.sql.GraftSqlBridge.waitForListeners(spark.sparkContext, 30000L)
+      queries.get
+    }
+    get("/cube/sales/aggregate?drilldown=returnflag") // server started, tables read
+    spark.catalog.clearCache()
+    spark.listenerManager.register(listener)
+    try {
+      assert(queriesOf("/cube/sales/aggregate?cut=customer:ASIA&drilldown=customer:nation" +
+        "&aggregates=quantity_sum%7Cfact_count&page=1&pagesize=2") == 1)
+      // no explicit aggregates: the summary is its own query
+      assert(queriesOf("/cube/sales/aggregate?drilldown=customer:nation&page=1&pagesize=2") == 2)
+      assert(queriesOf("/cube/sales/aggregate?drilldown=returnflag" +
+        "&aggregates=quantity_sum%7Cfact_count&split=customer:ASIA") == 2)
+    } finally spark.listenerManager.unregister(listener)
+    assert(spark.sharedState.cacheManager.isEmpty)
+  }
+
+  test("negative or overflowing page/pagesize is a 400 on aggregate, facts and members") {
+    for {
+      verb <- Seq("aggregate?drilldown=returnflag&", "facts?", "members/customer?")
+      paging <- Seq("page=-1&pagesize=5", "page=0&pagesize=-5", "pagesize=-1",
+        "page=100000&pagesize=100000", "page=x&pagesize=5")
+    } {
+      val (code, body) = get(s"/cube/sales/$verb$paging")
+      assert(code == 400, s"$verb$paging: $code $body")
+    }
   }
 
   test("/facts format=json_lines: chunked stream, one object per line, no record limit") {

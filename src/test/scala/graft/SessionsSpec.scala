@@ -71,4 +71,17 @@ class SessionsSpec extends AnyFunSuite with SharedSpark {
       assert(meter.shuffleRead.get == meter.shuffleWrite.get)
     } finally meter.close()
   }
+
+  test("RunMeter counts one query per Dataset action and none for an RDD job") {
+    val meter = RunMeter.attach(spark.sparkContext)
+    try {
+      meter.settle()
+      meter.reset()
+      spark.sparkContext.parallelize(1 to 100, 2).sum()
+      spark.range(1000).selectExpr("sum(id)").collect()
+      spark.range(1000).filter("id % 7 = 0").count()
+      meter.settle()
+      assert(meter.queries.get == 2)
+    } finally meter.close()
+  }
 }
