@@ -17,6 +17,13 @@ import graft.formats.Formats
 final case class AggregationResult(
     cells: DataFrame,
     summary: Option[DataFrame],
+    /** Builds the json response's rows in response order, unpaged: the
+      * summary row first when the plan computes it alongside the cells
+      * (the one-pass plan, on a non-empty cell), then every drilldown
+      * cell. Columns [[Browser.IsSummary]] and [[Browser.RowJson]] (the
+      * row as `Dataset.toJSON` writes it). A function, so callers that
+      * only read `cells` or `summary` do not pay for analyzing it. */
+    rows: () => DataFrame,
     levels: Map[String, Seq[String]],
     /** Resolved aggregate names (reference `to_dict()["aggregates"]`). */
     aggregates: Seq[String] = Nil,
@@ -24,15 +31,7 @@ final case class AggregationResult(
     attributes: Seq[String] = Nil,
     /** The effective (restricted) cell browsed. */
     cell: Cell = Cell.empty,
-    hasSplit: Boolean = false,
-    /** Builds the json response's rows in response order, unpaged: the
-      * summary row first when the plan computes it alongside the cells
-      * (the fused path, on a non-empty cell), then every drilldown cell.
-      * Columns [[Browser.IsSummary]] and [[Browser.RowJson]] (the row as
-      * `Dataset.toJSON` writes it). A function, so callers that only read
-      * `cells` or `summary` do not pay for analyzing it. None when no
-      * local browser built the result. */
-    rows: Option[() => DataFrame] = None
+    hasSplit: Boolean = false
 )
 
 /** One level's detail record (reference `_path_details` item,
@@ -212,15 +211,11 @@ final class Browser(
     val measureRefs = builtinAggs.flatMap(aggMeasureRefs)
     val cutRefs = cellRefs(effCell) ++ split.map(cellRefs).getOrElse(Nil)
     val orderRefs = order.map(_._1).filter(r => cube.allAttributes.contains(r))
-    val projected = projectedFrame(
-      (ddRefs ++ measureRefs ++ cutRefs ++ orderRefs).distinct)
-
-    val filtered = cellPredicate(projected, effCell)
-      .map(projected.filter).getOrElse(projected)
+    val filtered = cellFrame((ddRefs ++ measureRefs ++ cutRefs ++ orderRefs).distinct, effCell)
 
     val withSplit = split match {
       case Some(sc) =>
-        val cond = cellPredicate(projected, sc).getOrElse(lit(true))
+        val cond = cellPredicate(filtered, sc).getOrElse(lit(true))
         filtered.withColumn(SplitColumn, cond)
       case None => filtered
     }
@@ -229,8 +224,11 @@ final class Browser(
 
     var result = groupedAgg(withSplit, groupCols, builtinAggs)
 
-    if (excludeNullAggregates && builtinAggs.nonEmpty)
-      result = result.filter(builtinAggs.map(a => bcol(a.name).isNotNull).reduce(_ && _))
+    val nonNull =
+      if (excludeNullAggregates && builtinAggs.nonEmpty)
+        Some(builtinAggs.map(a => bcol(a.name).isNotNull).reduce(_ && _))
+      else None
+    nonNull.foreach(c => result = result.filter(c))
 
     // final sort order: split first, then explicit, then natural level order
     // (reference sql/utils.py:106-162, query/browser.py:1010-1024)
@@ -266,25 +264,48 @@ final class Browser(
         Some(groupedAgg(withSplit, Nil, builtinAggs))
       else None
 
+    // a plain builtin-aggregate drilldown answers the summary row and the
+    // cells in one pass; split, window calculators and distinct+sketch
+    // mixes (see groupedAgg) keep the summary as its own query
+    val onePass = summary.isDefined && dd.nonEmpty && split.isEmpty &&
+      windowAggs.isEmpty && !Browser.mixesDistinctAndSketch(builtinAggs)
     AggregationResult(result, summary,
-      dd.map(d => d.dim.name -> d.levelNames).toMap,
+      rows = if (onePass) () => onePassRows(filtered, ddRefs, builtinAggs, nonNull, sortCols)
+        else () => Browser.cellRows(unpaged),
+      levels = dd.map(d => d.dim.name -> d.levelNames).toMap,
       aggregates = aggs.map(_.name),
       attributes = ddRefs,
       cell = effCell,
-      hasSplit = split.isDefined,
-      rows = Some(() => unpaged.select(lit(false).as(Browser.IsSummary),
-        Formats.jsonObject(unpaged.columns.toSeq).as(Browser.RowJson))))
+      hasSplit = split.isDefined)
   }
 
-  /** One-pass summary + drilldown: GROUPING SETS ((dd...), ()) computes
-    * both in a single shuffle over the fact (the reference issues two SQL
-    * statements, `sql/browser.py:378-383`; SURVEY §7.4.3 calls for the
-    * fused plan). `rows` answers both in one ordered query, the summary
-    * row first; `cells` is the lazy cell slice of the same plan. `summary`
-    * is the plain global aggregate, as in [[aggregate]]: on an empty cell
-    * the grouping sets yield no summary row, while the global aggregate
-    * still yields one (a count of 0). Window calculators and split are
-    * not supported here; use [[aggregate]] for those. */
+  /** [[AggregationResult.rows]] from one GROUPING SETS ((dd...), ()) pass
+    * over `filtered` (the reference issues two SQL statements,
+    * `sql/browser.py:378-383`; SURVEY §7.4.3 calls for the fused plan):
+    * the summary row first, then the cells that pass `keep`, in
+    * `sortCols` order. On an empty cell the grouping sets yield no
+    * summary row, while [[AggregationResult.summary]] still yields one
+    * (a count of 0). */
+  private def onePassRows(filtered: DataFrame, ddRefs: Seq[String],
+      aggs: Seq[MeasureAggregate], keep: Option[Column], sortCols: Seq[Column]): DataFrame = {
+    val aggCols = aggs.map(builtinAggColumn(filtered, _)) :+ gidColumn(ddRefs)
+    val grouped = filtered
+      .groupingSets(Seq(ddRefs.map(bcol), Seq.empty), ddRefs.map(bcol): _*)
+      .agg(aggCols.head, aggCols.tail: _*)
+    val isCell = col(Gid) === 0
+    val isSummary = col(Gid) === ((1L << ddRefs.size) - 1)
+    val cellCols = grouped.columns.toSeq.filterNot(_ == Gid)
+    val summaryCols = cellCols.filterNot(ddRefs.toSet)
+    grouped.filter(keep.fold(isCell)(isCell && _) || isSummary)
+      .orderBy(isSummary.desc +: sortCols: _*)
+      .select(isSummary.as(Browser.IsSummary),
+        when(isSummary, Formats.jsonObject(summaryCols))
+          .otherwise(Formats.jsonObject(cellCols)).as(Browser.RowJson))
+  }
+
+  /** [[aggregate]] without a split. It stays only because the `olapbench`
+    * module compiles against it; call [[aggregate]], which picks the
+    * one-pass plan itself. */
   def aggregateFused(
       cell: Cell = Cell.empty,
       drilldown: Seq[String],
@@ -292,51 +313,7 @@ final class Browser(
       order: Seq[(String, Option[String])] = Nil,
       page: Option[Int] = None,
       pageSize: Option[Int] = None
-  ): AggregationResult = {
-    val effCell = restricted(cell)
-    val aggs = (if (aggregates.isEmpty) cube.aggregates else aggregates.map(cube.aggregate))
-      .filterNot(_.function.exists(WindowCalcs.isWindowFunction))
-    require(aggs.nonEmpty, "aggregateFused needs at least one builtin aggregate")
-    val dd = resolveDrilldown(effCell, drilldown)
-    require(dd.nonEmpty, "aggregateFused needs a drilldown")
-    // same refusal semantics as aggregate(): the server routes eligible
-    // requests here, so the fused path must not silently return wrong
-    // nonadditive sums or unpaginated high-cardinality drilldowns
-    checkHighCardinality(dd, effCell, page, pageSize)
-    checkNonadditive(dd, aggs)
-    val ddRefs = dd.flatMap(_.allRefs)
-    val projected = projectedFrame(
-      (ddRefs ++ aggs.flatMap(aggMeasureRefs) ++ cellRefs(effCell)).distinct)
-    val filtered = cellPredicate(projected, effCell).map(projected.filter).getOrElse(projected)
-
-    val gid = ddRefs.foldLeft(lit(0))((acc, r) => acc * 2 + grouping(bcol(r)))
-      .cast("long").as("__gid__")
-    val aggCols = aggs.map(builtinAggColumn(filtered, _)) :+ gid
-    val grouped = filtered
-      .groupingSets(Seq(ddRefs.map(bcol), Seq.empty), ddRefs.map(bcol): _*)
-      .agg(aggCols.head, aggCols.tail: _*)
-
-    val isCell = col("__gid__") === 0
-    val isSummary = col("__gid__") === ((1L << ddRefs.size) - 1)
-    val cellCols = grouped.columns.toSeq.filterNot(_ == "__gid__")
-    val summaryCols = cellCols.filterNot(ddRefs.toSet)
-    val sortCols = orderColumns(dd, order, hasSplit = false)
-    val rows = () => grouped.filter(isCell || isSummary)
-      .orderBy(isSummary.desc +: sortCols: _*)
-      .select(isSummary.as(Browser.IsSummary),
-        when(isSummary, Formats.jsonObject(summaryCols))
-          .otherwise(Formats.jsonObject(cellCols)).as(Browser.RowJson))
-    val cells0 = grouped.filter(isCell).drop("__gid__")
-    val sorted = if (sortCols.nonEmpty) cells0.orderBy(sortCols: _*) else cells0
-    AggregationResult(
-      paginate(sorted, page, pageSize),
-      Some(groupedAgg(filtered, Nil, aggs)),
-      dd.map(d => d.dim.name -> d.levelNames).toMap,
-      aggregates = aggs.map(_.name),
-      attributes = ddRefs,
-      cell = effCell,
-      rows = Some(rows))
-  }
+  ): AggregationResult = aggregate(cell, drilldown, aggregates, None, order, page, pageSize)
 
   /** Cuboid aggregation (reference enumerates dimension/level combinations
     * driver-side for pre-aggregation, `computation.py:15-70`; Catalyst has
@@ -359,13 +336,9 @@ final class Browser(
       .filterNot(_.function.exists(WindowCalcs.isWindowFunction))
     val dd = resolveDrilldown(effCell, drilldown)
     val ddRefs = dd.flatMap(_.keyRefs)
-    val projected = projectedFrame(
-      (ddRefs ++ aggs.flatMap(aggMeasureRefs) ++ cellRefs(effCell)).distinct)
-    val filtered = cellPredicate(projected, effCell).map(projected.filter).getOrElse(projected)
-
-    val gid = ddRefs.foldLeft(lit(0)) { (acc, r) => acc * 2 + grouping(bcol(r)) }
-      .cast("long").as("__gid__")
-    val aggCols = aggs.map(builtinAggColumn(filtered, _)) :+ gid
+    val filtered = cellFrame(
+      (ddRefs ++ aggs.flatMap(aggMeasureRefs) ++ cellRefs(effCell)).distinct, effCell)
+    val aggCols = aggs.map(builtinAggColumn(filtered, _)) :+ gidColumn(ddRefs)
     val grouped = kind match {
       case "rollup" => filtered.rollup(ddRefs.map(bcol): _*)
       case "cube"   => filtered.cube(ddRefs.map(bcol): _*)
@@ -374,7 +347,7 @@ final class Browser(
       case other => throw new IllegalArgumentException(s"unknown cuboid kind '$other'")
     }
     grouped.agg(aggCols.head, aggCols.tail: _*)
-      .orderBy(col("__gid__").asc +: ddRefs.map(r => bcol(r).asc_nulls_first): _*)
+      .orderBy(col(Gid).asc +: ddRefs.map(r => bcol(r).asc_nulls_first): _*)
   }
 
   /** Per-group top-k (beyond the reference's flat limit+offset, O6): the
@@ -420,10 +393,8 @@ final class Browser(
     // the authorized depth are dropped from the projection
     val wanted = visible(
       if (fields.nonEmpty) fields else cube.allAttributes.keys.toSeq.sorted)
-    val refs = (wanted ++ cellRefs(effCell)).distinct
-    val projected = projectedFrame(refs, includeFactKey = true)
-    var out = cellPredicate(projected, effCell).map(projected.filter).getOrElse(projected)
-    out = out.select((FactKeyColumn +: wanted).map(bcol): _*)
+    val out = cellFrame((wanted ++ cellRefs(effCell)).distinct, effCell, includeFactKey = true)
+      .select((FactKeyColumn +: wanted).map(bcol): _*)
     val sortCols = order.map { case (r, d) => dirCol(bcol(r), d) }
     val sorted = if (sortCols.nonEmpty) out.orderBy(sortCols: _*)
       else out.orderBy(bcol(FactKeyColumn))
@@ -437,11 +408,8 @@ final class Browser(
     // `sql/browser.py:211-232` never consults the restricted cell)
     val effCell = restricted(Cell.empty)
     val wanted = visible(cube.allAttributes.keys.toSeq.sorted)
-    val refs = (wanted ++ cellRefs(effCell)).distinct.sorted
-    val projected = projectedFrame(refs, includeFactKey = true)
-    val restrictedDf = cellPredicate(projected, effCell)
-      .map(projected.filter).getOrElse(projected)
-    restrictedDf.filter(bcol(FactKeyColumn) === lit(key))
+    cellFrame((wanted ++ cellRefs(effCell)).distinct.sorted, effCell, includeFactKey = true)
+      .filter(bcol(FactKeyColumn) === lit(key))
       .select((FactKeyColumn +: wanted).map(bcol): _*)
   }
 
@@ -471,9 +439,8 @@ final class Browser(
       case Some(d) => levels0.take(d)
     }
     val attrs = levels.map(dim.level).flatMap(_.attributes.map(_.ref))
-    val projected = projectedFrame((attrs ++ cellRefs(effCell)).distinct)
-    val filtered = cellPredicate(projected, effCell).map(projected.filter).getOrElse(projected)
-    val distinct = filtered.select(attrs.map(bcol): _*).distinct()
+    val distinct = cellFrame((attrs ++ cellRefs(effCell)).distinct, effCell)
+      .select(attrs.map(bcol): _*).distinct()
     val ordered = distinct.orderBy(levels.map(dim.level).map(naturalOrderCol): _*)
     paginate(ordered, page, pageSize)
   }
@@ -611,6 +578,22 @@ final class Browser(
       case (None, Some(n))    => df.limit(n)
       case _                  => df
     }
+
+  /** The star projected to `refs` (which must cover `cellRefs(cell)`),
+    * filtered by the cell's predicate. */
+  private def cellFrame(refs: Seq[String], cell: Cell,
+      includeFactKey: Boolean = false): DataFrame = {
+    val projected = projectedFrame(refs, includeFactKey)
+    cellPredicate(projected, cell).map(projected.filter).getOrElse(projected)
+  }
+
+  private val Gid = "__gid__"
+
+  /** The grouping indicator Σ grouping(ref)·2^i over `refs`, the first
+    * ref most significant: 0 on a full-grouping row, 2^n − 1 on the
+    * grand total. */
+  private def gidColumn(refs: Seq[String]): Column =
+    refs.foldLeft(lit(0))((acc, r) => acc * 2 + grouping(bcol(r))).cast("long").as(Gid)
 
   /** Refs whose physical columns a cell's predicate needs. */
   private def cellRefs(cell: Cell): Seq[String] =
@@ -941,6 +924,11 @@ object Browser {
   val IsSummary = "__summary__"
   val RowJson = "__json__"
 
+  /** [[AggregationResult.rows]] of a plan with no summary row: every row
+    * of `cells`, flagged as a cell. */
+  private[graft] def cellRows(cells: DataFrame): DataFrame =
+    cells.select(lit(false).as(IsSummary), Formats.jsonObject(cells.columns.toSeq).as(RowJson))
+
   /** Functions whose partial aggregate carries a per-group OBJECT buffer
     * (quantile summaries, HLL sketches) rather than a few codegen'd
     * scalars. */
@@ -963,9 +951,8 @@ object Browser {
 
   /** True when `aggs` mixes distinct-class with sketch-class aggregates —
     * the combination whose single-pass plan builds one sketch buffer per
-    * DISTINCT VALUE (see `groupedAgg`); callers (the server's fused
-    * routing) must send such requests through the two-pass `aggregate()`
-    * path. */
+    * DISTINCT VALUE (see `groupedAgg`), so `aggregate` does not answer
+    * it in one grouping-sets pass. */
   def mixesDistinctAndSketch(aggs: Seq[graft.model.MeasureAggregate]): Boolean =
     aggs.exists(isDistinctAgg) && aggs.exists(isSketchAgg)
 }

@@ -9,7 +9,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.json4s._
 import org.json4s.jackson.JsonMethods
 
-import graft.browser.AggregationResult
+import graft.browser.{AggregationResult, Browser}
 import graft.cells.Cell
 import graft.model._
 
@@ -265,9 +265,11 @@ final class FederatedBrowser(
       case JArray(xs) => xs.collect { case JString(x) => x }
       case _          => Nil
     }
+    val cellsDf = df(cells)
     AggregationResult(
-      cells = df(cells),
+      cells = cellsDf,
       summary = summary,
+      rows = () => Browser.cellRows(cellsDf),
       levels = levels,
       aggregates = strings("aggregates"),
       attributes = strings("attributes"),

@@ -125,6 +125,11 @@ final class SlicerServer(workspace: Workspace, port: Int = 0,
     * `/info`); more set `X-Graft-Truncated`. */
   private val RecordLimit = 10000
 
+  /** Deepest row offset (page × pagesize) a paged request may ask for.
+    * Spark's top-K sizes each task's queue by offset + limit, and the
+    * json aggregate collects offset + page rows to the driver. */
+  private val MaxOffset = 10 * RecordLimit
+
   private val XlsxMime =
     "application/vnd.openxmlformats-officedocument.spreadsheetml.sheet"
 
@@ -385,26 +390,11 @@ final class SlicerServer(workspace: Workspace, port: Int = 0,
         id: Option[String]): Resp = {
       val b = workspace.browserFor(id, name)
       val drilldown = listParam(q, "drilldown")
-      val aggregates = listParam(q, "aggregates")
       val split = q.get("split").map(s => TimeCuts.parseCell(b.cube, s))
       val reqCell = cell(name, q) // parsed once: browse + response "cell"
       val (page, pageSize) = paging(q)
-      // the fused (one grouping-sets pass) plan answers summary + cells +
-      // count in one query — eligible whenever there is a plain
-      // builtin-aggregate drilldown (no split, no window calculators)
-      val resolvedAggs = aggregates.map(b.cube.aggregate)
-      val fusible = drilldown.nonEmpty && split.isEmpty && aggregates.nonEmpty &&
-        resolvedAggs.forall(_.function
-          .forall(f => !graft.functions.WindowCalcs.isWindowFunction(f))) &&
-        // mixed distinct + sketch aggregates take the two-pass aggregate()
-        // path (see Browser.groupedAgg) — fused grouping-sets would hit the
-        // per-distinct-value sketch-buffer blowup
-        !graft.browser.Browser.mixesDistinctAndSketch(resolvedAggs)
-      val result =
-        if (fusible)
-          b.aggregateFused(reqCell, drilldown, aggregates, order(q), page, pageSize)
-        else
-          b.aggregate(reqCell, drilldown, aggregates, split, order(q), page, pageSize)
+      val result = b.aggregate(reqCell, drilldown, listParam(q, "aggregates"), split,
+        order(q), page, pageSize)
       // json_lines/csv/xlsx carry only the cell records; summary, levels
       // and the cell count are the json format's envelope
       if (validatedFormat(q) != "json") frameResponse(result.cells, q, name, stem = "aggregate")
@@ -437,21 +427,19 @@ final class SlicerServer(workspace: Workspace, port: Int = 0,
       * whichever is later. A fetch that comes back short holds every
       * cell, so it gives the count too; only a drilldown with more cells
       * than that counts them in a second query. When the fetch holds no
-      * summary row (a non-fused plan, or an empty cell), `result.summary`
-      * is its own query. */
+      * summary row (the browser did not pick the one-pass plan, or the
+      * cell is empty), `result.summary` is its own query. */
     private def aggregateJson(result: AggregationResult, page: Option[Int],
         pageSize: Option[Int], withCount: Boolean)
         : (String, String, Boolean, Option[Long]) = {
-      val rows = result.rows.getOrElse(throw new IllegalStateException(
-        "aggregate result has no response rows"))()
+      val rows = result.rows()
       val offset = (page, pageSize) match {
-        case (Some(p), Some(n)) => p * n // paging() keeps this in Int range
+        case (Some(p), Some(n)) => p * n // paging() bounds this by MaxOffset
         case _                  => 0
       }
       val pageRows = pageSize.fold(RecordLimit + 1)(math.min(_, RecordLimit + 1))
       // + 1: the summary row
-      val limit = math.min(math.max(offset.toLong + pageRows, RecordLimit + 1L) + 1,
-        Int.MaxValue.toLong).toInt
+      val limit = math.max(offset + pageRows, RecordLimit + 1) + 1
       val fetched = rows.limit(limit).collect()
       val (summaries, cells) = fetched.partition(_.getBoolean(0))
       val summaryJson = summaries.headOption.map(_.getString(1)).orElse(
@@ -691,8 +679,8 @@ final class SlicerServer(workspace: Workspace, port: Int = 0,
       }
 
     /** `page` and `pagesize`: non-negative, with a row offset
-      * (page × pagesize) that fits Spark's Int OFFSET — anything else is
-      * the client's error (400), never a wrapped offset or a Spark 500. */
+      * (page × pagesize) of at most [[MaxOffset]] — anything else is the
+      * client's error (400), never a wrapped offset or a Spark 500. */
     private def paging(q: Map[String, String]): (Option[Int], Option[Int]) = {
       def nonNegative(k: String): Option[Int] = q.get(k).map { v =>
         val n = v.toInt
@@ -701,8 +689,8 @@ final class SlicerServer(workspace: Workspace, port: Int = 0,
       }
       val (page, pageSize) = (nonNegative("page"), nonNegative("pagesize"))
       for (p <- page; n <- pageSize)
-        require(p.toLong * n <= Int.MaxValue,
-          s"page × pagesize = ${p.toLong * n} is past the last addressable row")
+        require(p.toLong * n <= MaxOffset,
+          s"page × pagesize = ${p.toLong * n} is past the deepest served row ($MaxOffset)")
       (page, pageSize)
     }
 

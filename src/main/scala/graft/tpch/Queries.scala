@@ -544,9 +544,10 @@ object Queries {
         aggregates = Seq("n_events", "value_sum", "users")
       ).cells),
 
-    // fused one-pass summary+drilldown (GROUPING SETS) — cells slice
+    // an aggregate the browser answers in one pass (GROUPING SETS summary
+    // + drilldown for the json rows); the gate reads its plain cells
     "q32_fused_agg" -> ((s, dir) =>
-      b(s, dir).aggregateFused(
+      b(s, dir).aggregate(
         cell = Cell(PointCut("returnflag", Seq("R"))),
         drilldown = Seq("linestatus"),
         aggregates = Seq("quantity_sum", "fact_count")

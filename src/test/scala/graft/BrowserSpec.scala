@@ -300,10 +300,11 @@ class BrowserSpec extends AnyFunSuite with SharedSpark {
       Seq(Dimension.flat("year").copy(cardinality = Some("high"))))
     val hb = new Browser(hc, new StarSchema(hc, factsDf, Map("facts" -> factsDf)), spark)
     assertThrows[IllegalArgumentException] {
-      hb.aggregateFused(drilldown = Seq("year"), aggregates = Seq("amount_sum"))
+      hb.aggregate(drilldown = Seq("year"), aggregates = Seq("amount_sum"))
     }
-    hb.aggregateFused(drilldown = Seq("year"), aggregates = Seq("amount_sum"),
+    val paged = hb.aggregate(drilldown = Seq("year"), aggregates = Seq("amount_sum"),
       pageSize = Some(10))
+    assert(paged.rows().collect().map(_.getBoolean(0)).toSeq == Seq(true, false, false, false, false))
     // nonadditive: sum over a time drilldown refused when enforcement is on
     val base = starCube(JoinMethod.Match)
     val nc = base.copy(
@@ -316,17 +317,52 @@ class BrowserSpec extends AnyFunSuite with SharedSpark {
       Map("sales" -> salesDf, "category" -> catDf)), spark,
       enforceNonadditive = true)
     assertThrows[IllegalArgumentException] {
-      nb.aggregateFused(drilldown = Seq("date:year"), aggregates = Seq("qty_sum"))
+      nb.aggregate(drilldown = Seq("date:year"), aggregates = Seq("qty_sum"))
     }
   }
 
   test("fused summary+drilldown: one grouping-sets pass, both slices agree") {
-    val r = flatBrowser.aggregateFused(
+    val r = flatBrowser.aggregate(
       drilldown = Seq("year"), aggregates = Seq("amount_sum", "count"))
     val cells = r.cells.collect()
     assert(cells.length == 4 && cells.forall(_.getAs[Long]("amount_sum") == 15L))
     val s = r.summary.get.collect()(0)
     assert(s.getAs[Long]("amount_sum") == 60L && s.getAs[Long]("count") == 16L)
+    // the json rows: the grouping-sets summary row, then the same cells
+    val rows = r.rows().collect()
+    assert(rows.head.getBoolean(0) && rows.head.getString(1) == """{"amount_sum":60,"count":16}""")
+    assert(rows.tail.map(_.getString(1)).toSeq == r.cells.toJSON.collect().toSeq)
+  }
+
+  test("one-pass rows honour excludeNullAggregates: their cells equal cells") {
+    val c = starCube(JoinMethod.Detail)
+    val b = new Browser(c, new StarSchema(c, salesDf,
+      Map("sales" -> salesDf, "category" -> catDf)), spark,
+      excludeNullAggregates = true)
+    val r = b.aggregate(drilldown = Seq("cat"), aggregates = Seq("qty_sum"))
+    val (summary, cells) = r.rows().collect().partition(_.getBoolean(0))
+    assert(summary.length == 1)
+    val expected = r.cells.toJSON.collect().toSeq
+    assert(expected.nonEmpty && !expected.exists(_.contains("toys")))
+    assert(cells.map(_.getString(1)).toSeq == expected)
+  }
+
+  test("a cube with no declared aggregates: one query, fact_count in the summary and cells") {
+    val c = flatCube.copy(aggregates = Nil)
+    val b = new Browser(c, new StarSchema(c, factsDf, Map("facts" -> factsDf)), spark)
+    val r = b.aggregate(drilldown = Seq("year"))
+    assert(r.aggregates == Seq("fact_count"))
+    val meter = RunMeter.attach(spark.sparkContext)
+    try {
+      meter.settle()
+      meter.reset()
+      val rows = r.rows().collect()
+      meter.settle()
+      assert(meter.queries.get == 1, s"${meter.queries.get} queries for the one-pass rows")
+      assert(rows.head.getBoolean(0) && rows.head.getString(1) == """{"fact_count":16}""")
+      assert(rows.tail.map(_.getString(1)).toSeq ==
+        (2010 to 2013).map(y => s"""{"year":$y,"fact_count":4}"""))
+    } finally meter.close()
   }
 
   test("join pruning: summary over fact-only measures joins nothing") {

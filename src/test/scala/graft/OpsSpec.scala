@@ -335,7 +335,7 @@ class OpsSpec extends AnyFunSuite with SharedSpark {
     val pairs = Dedup.minhashCandidates(d, "doc_id", "text", 8, 4, 3)
     Dedup.nearDupClusters(d, "doc_id", pairs).count()
     val br = graft.tpch.TpchModel.browser(spark, "/root/testdata/sf0.001")
-    val fused = br.aggregateFused(drilldown = Seq("returnflag"),
+    val fused = br.aggregate(drilldown = Seq("returnflag"),
       aggregates = Seq("quantity_sum", "fact_count"))
     fused.cells.count()
     fused.summary.foreach(_.count())

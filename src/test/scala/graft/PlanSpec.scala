@@ -175,9 +175,9 @@ class PlanSpec extends AnyFunSuite with SharedSpark {
   }
 
   test("fused aggregate: summary + cells share ONE shuffle (grouping sets)") {
-    val r = b.aggregateFused(drilldown = Seq("returnflag"),
+    val r = b.aggregate(drilldown = Seq("returnflag"),
       aggregates = Seq("quantity_sum", "fact_count"))
-    val plan = physicalPlan(r.cells)
+    val plan = physicalPlan(r.rows())
     // one hash shuffle (the grouping-sets aggregation); the only other
     // allowed exchange is the final sort's range partitioning over the
     // already-aggregated (tiny) result
@@ -189,7 +189,7 @@ class PlanSpec extends AnyFunSuite with SharedSpark {
     try {
       meter.settle()
       meter.reset()
-      val rows = r.rows.get().collect()
+      val rows = r.rows().collect()
       meter.settle()
       assert(meter.queries.get == 1, s"${meter.queries.get} queries for the fused rows")
       assert(rows.map(_.getBoolean(0)).toSeq == Seq(true, false, false, false))

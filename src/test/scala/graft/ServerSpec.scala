@@ -188,16 +188,23 @@ class ServerSpec extends AnyFunSuite with SharedSpark {
         MeasureAggregate("amount_sum", function = Some("sum"), measure = Some("amount")),
         MeasureAggregate("count", function = Some("count"))),
       keyColumn = Some("id"))
-    val big = new Workspace(spark).registerCube(cube).registerTable("big",
+    // the same facts with a window calculator among the defaults: the
+    // browser cannot answer these in one pass
+    val windowed = cube.copy(name = "bigw", aggregates = cube.aggregates :+
+      MeasureAggregate("amount_sma", function = Some("sma"), measure = Some("amount_sum")))
+    val big = new Workspace(spark).registerCube(cube).registerCube(windowed).registerTable("big",
       spark.range(n).select(col("id"), (col("id") * 7 % n).as("item"), (col("id") % 5).as("amount")))
     val srv = new SlicerServer(big)
     val p = srv.start()
     try {
       def fetch(qs: String) = client.send(HttpRequest.newBuilder(
-        URI.create(s"http://127.0.0.1:$p/cube/big/aggregate?$qs")).GET().build(),
+        URI.create(s"http://127.0.0.1:$p/cube/$qs")).GET().build(),
         HttpResponse.BodyHandlers.ofString())
-      // fused (explicit aggregates) and non-fused (cube defaults) paths
-      for (qs <- Seq("drilldown=item&aggregates=amount_sum%7Ccount", "drilldown=item")) {
+      // one-pass (explicit aggregates, cube defaults) and two-query
+      // (a window calculator, a split) plans
+      for (qs <- Seq("big/aggregate?drilldown=item&aggregates=amount_sum%7Ccount",
+          "big/aggregate?drilldown=item", "bigw/aggregate?drilldown=item",
+          "big/aggregate?drilldown=item&split=item:0-20000")) {
         val r = fetch(qs)
         assert(r.statusCode() == 200, r.body())
         assert(r.headers().firstValue("X-Graft-Truncated").orElse("") == "true", qs)
@@ -241,7 +248,8 @@ class ServerSpec extends AnyFunSuite with SharedSpark {
     try {
       assert(queriesOf("/cube/sales/aggregate?cut=customer:ASIA&drilldown=customer:nation" +
         "&aggregates=quantity_sum%7Cfact_count&page=1&pagesize=2") == 1)
-      // no explicit aggregates: the summary is its own query
+      // the sales defaults include window calculators: the summary is its
+      // own query
       assert(queriesOf("/cube/sales/aggregate?drilldown=customer:nation&page=1&pagesize=2") == 2)
       assert(queriesOf("/cube/sales/aggregate?drilldown=returnflag" +
         "&aggregates=quantity_sum%7Cfact_count&split=customer:ASIA") == 2)
@@ -250,14 +258,22 @@ class ServerSpec extends AnyFunSuite with SharedSpark {
   }
 
   test("negative or overflowing page/pagesize is a 400 on aggregate, facts and members") {
+    val verbs = Seq("aggregate?drilldown=returnflag&", "facts?", "members/customer?")
     for {
-      verb <- Seq("aggregate?drilldown=returnflag&", "facts?", "members/customer?")
+      verb <- verbs
       paging <- Seq("page=-1&pagesize=5", "page=0&pagesize=-5", "pagesize=-1",
-        "page=100000&pagesize=100000", "page=x&pagesize=5")
+        "page=100000&pagesize=100000", "page=1001&pagesize=100", "page=1&pagesize=100001",
+        "page=x&pagesize=5")
     } {
       val (code, body) = get(s"/cube/sales/$verb$paging")
       assert(code == 400, s"$verb$paging: $code $body")
     }
+    // the deepest served offset is 100,000 rows (10 × the record limit)
+    for (verb <- verbs) {
+      val (code, body) = get(s"/cube/sales/${verb}page=1000&pagesize=100")
+      assert(code == 200, s"$verb at the deepest offset: $code $body")
+    }
+    assert(get("/cube/sales/facts?page=1001&pagesize=100")._2.contains("100000"))
   }
 
   test("/facts format=json_lines: chunked stream, one object per line, no record limit") {
