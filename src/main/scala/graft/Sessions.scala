@@ -35,24 +35,31 @@ object Sessions {
     // 37→11, q369 51→10). Scale-neutral: production shuffles have R > 200
     // and never took the bypass path anyway.
     "spark.shuffle.sort.bypassMergeThreshold" -> "1",
-    // the JVM-wide whole-stage-codegen class cache defaults to 100
-    // entries — a 387-query catalog (and per-round literal variants in the
-    // iterative ops) thrashes it, so executor tasks re-run Janino per
-    // stage (thread dumps showed workers pinned in UnitCompiler.compile;
-    // q359 task time 58→17 s with the raise). ~10k entries covers the
-    // catalog across bench passes; class metadata cost is ~100-250 MB,
-    // fine for any long-lived executor.
-    "spark.sql.codegen.cache.maxEntries" -> "10000",
+    CodegenCache -> CodegenCacheEntries,
     "spark.ui.enabled" -> "false")
+
+  /** The JVM-wide whole-stage-codegen class cache, for every session. Its
+    * default of 100 entries thrashes on a 387-query catalog (and on
+    * per-round literal variants in the iterative ops): executor tasks
+    * re-run Janino per stage (thread dumps showed workers pinned in
+    * UnitCompiler.compile; q359 task time 58→17 s with the raise). A
+    * serving JVM recompiles evicted request shapes the same way. ~10k
+    * entries covers the catalog across bench passes; class metadata cost
+    * is ~100-250 MB, fine for any long-lived executor. */
+  private[graft] val CodegenCache = "spark.sql.codegen.cache.maxEntries"
+  private[graft] val CodegenCacheEntries = "10000"
 
   /** The slicer CLI and server runners. Master and shuffle partitions are
     * deployment settings: `SPARK_MASTER` (default `local[*]`) and
     * `SPARK_SHUFFLE_PARTITIONS` (default 32). */
-  def serving(): SparkSession = SparkSession.builder()
-    .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-    .config("spark.sql.shuffle.partitions",
-      sys.env.getOrElse("SPARK_SHUFFLE_PARTITIONS", "32"))
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  def serving(): SparkSession =
+    SparkSession.builder().config(servingSettings).getOrCreate()
+
+  /** The settings [[serving]] builds with. */
+  private[graft] def servingSettings: Map[String, String] = Map(
+    "spark.master" -> sys.env.getOrElse("SPARK_MASTER", "local[*]"),
+    "spark.sql.shuffle.partitions" -> sys.env.getOrElse("SPARK_SHUFFLE_PARTITIONS", "32"),
+    "spark.sql.session.timeZone" -> "UTC",
+    CodegenCache -> CodegenCacheEntries,
+    "spark.ui.enabled" -> "false")
 }

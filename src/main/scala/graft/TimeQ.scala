@@ -32,7 +32,8 @@ object TimeQ {
         secs.map(s => f"$s%.2f").mkString(",") +
         f"  jobs=${meter.jobs.get} stages=${meter.stages.get} tasks=${meter.tasks.get} " +
         f"taskSec=${meter.taskMs.get / 1000.0}%.2f gcSec=${meter.gcMs.get / 1000.0}%.2f " +
-        f"shufMB=${(meter.shuffleRead.get + meter.shuffleWrite.get) / 2097152.0}%.1f")
+        f"shufMB=${(meter.shuffleRead.get + meter.shuffleWrite.get) / 2097152.0}%.1f " +
+        f"compiles=${meter.compiles.get} compileMs=${meter.compileMs}%.1f")
       if (sys.env.contains("TIMEQ_STAGES")) {
         import scala.jdk.CollectionConverters._
         meter.stageMs.asScala.toSeq.sortBy(-_._2).take(8).foreach {

@@ -676,14 +676,7 @@ final class Browser(
     out
   }
 
-  private def factKeyPhysical: PhysicalRef = {
-    // declared key, else "id", else first fact column
-    // (reference sql/query.py:380-396)
-    val colName = cube.keyColumn.getOrElse {
-      if (star.factDf.columns.contains("id")) "id" else star.factDf.columns.head
-    }
-    PhysicalRef(cube.factTable, colName)
-  }
+  private def factKeyPhysical: PhysicalRef = PhysicalRef(cube.factTable, star.factKeyColumn)
 
   private def physColumn(starDf: DataFrame, p: PhysicalRef): Column = {
     var c = col(s"`${star.qual(p.table, p.column)}`")

@@ -5,7 +5,7 @@ import java.net.URI
 
 /** Dev runner: boot the slicer on the testdata workspace, hit a few
   * endpoints, print each response and the Spark work it cost (SQL
-  * queries, jobs, tasks). `runMain graft.server.ServerSmoke [sfDir]
+  * queries, jobs, tasks, generated-code compiles and their time). `runMain graft.server.ServerSmoke [sfDir]
   * [--serve]` — with `--serve` it stays up for manual curls. */
 object ServerSmoke {
   def main(args: Array[String]): Unit = {
@@ -34,7 +34,8 @@ object ServerSmoke {
         meter.settle()
         println(s"[server] GET $p -> ${r.statusCode()} ${r.body().take(300)}")
         println(s"[server]   queries=${meter.queries.get} jobs=${meter.jobs.get} " +
-          s"tasks=${meter.tasks.get}")
+          s"tasks=${meter.tasks.get} compiles=${meter.compiles.get} " +
+          f"compileMs=${meter.compileMs}%.1f")
       }
       get("/cubes")
       get("/cube/sales/aggregate?cut=customer:ASIA&drilldown=returnflag&aggregates=quantity_sum%7Cfact_count")

@@ -1,7 +1,8 @@
 package graft.star
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge}
 import org.apache.spark.sql.functions._
+import graft.exprs.ExprLang
 import graft.model._
 
 /** Maps logical attribute refs to physical (table, column) pairs.
@@ -40,7 +41,10 @@ final class Mapper(cube: Cube) {
 final class StarSchema(
     val cube: Cube,
     val factDf: DataFrame,
-    val tables: Map[String, DataFrame] // physical table name -> DataFrame
+    val tables: Map[String, DataFrame], // physical table name -> DataFrame
+    /** The cube's shared pre-joined star (see [[PrejoinedStar]]); None
+      * answers every request from its own join tree. */
+    prejoined: Option[PrejoinedStar] = None
 ) {
   val mapper = new Mapper(cube)
 
@@ -145,13 +149,37 @@ final class StarSchema(
     (active, elim.toMap)
   }
 
+  /** Fact column that identifies a fact row: the declared key, else `id`,
+    * else the first fact column (reference `sql/query.py:380-396`). */
+  def factKeyColumn: String = cube.keyColumn.getOrElse {
+    if (factDf.columns.contains("id")) "id" else factDf.columns.head
+  }
+
   /** Build the pruned, qualified star for the given base physical refs.
-    * Output columns are `alias__column` for exactly the needed columns. */
+    * Output columns are `alias__column` for (at least) the needed columns.
+    * A request whose pruned tree still holds a join reads a projection of
+    * the cube's pre-joined star when [[prejoinable]]; otherwise, and for
+    * fact-only requests, the tree is built here. */
   def star(phys0: Iterable[PhysicalRef]): DataFrame = {
     val (phys, eliminated) = eliminateKeyOnlyJoins(phys0)
-    val required = requiredAliases(phys)
-    val joins = orderedJoins(required)
+    val joins = orderedJoins(requiredAliases(phys))
+    var starDf = (if (joins.isEmpty) None else fromPrejoined(phys))
+      .getOrElse(joinTree(phys, joins))
+    // expose eliminated keys under their original qualified names (resolve
+    // chains: an eliminated alias's provider may itself be eliminated)
+    eliminated.foreach { case ((t, c), first) =>
+      var (mt, mc) = first
+      while (eliminated.contains((mt, mc))) {
+        val next = eliminated((mt, mc)); mt = next._1; mc = next._2
+      }
+      starDf = starDf.withColumn(qual(t, c), col(qual(mt, mc)))
+    }
+    starDf
+  }
 
+  /** The fact table joined along `joins`, each input pruned to the
+    * requested columns, its join keys and the fact key. */
+  private def joinTree(phys: Seq[PhysicalRef], joins: Seq[JoinSpec]): DataFrame = {
     // per-alias needed columns: requested attribute columns + join keys
     val needed = scala.collection.mutable.Map.empty[String, scala.collection.mutable.Set[String]]
     def need(alias: String, col: String): Unit =
@@ -191,15 +219,97 @@ final class StarSchema(
       }
       starDf = starDf.join(detail, cond, how)
     }
-    // expose eliminated keys under their original qualified names (resolve
-    // chains: an eliminated alias's provider may itself be eliminated)
-    eliminated.foreach { case ((t, c), first) =>
-      var (mt, mc) = first
-      while (eliminated.contains((mt, mc))) {
-        val next = eliminated((mt, mc)); mt = next._1; mc = next._2
-      }
-      starDf = starDf.withColumn(qual(t, c), col(qual(mt, mc)))
-    }
     starDf
   }
+
+  /** Whether a projection of the full join answers every request exactly
+    * like its pruned tree: every join is a `match` join with verified
+    * integrity, so the full join holds each fact row exactly once (the
+    * guarantee [[eliminateKeyOnlyJoins]] relies on), and every detail
+    * table is registered. */
+  private val prejoinable: Boolean = cube.joins.nonEmpty && cube.joins.forall(j =>
+    j.integrityVerified && j.method == JoinMethod.Match && tables.contains(j.detailTable))
+
+  /** Physical columns of the pre-joined star: every existing column that
+    * an attribute, measure, detail, mapping or expression identifier maps
+    * to, its localized twins, the join keys (an eliminated join's key is
+    * served from its master side) and the fact key. */
+  private lazy val prejoinedColumns: Set[PhysicalRef] = {
+    val columnsOf: Map[String, Set[String]] =
+      cube.joins.map(j => j.detailAlias -> tables(j.detailTable).columns.toSet).toMap +
+        (cube.factTable -> factDf.columns.toSet)
+    val expressions = cube.allAttributes.values.flatMap(_.expression) ++
+      cube.measures.flatMap(_.expression) ++ cube.aggregates.flatMap(_.expression)
+    val refs = (cube.allAttributes.keys ++ cube.mappings.keys ++
+      expressions.flatMap(ExprLang.identifiers)).toSeq.distinct
+    val cols = refs.flatMap { r =>
+      val p = mapper.physical(r)
+      val locales = cube.allAttributes.get(r).map(_.locales).getOrElse(Nil)
+      (p.column +: locales.map(l => s"${p.column}_$l")).map(PhysicalRef(p.table, _))
+    } ++ cube.joins.flatMap(j => j.masterColumns.map(PhysicalRef(j.masterTable, _)) ++
+      j.detailColumns.map(PhysicalRef(j.detailAlias, _))) :+
+      PhysicalRef(cube.factTable, factKeyColumn)
+    cols.filter(p => columnsOf.get(p.table).exists(_.contains(p.column))).toSet
+  }
+
+  /** `phys` projected from the pre-joined star, or None when the cube is
+    * not [[prejoinable]], has no shared star, or a ref is not in it. */
+  private def fromPrejoined(phys: Seq[PhysicalRef]): Option[DataFrame] = {
+    val cols = phys.map(p => PhysicalRef(p.table, p.column)).distinct
+    prejoined.filter(_ => prejoinable && cols.forall(prejoinedColumns))
+      .flatMap(_.frame(joinTree(prejoinedColumns.toSeq,
+        orderedJoins(cube.joins.map(_.detailAlias).toSet))))
+      .map(_.select(cols.map(p => col(s"`${qual(p.table, p.column)}`")): _*))
+  }
+}
+
+/** One pre-joined star of a cube, built on first use and shared by every
+  * browser of the cube (all identities, restriction cells, locales and
+  * hierarchy limits). The star is locally checkpointed: its rows live in
+  * the block manager and its lineage, with the broadcast relations and
+  * compiled plan of the build, is released. A lost block rebuilds the star
+  * on the next request; [[drop]] releases it for good, after which
+  * requests answer from their join trees. The owner
+  * ([[graft.workspace.Workspace]]) drops it when a table of the cube's
+  * store is re-registered or the cube switches to a denormalized table. */
+final class PrejoinedStar(cubeName: String) {
+  private var current: Option[DataFrame] = None
+  private var dropped = false
+  private var builds = 0
+
+  /** The star, built from `build` when absent or when a block of it was
+    * lost; None once dropped. Concurrent first requests build it once. */
+  def frame(build: => DataFrame): Option[DataFrame] = synchronized {
+    if (dropped) None
+    else {
+      if (!current.exists(GraftSqlBridge.checkpointBlocksPresent)) {
+        current.foreach(GraftSqlBridge.unpersistCheckpoint)
+        val star = build.localCheckpoint(eager = true)
+        GraftSqlBridge.nameCheckpoint(star, s"${PrejoinedStar.RddName} '$cubeName'")
+        current = Some(star)
+        builds += 1
+      }
+      current
+    }
+  }
+
+  /** How many times the star was built (a rebuild counts). */
+  def buildCount: Int = synchronized(builds)
+
+  /** The star as last built; None before the first build and once dropped. */
+  private[graft] def built: Option[DataFrame] = synchronized(current)
+
+  /** Release the star's blocks; later requests read their join trees. */
+  def drop(): Unit = synchronized {
+    dropped = true
+    current.foreach(GraftSqlBridge.unpersistCheckpoint)
+    current = None
+  }
+}
+
+object PrejoinedStar {
+  /** Prefix of the name of every star's RDD (Spark's storage listings show
+    * it): a star lives as long as its workspace serves the cube, unlike the
+    * per-request and per-operator persists. */
+  val RddName = "pre-joined star of cube"
 }

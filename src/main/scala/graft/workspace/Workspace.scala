@@ -2,7 +2,7 @@ package graft.workspace
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.model.{Cube, Localization, ModelJson}
-import graft.star.StarSchema
+import graft.star.{PrejoinedStar, StarSchema}
 import graft.browser.Browser
 import graft.cells.Cell
 
@@ -24,9 +24,36 @@ final class Workspace(val spark: SparkSession) {
     stores.getOrElseUpdate(ns, scala.collection.mutable.Map.empty)
   // cube ref -> namespace whose store backs it ("" = default)
   private val cubeStore = scala.collection.mutable.Map.empty[String, String]
-  private val browsers = scala.collection.mutable.Map.empty[String, Browser]
+  // (cube, restriction, locale, hierarchy limits) -> browser; cube -> its
+  // shared pre-joined star. Both guarded by `browsers`
+  private val browsers = scala.collection.mutable.Map.empty[
+    (String, String, Option[String], Seq[graft.auth.HierarchyLimit]), Browser]
+  private val stars = scala.collection.mutable.Map.empty[String, PrejoinedStar]
 
-  def registerCube(cube: Cube): this.type = { cubes(cube.name) = cube; this }
+  /** Forget the cached browsers and pre-joined stars of the cubes `which`
+    * selects, so the next browse reads the current tables and model. */
+  private def evict(which: String => Boolean): Unit = {
+    val dropped = browsers.synchronized {
+      browsers.filterInPlace { case (k, _) => !which(k._1) }
+      val gone = stars.filter { case (c, _) => which(c) }
+      stars --= gone.keys
+      gone.values.toSeq
+    }
+    // outside the lock: a drop waits for a build in progress
+    dropped.foreach(_.drop())
+  }
+
+  /** Evict every cube that can see the tables of store `ns`: all cubes for
+    * the default store (its tables are shared dimensions), else the
+    * store's own cubes. */
+  private def evictStore(ns: String): Unit =
+    evict(c => ns.isEmpty || cubeStore.get(c).contains(ns))
+
+  def registerCube(cube: Cube): this.type = {
+    cubes(cube.name) = cube
+    evict(_ == cube.name)
+    this
+  }
 
   /** Register under a namespace: the cube is addressed as `ns.cube`
     * everywhere (reference `namespace.py` — hierarchical cube naming;
@@ -38,6 +65,7 @@ final class Workspace(val spark: SparkSession) {
     val ref = s"$namespace.${cube.name}"
     cubes(ref) = cube.copy(name = ref)
     cubeStore(ref) = namespace
+    evict(_ == ref)
     this
   }
 
@@ -87,6 +115,7 @@ final class Workspace(val spark: SparkSession) {
       else if (n.endsWith(".orc"))
         put(n.stripSuffix(".orc"), spark.read.orc(p))
     }
+    evictStore(namespace)
     this
   }
 
@@ -94,9 +123,13 @@ final class Workspace(val spark: SparkSession) {
   def table(name: String, namespace: String = ""): DataFrame =
     storeTables(namespace)(name)
 
+  /** Register (or replace) a table of a store; browsers of the cubes that
+    * see the store are rebuilt on their next use. */
   def registerTable(name: String, df: DataFrame,
       namespace: String = ""): this.type = {
-    storeTables(namespace)(name) = df; this
+    storeTables(namespace)(name) = df
+    evictStore(namespace)
+    this
   }
 
   /** Tables visible to a cube: its own store's tables shadow same-named
@@ -196,11 +229,15 @@ final class Workspace(val spark: SparkSession) {
     * analogue of the reference's `DenormalizedMapper` switch
     * (`sql/mapper.py:269-276`). */
   def useDenormalized(cubeName: String, table: String): this.type = {
-    denormTables(cubeName) = table; this
+    denormTables(cubeName) = table
+    evict(_ == cubeName)
+    this
   }
 
   /** Browser for a cube (cached; reference builds mapper+star once per
-    * browser, `sql/browser.py:102-190`). */
+    * browser, `sql/browser.py:102-190`). Every browser of a cube shares
+    * one pre-joined star ([[graft.star.PrejoinedStar]]), built by the
+    * first request that needs a join. */
   def browser(cubeName: String, restriction: Cell = Cell.empty,
       locale: Option[String] = None,
       hierarchyLimits: Seq[graft.auth.HierarchyLimit] = Nil): Browser =
@@ -208,8 +245,7 @@ final class Workspace(val spark: SparkSession) {
     // request; getOrElseUpdate on a mutable map is not atomic. Browser
     // construction is cheap (plans stay lazy), so the lock is uncontended
     browsers.synchronized(browsers.getOrElseUpdate(
-      s"$cubeName/${restriction.toCutString}/$locale/$hierarchyLimits/" +
-        denormTables.get(cubeName), {
+      (cubeName, restriction.toCutString, locale, hierarchyLimits), {
       require(!federated.contains(cubeName),
         s"cube '$cubeName' is browsed remotely — use federatedBrowser")
       val c0 = cube(cubeName)
@@ -223,10 +259,15 @@ final class Workspace(val spark: SparkSession) {
       }
       val fact = visible.getOrElse(c.factTable,
         throw new IllegalArgumentException(s"no table '${c.factTable}' registered"))
-      new Browser(c, new StarSchema(c, fact, visible), spark,
+      val shared = stars.getOrElseUpdate(cubeName, new PrejoinedStar(cubeName))
+      new Browser(c, new StarSchema(c, fact, visible, Some(shared)), spark,
         restrictionCell = restriction, locale = locale,
         hierarchyLimits = hierarchyLimits)
     }))
+
+  /** The cube's pre-joined star while it is cached. */
+  private[graft] def prejoinedStar(cubeName: String): Option[PrejoinedStar] =
+    browsers.synchronized(stars.get(cubeName))
 
   /** Browser restricted for an identity: restriction cell AND hierarchy
     * limits from the authorizer (reference `server/decorators.py:41-46` +

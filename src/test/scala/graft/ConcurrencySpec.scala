@@ -85,9 +85,12 @@ class ConcurrencySpec extends AnyFunSuite with SharedSpark {
       }
       // the fused and counted aggregates agree with a direct browse
       assert(serverResults(1).get.contains("fact_count"))
-      // hygiene: after every request and pipeline released, nothing persists
-      assert(spark.sparkContext.getPersistentRDDs.isEmpty,
-        s"leaked persists: ${spark.sparkContext.getPersistentRDDs.keys}")
+      // hygiene: after every request and pipeline released, nothing
+      // persists but the cube's pre-joined star, built once for all
+      // requests
+      assert(persistsBesideStars.isEmpty,
+        s"leaked persists: ${persistsBesideStars.keys}")
+      assert(ws.prejoinedStar("sales").map(_.buildCount).contains(1))
     } finally {
       pool.shutdownNow()
       server.stop()
@@ -147,8 +150,8 @@ class ConcurrencySpec extends AnyFunSuite with SharedSpark {
       // deliberately modest: on a cold JVM each aggregate takes ~1s, and
       // the assertion of value is the byte-identity check above, not QPS)
       assert(results.map(_.get).sum >= 8)
-      assert(spark.sparkContext.getPersistentRDDs.isEmpty,
-        s"leaked persists: ${spark.sparkContext.getPersistentRDDs.keys}")
+      assert(persistsBesideStars.isEmpty,
+        s"leaked persists: ${persistsBesideStars.keys}")
     } finally {
       pool.shutdownNow()
       server.stop()

@@ -339,11 +339,11 @@ class OpsSpec extends AnyFunSuite with SharedSpark {
       aggregates = Seq("quantity_sum", "fact_count"))
     fused.cells.count()
     fused.summary.foreach(_.count())
-    assert(spark.sparkContext.getPersistentRDDs.nonEmpty,
+    assert(persistsBesideStars.nonEmpty,
       "expected in-flight persists before release")
     graft.ops.Caches.releaseAll()
-    assert(spark.sparkContext.getPersistentRDDs.isEmpty,
-      s"leaked persists: ${spark.sparkContext.getPersistentRDDs.keys}")
+    assert(persistsBesideStars.isEmpty,
+      s"leaked persists: ${persistsBesideStars.keys}")
   }
 
   test("boilerplate-line removal drops high-doc-frequency lines, keeps order") {

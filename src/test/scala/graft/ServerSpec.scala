@@ -243,7 +243,9 @@ class ServerSpec extends AnyFunSuite with SharedSpark {
       queries.get
     }
     get("/cube/sales/aggregate?drilldown=returnflag") // server started, tables read
+    get("/cube/sales/members/customer?depth=1") // the cube's pre-joined star built
     spark.catalog.clearCache()
+    val persisted = spark.sparkContext.getPersistentRDDs.keySet
     spark.listenerManager.register(listener)
     try {
       assert(queriesOf("/cube/sales/aggregate?cut=customer:ASIA&drilldown=customer:nation" +
@@ -255,6 +257,10 @@ class ServerSpec extends AnyFunSuite with SharedSpark {
         "&aggregates=quantity_sum%7Cfact_count&split=customer:ASIA") == 2)
     } finally spark.listenerManager.unregister(listener)
     assert(spark.sharedState.cacheManager.isEmpty)
+    // the star is built once per cube, not per request: requests persist
+    // no RDD of their own
+    assert(spark.sparkContext.getPersistentRDDs.keySet.subsetOf(persisted))
+    assert(ws.prejoinedStar("sales").map(_.buildCount).contains(1))
   }
 
   test("negative or overflowing page/pagesize is a 400 on aggregate, facts and members") {

@@ -37,6 +37,18 @@ class SessionsSpec extends AnyFunSuite with SharedSpark {
     assert(conf.get("spark.ui.enabled") == "false")
   }
 
+  test("Sessions.serving(): UTC, UI off and the codegen cache of Sessions.local") {
+    val serving = Sessions.servingSettings
+    assert(serving("spark.sql.codegen.cache.maxEntries") == "10000")
+    assert(serving("spark.sql.codegen.cache.maxEntries") ==
+      Sessions.localSettings(4)("spark.sql.codegen.cache.maxEntries"))
+    assert(serving("spark.sql.session.timeZone") == "UTC")
+    assert(serving("spark.ui.enabled") == "false")
+    assert(serving("spark.master") == sys.env.getOrElse("SPARK_MASTER", "local[*]"))
+    assert(serving("spark.sql.shuffle.partitions") ==
+      sys.env.getOrElse("SPARK_SHUFFLE_PARTITIONS", "32"))
+  }
+
   test("only Sessions.scala builds a SparkSession under src/main") {
     val builders = mainSources.filter(p =>
       new String(Files.readAllBytes(p), "UTF-8").contains("SparkSession.builder"))
@@ -69,6 +81,27 @@ class SessionsSpec extends AnyFunSuite with SharedSpark {
       assert(meter.stageMs.size == 2)
       assert(meter.shuffleWrite.get > 0)
       assert(meter.shuffleRead.get == meter.shuffleWrite.get)
+    } finally meter.close()
+  }
+
+  test("RunMeter counts the compiles of a new expression shape, and none when it runs again") {
+    val meter = RunMeter.attach(spark.sparkContext)
+    try {
+      // literals are inlined into the generated code: a shape no earlier
+      // run of this JVM compiled
+      val k = 1000003L + System.nanoTime() % 1000000L
+      def run(): Unit = spark.range(100).selectExpr(s"sum(id * $k + ${k + 7})").collect()
+      meter.settle()
+      meter.reset()
+      run()
+      meter.settle()
+      assert(meter.compiles.get > 0)
+      assert(meter.compileMs > 0)
+      meter.reset()
+      run()
+      meter.settle()
+      assert(meter.compiles.get == 0)
+      assert(meter.compileMs == 0)
     } finally meter.close()
   }
 
