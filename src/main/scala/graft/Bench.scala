@@ -382,6 +382,10 @@ object Bench {
     // with one name per line — restricts the catalog for drift isolation
     // experiments (e.g. rerunning exactly the round-N-common subset in a
     // fresh JVM to separate catalog-size JVM pressure from plan change).
+    // A subset run does NOT reproduce a full run's plan_fp for every
+    // query (at sf0.01: q188, q338, q339, q350, q356 and q364 differ from
+    // the same commit's full run), so plan-fingerprint checks compare
+    // full-catalog runs only.
     val onlyFilter: Option[Set[String]] =
       sys.env.get("SPARK_GRAFT_BENCH_ONLY").map { v =>
         if (v.startsWith("@"))

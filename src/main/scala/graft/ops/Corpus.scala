@@ -1574,34 +1574,24 @@ object Corpus {
     * table (partial-aggregable, vocabulary-sized); every round after
     * that is vocab-sized work — one explode + one partial-aggregable
     * pair count + a 1-row argmax collect (the kmeans centroid
-    * discipline) + one JIT merge map. The symbol table is persisted per
-    * round and `localCheckpoint`ed every `checkpointEvery` rounds so
-    * plan lineage stays bounded at production merge counts (the
-    * PageRank posture). */
-  def trainBpe(df: DataFrame, textCol: String, numMerges: Int,
-      checkpointEvery: Int = 16): DataFrame = {
+    * discipline) + one JIT merge map. The rounds run through
+    * [[Fixpoint.iterate]]: the merged symbol table is wrapped lazily,
+    * and the NEXT round's argmax collect fills it — one action per round,
+    * the previous table released once the next is filled, constant plan
+    * depth at production merge counts. The final round's table is never
+    * computed (nothing reads it). */
+  def trainBpe(df: DataFrame, textCol: String, numMerges: Int): DataFrame = {
     require(numMerges >= 1, s"numMerges must be >= 1, got $numMerges")
-    require(checkpointEvery >= 1, "checkpointEvery must be >= 1")
     val spark = df.sparkSession
     import spark.implicits._
-    var vocab = df.select(explode(split(lower(
+    val vocab0 = df.select(explode(split(lower(
         coalesce(col(textCol), lit(""))), "\\s+")).as("__w__"))
       .filter(length(col("__w__")) >= 2)
       .groupBy(col("__w__")).agg(count(lit(1)).as("__wn__"))
       .select(filter(split(col("__w__"), ""),
         s => length(s) > 0).as("__syms__"), col("__wn__"))
-    vocab.persist()
     val merges = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, Long)]
-    var rank = 1
-    var exhausted = false
-    // r14: one action per round instead of two. The merge-applied child
-    // is persisted LAZILY; the NEXT round's argmax job fills its cache
-    // (the parent cache stays alive until then — `toRelease` defers the
-    // unpersist by one round, so nothing ever recomputes from source).
-    // The final round's child is never computed at all (nothing reads
-    // it), where the old explicit materialization paid a wasted job.
-    var toRelease: Option[DataFrame] = None
-    while (rank <= numMerges && !exhausted) {
+    Fixpoint.iterate("trainBpe", vocab0, numMerges) { (vocab, rank) =>
       val top = vocab.filter(size(col("__syms__")) >= 2)
         .select(col("__wn__"), explode(transform(
           sequence(lit(1), size(col("__syms__")) - 1),
@@ -1611,34 +1601,15 @@ object Corpus {
         .agg(sum(col("__wn__")).as("n"))
         .orderBy(col("n").desc, col("a").asc, col("b").asc)
         .limit(1).collect()
-      // the argmax above materialized `vocab`'s cache — the previous
-      // round's table has no remaining consumer now
-      toRelease.foreach(_.unpersist(blocking = false))
-      toRelease = None
-      if (top.isEmpty) exhausted = true
-      else {
-        val (a, b, n) = (top.head.getAs[String]("a"),
-          top.head.getAs[String]("b"), top.head.getAs[Long]("n"))
+      top.headOption.map { t =>
+        val (a, b, n) = (t.getAs[String]("a"), t.getAs[String]("b"),
+          t.getAs[Long]("n"))
         merges += ((rank, a, b, n))
-        val next = vocab.select(
+        vocab.select(
           graft.functions.NativeText.bpe_merge_once(col("__syms__"), a, b)
             .as("__syms__"), col("__wn__"))
-        if (rank % checkpointEvery == 0) {
-          // eager lineage cut (production merge counts): materializes
-          // from the parent cache, which can then be dropped at once
-          val mat = next.localCheckpoint()
-          vocab.unpersist(blocking = false)
-          vocab = mat
-        } else {
-          next.persist()
-          toRelease = Some(vocab)
-          vocab = next
-        }
-        rank += 1
       }
     }
-    toRelease.foreach(_.unpersist(blocking = false))
-    vocab.unpersist(blocking = false)
     merges.toSeq.toDF("rank", "left_sym", "right_sym", "pair_count")
   }
 

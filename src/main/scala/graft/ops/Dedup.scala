@@ -1078,9 +1078,10 @@ object Dedup {
     *
     * Scale design (the round-1 version was the bench's 38%-of-wall-time
     * outlier; every issue below was a judge finding):
-    *   - **One action per round.** Convergence is counted by a
-    *     LongAccumulator inside the same `count()` that materializes the
-    *     round — no separate convergence pass over the label table.
+    *   - **One action per round.** The rounds run as a watched
+    *     [[Fixpoint.converge]] loop: changed labels are counted inside
+    *     the same `count()` that materializes the round — no separate
+    *     convergence pass over the label table.
     *   - **Frontier join.** Only labels that changed last round are joined
     *     against the edges (a new minimum can only arrive via a neighbor
     *     whose label just dropped), so the edge-join side shrinks with the
@@ -1088,17 +1089,11 @@ object Dedup {
     *     the full O(V) label table each round — the re-wrapped leaf
     *     carries no outputPartitioning for Catalyst to reuse; accepted as
     *     the price of flat lineage (labels rows are 3 narrow columns).
-    *   - **Flat lineage.** Each round is materialized to an
-    *     `RDD[InternalRow]` and re-wrapped as a DataFrame leaf
-    *     ([[org.apache.spark.sql.GraftSqlBridge.internalCreateDataFrame]]),
-    *     so Catalyst analyzes a constant-depth plan per round instead of a
-    *     growing chain — no checkpoint directory needed.
-    *   - **No storage growth.** The previous round's RDD is unpersisted as
-    *     soon as the new one is materialized; RDD lineage stays intact, so
-    *     an eviction recomputes rather than fails. The edges table is
-    *     persisted pre-partitioned on the join key so rounds reuse its
-    *     shuffle. The final round's RDD is registered with [[Caches]] for
-    *     release after the consumer's action.
+    *   - **Flat lineage, no storage growth.** [[Fixpoint]] materializes
+    *     each round as a re-wrapped DataFrame leaf (a constant-depth plan
+    *     per round) and releases the previous one as soon as the new one
+    *     is filled. The edges table is persisted pre-partitioned on the
+    *     join key so rounds reuse its shuffle.
     *
     * Accumulator caveat: task retries can overcount `changed`, which at
     * worst runs one extra (no-op) round — labels are monotonically
@@ -1113,7 +1108,6 @@ object Dedup {
     * (O(log²) rounds, diameter-independent). */
   def nearDupClusters(df: DataFrame, idCol: String, pairs: DataFrame,
       maxIter: Int = 20, strict: Boolean = false): DataFrame = {
-    val spark = df.sparkSession
     val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     // symmetrized edges, hash-partitioned on the lookup side so the
     // per-round frontier join reuses this one shuffle
@@ -1123,18 +1117,16 @@ object Dedup {
         .repartition(col("id_b"))
         .persist(lvl))
     // per-round schema: (__id__, __label__, __changed__)
-    var cur: DataFrame = df.select(col(idCol).as("__id__"),
+    val init = df.select(col(idCol).as("__id__"),
       col(idCol).as("__label__"), lit(true).as("__changed__"))
-    var prevRdd: Option[org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow]] = None
-    var iter = 0
-    var converged = false
-    while (iter < maxIter && !converged) {
+    val res = Fixpoint.converge("nearDupClusters", init, maxIter,
+        Fixpoint.Watch.Flag("__changed__"), Fixpoint.Budget(strict)) { (cur, _) =>
       val labels = cur.select(col("__id__"), col("__label__"))
       val frontier = cur.filter(col("__changed__")).select(col("__id__"), col("__label__"))
       val neighborMin = edges
         .join(frontier, edges("id_b") === frontier("__id__"))
         .groupBy(col("id_a")).agg(min(col("__label__")).as("__nmin__"))
-      val updated = labels
+      labels
         .join(neighborMin, labels("__id__") === neighborMin("id_a"), "left_outer")
         .select(col("__id__"),
           least(col("__label__"), coalesce(col("__nmin__"), col("__label__")))
@@ -1142,30 +1134,8 @@ object Dedup {
           (coalesce(col("__nmin__"), col("__label__")) < col("__label__"))
             .as("__changed__"))
         .withColumnRenamed("__newlabel__", "__label__")
-      val schema = updated.schema
-      val chOrd = schema.fieldIndex("__changed__")
-      val acc = spark.sparkContext.longAccumulator(s"graft.cc.changed.$iter")
-      val rdd = org.apache.spark.sql.GraftSqlBridge.toInternalRdd(updated)
-        .mapPartitions { it =>
-          it.map { r => if (r.getBoolean(chOrd)) acc.add(1L); r.copy() }
-        }.persist(lvl)
-      rdd.count() // the round's single action: materialize + count changes
-      prevRdd.foreach(_.unpersist(blocking = false))
-      prevRdd = Some(rdd)
-      cur = org.apache.spark.sql.GraftSqlBridge.internalCreateDataFrame(spark, rdd, schema)
-      converged = acc.value == 0L
-      iter += 1
     }
-    // edges was registered with Caches at creation — the consumer's
-    // releaseAll frees it (no manual double-release)
-    if (!converged) {
-      val msg = s"nearDupClusters did not converge in $maxIter rounds " +
-        "(component diameter exceeds maxIter); labels are not a fixpoint"
-      if (strict) throw new IllegalStateException(msg)
-      org.slf4j.LoggerFactory.getLogger(getClass).warn(msg)
-    }
-    prevRdd.foreach(Caches.registerRdd(_))
-    cur.select(col("__id__").as(idCol), col("__label__").as("cluster"))
+    res.state.select(col("__id__").as(idCol), col("__label__").as("cluster"))
   }
 
   /** Connected components by ALTERNATING large-star / small-star
@@ -1181,33 +1151,20 @@ object Dedup {
     *    smaller neighbors re-attach to the smallest.
     * Both are one groupBy-min + one join per phase — no per-node
     * neighbor lists are ever collected, so hot nodes cannot blow memory.
-    * Each round materializes through the same flat-lineage re-wrap as
-    * the frontier loop (constant-depth plans), persists via [[Caches]]
-    * discipline, and takes ONE action (count + edge-hash fingerprint in
-    * a single agg) to test convergence: the edge set is stable exactly
-    * when (count, Σ xxhash64) repeats — the sum is exact decimal, so a
-    * false "converged" needs a 64-bit multiset hash collision. */
+    * The rounds run as a watched [[Fixpoint.converge]] loop like the
+    * frontier loop's, and each takes ONE action: the count that
+    * materializes the round also sums its edge fingerprint. The edge set
+    * is stable exactly when (count, Σ xxhash64) repeats, so a false
+    * "converged" needs a 64-bit multiset hash collision. */
   def nearDupClustersAlternating(df: DataFrame, idCol: String, pairs: DataFrame,
       maxRounds: Int = 30, strict: Boolean = false): DataFrame = {
-    val spark = df.sparkSession
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    import org.apache.spark.sql.GraftSqlBridge.{toInternalRdd, internalCreateDataFrame}
-
-    // lazy flat-lineage wrap; the caller's next action materializes it
-    def wrap(d: DataFrame): (DataFrame, org.apache.spark.rdd.RDD[_]) = {
-      val rdd = toInternalRdd(d).map(_.copy()).persist(lvl)
-      (internalCreateDataFrame(spark, rdd, d.schema), rdd)
-    }
-
     // directed big→small canonical form, self-loops dropped
-    var (edges, curRdd) = wrap(
-      pairs.select(greatest(col("id_a"), col("id_b")).as("u"),
+    val init = pairs.select(greatest(col("id_a"), col("id_b")).as("u"),
         least(col("id_a"), col("id_b")).as("v"))
-        .filter(col("u") =!= col("v")).distinct())
-    var fingerprint: (Long, java.math.BigDecimal) = null
-    var round = 0
-    var converged = false
-    while (round < maxRounds && !converged) {
+      .filter(col("u") =!= col("v")).distinct()
+    val res = Fixpoint.converge("nearDupClustersAlternating", init,
+        maxRounds, Fixpoint.Watch.Fingerprint,
+        Fixpoint.Budget(strict)) { (edges, _) =>
       // r14 (guide §2.4): both star phases are per-group MINs emitted
       // back onto every group row — a WINDOW shape, not a groupBy+join
       // one. Each phase now pays ONE exchange (hash on u, window min
@@ -1233,7 +1190,7 @@ object Dedup {
       // v = m — afterLarge is not deduped, so that may fire several
       // times per group, which the terminal distinct collapses exactly
       // like the old union(smins) leg did (set-identical output).
-      val afterSmall = afterLarge
+      afterLarge
         .withColumn("m", min(col("v")).over(wU))
         .select(explode(when(col("v") === col("m"),
             array(struct(col("v").as("u"), col("m").as("v")),
@@ -1243,31 +1200,9 @@ object Dedup {
         .select(col("__e__.u").as("u"), col("__e__.v").as("v"))
         .filter(col("u") =!= col("v"))
         .distinct()
-
-      val (nextEdges, nextRdd) = wrap(afterSmall)
-      // the round's single action: materializes the new edge set AND
-      // computes the convergence fingerprint
-      val fp = nextEdges.agg(count(lit(1)).as("n"),
-        sum(xxhash64(col("u"), col("v")).cast("decimal(38,0)")).as("h"))
-        .collect()(0)
-      curRdd.unpersist(blocking = false)
-      edges = nextEdges
-      curRdd = nextRdd
-      val next = (fp.getLong(0), fp.getDecimal(1))
-      converged = fingerprint != null && fingerprint._1 == next._1 &&
-        (fingerprint._2 == next._2 ||
-          (fingerprint._2 != null && fingerprint._2.compareTo(next._2) == 0))
-      fingerprint = next
-      round += 1
     }
-    if (!converged) {
-      val msg = s"nearDupClustersAlternating did not converge in $maxRounds rounds"
-      if (strict) throw new IllegalStateException(msg)
-      org.slf4j.LoggerFactory.getLogger(getClass).warn(msg)
-    }
-    Caches.registerRdd(curRdd) // final round released by the consumer
     // converged edges form stars: every non-root points at its root
-    val labels = edges.groupBy(col("u")).agg(min(col("v")).as("cluster"))
+    val labels = res.state.groupBy(col("u")).agg(min(col("v")).as("cluster"))
     df.select(col(idCol).as("__id__"))
       .join(labels, col("__id__") === col("u"), "left_outer")
       .select(col("__id__").as(idCol),

@@ -30,24 +30,18 @@ object Graph {
     * contributions partial-aggregate map-side, and the new rank table is
     * a left join back to the node set. Parallel edges each carry a
     * contribution (multi-edge = weight); the node and degree tables are
-    * computed once outside the loop. Fixed `iters` keeps the lineage
-    * bounded; checkpoint between iterations for deep runs.
+    * computed once outside the loop. The rounds run through
+    * [[Fixpoint.unrolled]]: lazy, with the lineage cut every
+    * [[Fixpoint.CutEvery]] rounds for deep runs.
     *
     * Returns `(node, rank_micros)`. Long arithmetic holds while
     * `dampNum · total_mass` fits 2^63 — with mass ≈ nodes·1e6, safe past
     * 10^11 nodes. */
   def pageRank(edges: DataFrame, srcCol: String, dstCol: String,
       iters: Int = 3, dampNum: Long = 85, dampDen: Long = 100,
-      scale: Long = 1000000L,
-      /** Truncate the rank table's lineage with a `localCheckpoint`
-        * every N iterations: the unrolled loop otherwise grows the plan
-        * linearly in `iters` (3 rounds is fine; 10+ pays quadratic
-        * analysis time and risks planner stack depth). 0 disables —
-        * ranks stay bit-identical either way, only the plan changes. */
-      checkpointEvery: Int = 5): DataFrame = {
+      scale: Long = 1000000L): DataFrame = {
     require(iters >= 1 && dampDen > 0 && dampNum >= 0 && dampNum <= dampDen,
       "need iters >= 1 and 0 <= dampNum <= dampDen")
-    require(checkpointEvery >= 0, "checkpointEvery must be >= 0")
     val e = edges.select(col(srcCol).cast("long").as("__src__"),
       col(dstCol).cast("long").as("__dst__"))
     // the loop-invariant tables are PERSISTED (registered with the
@@ -70,24 +64,18 @@ object Graph {
     // on the contribution side. Bit-identical ranks (exact integer
     // algebra on which rows are materialized, not on values); the dense
     // fill happens ONCE on the final output.
-    var ranks: DataFrame = null
-    for (i <- 1 to iters) {
-      val contribs =
-        if (i == 1) ew.select(col("__dst__"),
-          expr(s"${scale}L div __od__").as("__c__"))
-        else ew
-          .join(ranks, ew("__src__") === ranks("node"), "left")
-          .select(col("__dst__"),
-            expr(s"coalesce(rank_micros, ${base}L) div __od__").as("__c__"))
-      ranks = contribs
-        .groupBy(col("__dst__")).agg(sum(col("__c__")).as("__s__"))
-        .select(col("__dst__").as("node"),
-          (lit(base) + expr(s"($dampNum * __s__) div $dampDen"))
-            .as("rank_micros"))
-      if (checkpointEvery > 0 && i % checkpointEvery == 0 && i < iters)
-        // eager local checkpoint: materializes this round's rank table
-        // on the executors and restarts lineage from it
-        ranks = ranks.localCheckpoint()
+    def update(contribs: DataFrame) = contribs
+      .groupBy(col("__dst__")).agg(sum(col("__c__")).as("__s__"))
+      .select(col("__dst__").as("node"),
+        (lit(base) + expr(s"($dampNum * __s__) div $dampDen"))
+          .as("rank_micros"))
+    val first = update(ew.select(col("__dst__"),
+      expr(s"${scale}L div __od__").as("__c__")))
+    val ranks = Fixpoint.unrolled("pageRank", first, iters) { ranks =>
+      update(ew
+        .join(ranks, ew("__src__") === ranks("node"), "left")
+        .select(col("__dst__"),
+          expr(s"coalesce(rank_micros, ${base}L) div __od__").as("__c__")))
     }
     nodes.join(ranks, Seq("node"), "left")
       .select(col("node"),
@@ -214,49 +202,60 @@ object Graph {
     *
     * Shape per round: one partial-aggregable degree count (node, deg —
     * never neighbor lists) + two semi-joins of the edge list against
-    * the |survivors| keep-set; lineage bounded by `rounds`, optional
-    * localCheckpoint for deep peels. Returns (node, degree). */
+    * the |survivors| keep-set; rounds run lazily through
+    * [[Fixpoint.unrolled]]. Returns (node, degree). */
   def kCorePeel(edges: DataFrame, srcCol: String, dstCol: String,
-      k: Int, rounds: Int, checkpointEvery: Int = 5): DataFrame = {
+      k: Int, rounds: Int): DataFrame = {
     require(k >= 1 && rounds >= 1, s"need k >= 1, rounds >= 1")
-    require(checkpointEvery >= 0, "checkpointEvery must be >= 0")
+    val peel = kCoreRound(k) _
+    kCoreDegrees(Fixpoint.unrolled("kCorePeel",
+      peel(canonicalEdges(edges, srcCol, dstCol)), rounds)(peel))
+  }
+
+  /** Distinct undirected non-loop edges as (`__a__` < `__b__`). */
+  private def canonicalEdges(edges: DataFrame, srcCol: String,
+      dstCol: String): DataFrame = {
     val und = edges.select(col(srcCol).cast("long").as("__a__"),
         col(dstCol).cast("long").as("__b__"))
       .filter(col("__a__") =!= col("__b__"))
-    var e = und.select(least(col("__a__"), col("__b__")).as("__a__"),
+    und.select(least(col("__a__"), col("__b__")).as("__a__"),
       greatest(col("__a__"), col("__b__")).as("__b__")).distinct()
-    def degrees(ed: DataFrame) =
-      ed.select(col("__a__").as("__n__"))
-        .unionAll(ed.select(col("__b__").as("__n__")))
-        .groupBy(col("__n__")).agg(count(lit(1)).as("__dg__"))
-    for (i <- 1 to rounds) {
-      val keep = degrees(e).filter(col("__dg__") >= k).select(col("__n__"))
-      e = e.join(keep.select(col("__n__").as("__a__")), Seq("__a__"),
-          "left_semi")
-        .join(keep.select(col("__n__").as("__b__")), Seq("__b__"),
-          "left_semi")
-      if (checkpointEvery > 0 && i % checkpointEvery == 0 && i < rounds)
-        e = e.localCheckpoint()
-    }
-    degrees(e).select(col("__n__").as("node"), col("__dg__").as("degree"))
   }
+
+  private def degrees(ed: DataFrame) =
+    ed.select(col("__a__").as("__n__"))
+      .unionAll(ed.select(col("__b__").as("__n__")))
+      .groupBy(col("__n__")).agg(count(lit(1)).as("__dg__"))
+
+  /** One peel: keep the edges whose both ends have degree >= k. */
+  private def kCoreRound(k: Int)(e: DataFrame): DataFrame = {
+    val keep = degrees(e).filter(col("__dg__") >= k).select(col("__n__"))
+    e.join(keep.select(col("__n__").as("__a__")), Seq("__a__"), "left_semi")
+      .join(keep.select(col("__n__").as("__b__")), Seq("__b__"), "left_semi")
+  }
+
+  private def kCoreDegrees(e: DataFrame): DataFrame =
+    degrees(e).select(col("__n__").as("node"), col("__dg__").as("degree"))
+
+  /** A fixpoint loop's two record columns: `converged` and
+    * `rounds_effective` (its first round that changed nothing, null when
+    * none did). */
+  private def withFixpoint(df: DataFrame, res: Fixpoint.Result): DataFrame =
+    df.withColumn("converged", lit(res.converged))
+      .withColumn("rounds_effective",
+        res.stableRound.fold(lit(null).cast("int"))(lit(_)))
 
   /** [[kCorePeel]] with the fixpoint SURFACED: fixed-round peeling is
     * the right call for replayability, but the caller could not see
     * whether `rounds` actually reached the k-core or stopped mid-peel.
-    * Peeling only ever REMOVES edges, so "edge count unchanged between
-    * consecutive rounds" is exactly "edge set unchanged" is exactly
-    * "fixpoint" — no label fingerprint needed. Every row carries
+    * The same peel runs as a watched [[Fixpoint.converge]] loop until a
+    * round changes nothing (peeling only ever REMOVES edges, so an
+    * unchanged edge count is an unchanged edge set is the fixpoint, and
+    * every later round would reproduce it). Every row carries
     *   `converged`        — true iff some round removed nothing,
     *   `rounds_effective` — the FIRST such round (null if never inside
     *                        the budget);
     * the `(node, degree)` values are bit-identical to [[kCorePeel]]'s.
-    *
-    * Cost of the telemetry: one single-row count per round (unioned,
-    * rounds+1 rows total, lag over that micro-table) broadcast back
-    * onto the result; each round's edge table is lazily
-    * `localCheckpoint`ed because two consumers (next round + its count)
-    * would otherwise double the lineage per round.
     *
     * Empty-core caveat: the telemetry rides RESULT rows, so when
     * peeling empties the graph (no k-core exists) the output is zero
@@ -269,40 +268,10 @@ object Graph {
   def kCorePeelConverged(edges: DataFrame, srcCol: String, dstCol: String,
       k: Int, rounds: Int): DataFrame = {
     require(k >= 1 && rounds >= 1, s"need k >= 1, rounds >= 1")
-    val und = edges.select(col(srcCol).cast("long").as("__a__"),
-        col(dstCol).cast("long").as("__b__"))
-      .filter(col("__a__") =!= col("__b__"))
-    var e = und.select(least(col("__a__"), col("__b__")).as("__a__"),
-      greatest(col("__a__"), col("__b__")).as("__b__")).distinct()
-      .localCheckpoint(false)
-    def degrees(ed: DataFrame) =
-      ed.select(col("__a__").as("__n__"))
-        .unionAll(ed.select(col("__b__").as("__n__")))
-        .groupBy(col("__n__")).agg(count(lit(1)).as("__dg__"))
-    def edgeCount(ed: DataFrame, round: Int) =
-      ed.agg(count(lit(1)).as("__m__"))
-        .select(lit(round).as("__round__"), col("__m__"))
-    var counts = Seq(edgeCount(e, 0))
-    for (i <- 1 to rounds) {
-      val keep = degrees(e).filter(col("__dg__") >= k).select(col("__n__"))
-      e = e.join(keep.select(col("__n__").as("__a__")), Seq("__a__"),
-          "left_semi")
-        .join(keep.select(col("__n__").as("__b__")), Seq("__b__"),
-          "left_semi")
-        .localCheckpoint(false)
-      counts = counts :+ edgeCount(e, i)
-    }
-    // rounds+1 single-row tables: the un-partitioned window is over a
-    // micro-table, never data-sized
-    val w = org.apache.spark.sql.expressions.Window.orderBy(col("__round__"))
-    val conv = counts.reduce(_ unionAll _)
-      .withColumn("__prev__", lag(col("__m__"), 1).over(w))
-      .filter(col("__prev__").isNotNull && col("__m__") === col("__prev__"))
-      .agg(min(col("__round__")).cast("int").as("rounds_effective"))
-      .withColumn("converged", col("rounds_effective").isNotNull)
-    degrees(e).select(col("__n__").as("node"), col("__dg__").as("degree"))
-      .crossJoin(broadcast(conv.select(col("converged"),
-        col("rounds_effective"))))
+    val res = Fixpoint.converge("kCorePeelConverged",
+      canonicalEdges(edges, srcCol, dstCol), rounds,
+      Fixpoint.Watch.Fingerprint)((e, _) => kCoreRound(k)(e))
+    withFixpoint(kCoreDegrees(res.state), res)
   }
 
   /** Degree assortativity of the undirected simple graph — "do hubs
@@ -368,57 +337,53 @@ object Graph {
     * joins the label table on the neighbor key, per-(node, label)
     * counts partial-aggregate map-side, and the arg-max collapses with
     * `min_by(label, (-count, label))` — two partial-aggregable levels,
-    * no window, nothing keyed on a hot label. Returns (node, label). */
+    * no window, nothing keyed on a hot label. Rounds run lazily through
+    * [[Fixpoint.unrolled]]. Returns (node, label). */
   def labelPropagation(edges: DataFrame, srcCol: String, dstCol: String,
-      iters: Int = 3, checkpointEvery: Int = 5): DataFrame = {
+      iters: Int = 3): DataFrame = {
     require(iters >= 1, "need iters >= 1")
-    require(checkpointEvery >= 0, "checkpointEvery must be >= 0")
-    val und = edges.select(col(srcCol).cast("long").as("__a__"),
-        col(dstCol).cast("long").as("__b__"))
-      .filter(col("__a__") =!= col("__b__"))
-    val pairs = und.select(least(col("__a__"), col("__b__")).as("__a__"),
-      greatest(col("__a__"), col("__b__")).as("__b__")).distinct()
+    val (labels, round) = lpaStart(edges, srcCol, dstCol)
+    Fixpoint.unrolled("labelPropagation", round(labels), iters)(round)
+  }
+
+  /** Round-0 labels (every node its own) and the synchronous LPA round
+    * over the persisted undirected adjacency. */
+  private def lpaStart(edges: DataFrame, srcCol: String, dstCol: String)
+      : (DataFrame, DataFrame => DataFrame) = {
+    val pairs = canonicalEdges(edges, srcCol, dstCol)
     val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val adj = Caches.registerDf(
       pairs.select(col("__a__").as("__n__"), col("__b__").as("__m__"))
         .unionAll(pairs.select(col("__b__").as("__n__"),
           col("__a__").as("__m__"))).persist(lvl))
-    var labels = adj.select(col("__n__").as("node")).distinct()
+    val labels = adj.select(col("__n__").as("node")).distinct()
       .withColumn("label", col("node"))
-    for (i <- 1 to iters) {
-      labels = adj
-        .join(labels.select(col("node").as("__m__"), col("label")),
-          Seq("__m__"))
-        .groupBy(col("__n__"), col("label"))
-        .agg(count(lit(1)).as("__c__"))
-        .groupBy(col("__n__"))
-        .agg(min_by(col("label"),
-          struct((-col("__c__")).as("nc"), col("label").as("lb")))
-          .as("label"))
-        .select(col("__n__").as("node"), col("label"))
-      if (checkpointEvery > 0 && i % checkpointEvery == 0 && i < iters)
-        labels = labels.localCheckpoint()
-    }
-    labels
+    def round(labels: DataFrame): DataFrame = adj
+      .join(labels.select(col("node").as("__m__"), col("label")),
+        Seq("__m__"))
+      .groupBy(col("__n__"), col("label"))
+      .agg(count(lit(1)).as("__c__"))
+      .groupBy(col("__n__"))
+      .agg(min_by(col("label"),
+        struct((-col("__c__")).as("nc"), col("label").as("lb")))
+        .as("label"))
+      .select(col("__n__").as("node"), col("label"))
+    (labels, round)
   }
 
   /** [[labelPropagation]] with the fixpoint SURFACED. Fixed-iteration
     * LPA is deterministic and replayable, but synchronous LPA can
     * 2-cycle forever (the classic bipartite oscillation) and the caller
-    * could not tell "stable communities" from "still flipping". A round
-    * whose update changes NO label is a verified fixpoint (the update is
-    * a deterministic function of the labels, so an unchanged input
-    * reproduces itself every round after). Every output row carries
+    * could not tell "stable communities" from "still flipping". The same
+    * round runs as a watched [[Fixpoint.converge]] loop until a round
+    * changes no label (the update is a deterministic function of the
+    * labels, so an unchanged input reproduces itself every round after;
+    * the round's (rows, Σ xxhash64) fingerprint, counted in the round's
+    * one action, tells). Every output row carries
     *   `converged`        — true iff some round changed nothing,
     *   `rounds_effective` — the first such round (null when the budget
     *                        ran out mid-flip — e.g. the 2-cycle);
     * label values are bit-identical to [[labelPropagation]]'s.
-    *
-    * Telemetry cost: per round one |nodes|-row equi-join of the new
-    * labels against the previous round's (same hash partitioning as the
-    * update join) collapsed to a single changed-count row; the per-round
-    * label tables are lazily `localCheckpoint`ed since each now has two
-    * consumers (next round + the diff).
     *
     * Edgeless-input caveat: with no edges there are no nodes, so the
     * output is zero rows and the telemetry is not observable from it
@@ -429,46 +394,10 @@ object Graph {
   def labelPropagationConverged(edges: DataFrame, srcCol: String,
       dstCol: String, iters: Int = 3): DataFrame = {
     require(iters >= 1, "need iters >= 1")
-    val und = edges.select(col(srcCol).cast("long").as("__a__"),
-        col(dstCol).cast("long").as("__b__"))
-      .filter(col("__a__") =!= col("__b__"))
-    val pairs = und.select(least(col("__a__"), col("__b__")).as("__a__"),
-      greatest(col("__a__"), col("__b__")).as("__b__")).distinct()
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val adj = Caches.registerDf(
-      pairs.select(col("__a__").as("__n__"), col("__b__").as("__m__"))
-        .unionAll(pairs.select(col("__b__").as("__n__"),
-          col("__a__").as("__m__"))).persist(lvl))
-    var labels = adj.select(col("__n__").as("node")).distinct()
-      .withColumn("label", col("node"))
-      .localCheckpoint(false)
-    var diffs = Seq.empty[DataFrame]
-    for (i <- 1 to iters) {
-      val next = adj
-        .join(labels.select(col("node").as("__m__"), col("label")),
-          Seq("__m__"))
-        .groupBy(col("__n__"), col("label"))
-        .agg(count(lit(1)).as("__c__"))
-        .groupBy(col("__n__"))
-        .agg(min_by(col("label"),
-          struct((-col("__c__")).as("nc"), col("label").as("lb")))
-          .as("label"))
-        .select(col("__n__").as("node"), col("label"))
-        .localCheckpoint(false)
-      diffs = diffs :+ next
-        .join(labels.select(col("node"), col("label").as("__pl__")),
-          Seq("node"))
-        .filter(col("label") =!= col("__pl__"))
-        .agg(count(lit(1)).as("__chg__"))
-        .select(lit(i).as("__round__"), col("__chg__"))
-      labels = next
-    }
-    val conv = diffs.reduce(_ unionAll _)
-      .agg(min(when(col("__chg__") === 0, col("__round__"))).cast("int")
-        .as("rounds_effective"))
-      .withColumn("converged", col("rounds_effective").isNotNull)
-    labels.crossJoin(broadcast(conv.select(col("converged"),
-      col("rounds_effective"))))
+    val (labels, round) = lpaStart(edges, srcCol, dstCol)
+    val res = Fixpoint.converge("labelPropagationConverged", labels, iters,
+      Fixpoint.Watch.Fingerprint)((l, _) => round(l))
+    withFixpoint(res.state, res)
   }
 
   /** HITS hubs-and-authorities over `(srcCol, dstCol)` edges,
@@ -491,27 +420,27 @@ object Graph {
     * key), per-node sums partial-aggregate map-side, and the max is a
     * single-row aggregate broadcast back — nothing keyed on a hot
     * value. Each half-step's raw-sum table is consumed TWICE (its own
-    * max and the renormalization), so it is persisted, and every
-    * `checkpointEvery` iterations both |nodes|-row score tables are
-    * `localCheckpoint`ed — the Pregel superstep barrier. The default is
-    * EVERY iteration, and that is a MEASURED decision, not caution:
+    * max and the renormalization), so it is persisted, and the hub table
+    * is cut by [[Fixpoint.unrolled]] after EVERY iteration but the last
+    * ([[Fixpoint.CutEachRound]]) — the Pregel superstep barrier. That is
+    * a MEASURED decision, not caution:
     * unlike [[pageRank]]'s linear lineage, the mutual recurrence
     * multiplies the plan tree per half-step (a 6-iteration
-    * uncheckpointed run OOMs the planner's explain string before any
+    * uncut run OOMs the planner's explain string before any
     * data moves), and even at 3 iterations letting the tree compound
     * costs 8× wall on the 997-node stress graph (92.8 s vs 11.5 s —
     * planning/AQE on the compounded tree dwarfs the per-iteration
     * barrier jobs it saves). Scores are bit-identical at any cadence.
+    * Only hub is cut: auth's next-iteration lineage roots at the hub cut
+    * (auth_{i+1} = f(hub_i)), so the tree still cannot compound.
     * Parallel edges are collapsed; self-loops kept (HITS is
     * well-defined with them). Nodes with no in-edges hold authority 0,
     * no out-edges hub 0.
     *
     * Returns `(node, hub_micros, auth_micros)`. */
   def hits(edges: DataFrame, srcCol: String, dstCol: String,
-      iters: Int = 3, scale: Long = 1000000L,
-      checkpointEvery: Int = 1): DataFrame = {
+      iters: Int = 3, scale: Long = 1000000L): DataFrame = {
     require(iters >= 1 && scale >= 1, "need iters >= 1 and scale >= 1")
-    require(checkpointEvery >= 1, "checkpointEvery must be >= 1")
     val e0 = edges.select(col(srcCol).cast("long").as("__src__"),
       col(dstCol).cast("long").as("__dst__")).distinct()
     val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
@@ -542,24 +471,18 @@ object Graph {
         .select(col("node"),
           expr(s"(__raw__ * $scale) div __mx__").as(outCol))
     }
-    var hub = nodes.withColumn("hub_micros", lit(scale))
-    var auth = nodes.withColumn("auth_micros", lit(scale))
-    for (i <- 1 to iters) {
+    // the last iteration's authorities, read by the output join
+    var auth: DataFrame = null
+    def iteration(hub: DataFrame): DataFrame = {
       auth = halfStep(hub.select(col("node"),
           col("hub_micros").as("__s__")),
         "__src__", "__dst__", "auth_micros")
-      hub = halfStep(auth.select(col("node"),
-          col("auth_micros").as("__s__")),
+      halfStep(auth.select(col("node"), col("auth_micros").as("__s__")),
         "__dst__", "__src__", "hub_micros")
-      if (i % checkpointEvery == 0 && i < iters) {
-        // r14: checkpoint only HUB — auth's next-iteration lineage roots
-        // at the hub checkpoint (auth_{i+1} = f(hub_i^ckpt)), so the
-        // tree still cannot compound, and one of the two per-iteration
-        // barrier actions (plus its stages) disappears. The raw-sum
-        // persists keep each half-step's aggregate single-computed.
-        hub = hub.localCheckpoint()
-      }
     }
+    val hub = Fixpoint.unrolled("hits",
+      iteration(nodes.withColumn("hub_micros", lit(scale))), iters,
+      Fixpoint.CutEachRound)(iteration)
     nodes.join(hub, Seq("node"), "left").join(auth, Seq("node"), "left")
       .select(col("node"),
         coalesce(col("hub_micros"), lit(0L)).as("hub_micros"),

@@ -3046,12 +3046,12 @@ object Profiling {
         .groupBy(col("i"), col("j")).agg(count(lit(1)).as("n"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     val wins = d.groupBy(col("__w__").as("i")).agg(count(lit(1)).as("w"))
-    var s = pairs.groupBy(col("i"))
+    val s0 = pairs.groupBy(col("i"))
       .agg(sum(col("n")).as("n_duels"))
       .join(wins, Seq("i"), "left")
       .select(col("i"), coalesce(col("w"), lit(0L)).as("wins"),
         col("n_duels"), lit(1.0).as("s"))
-    for (_ <- 1 to iters) {
+    def iteration(s: DataFrame): DataFrame = {
       val sj = s.select(col("i").as("j"), col("s").as("__sj__"))
       val denom = pairs
         .join(s.select(col("i"), col("s").as("__si__")), Seq("i"))
@@ -3066,16 +3066,18 @@ object Profiling {
             col("__si__") + col("__sj__")).as("t")))).as("__ts__"))
         .select(col("i"), aggregate(col("__ts__"), lit(0.0),
           (acc, x) => acc + x.getField("t")).as("__d__"))
-      s = s.drop("s").join(denom, Seq("i"))
+      s.drop("s").join(denom, Seq("i"))
         .select(col("i"), col("wins"), col("n_duels"),
           coalesce(try_divide(col("wins").cast("double"), col("__d__")),
             lit(0.0)).as("s"))
-        // s feeds the next iteration TWICE (as si and sj), so an
-        // uncheckpointed recurrence doubles the plan per iteration
-        // (2^iters subtrees — the hits-documented planner blowup);
-        // the |players|-row barrier is cheap and value-neutral
-        .localCheckpoint()
     }
+    // s feeds the next iteration TWICE (as si and sj), and the output
+    // twice, so an uncut recurrence doubles the plan per iteration
+    // (2^iters subtrees — the hits-documented planner blowup): every
+    // iteration is cut, the last one too; the |players|-row cut is cheap
+    // and value-neutral
+    val s = Fixpoint.unrolled("btStrengths", iteration(s0), iters,
+      Fixpoint.CutEachRound, cutLast = true)(iteration)
     val tot = s
       .agg(sort_array(collect_list(struct(col("i"), col("s").as("t"))))
         .as("__ss__"))

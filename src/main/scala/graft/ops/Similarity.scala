@@ -126,177 +126,93 @@ object Similarity {
     * twice — the standard rerank between ANN retrieval and a training
     * batch / RAG context.
     *
-    * Scale shape (INCREMENTAL max-sim): the running max-similarity to
-    * the selected set is a MATERIALIZED `__ms__` column, not a
-    * recomputed expression — round r folds exactly ONE new cosine
-    * (against the vector picked at r−1, a literal) via
-    * `greatest(prev_ms, new_sim)`, which is value-identical to the
-    * full `greatest(sim_1..sim_{r-1})` recompute because `greatest`
-    * (max over non-null values, null iff all null) is associative.
-    * So the whole selection reads |C|·k sims TOTAL where the naive
-    * recompute reads |C|·k²/2; each round is ONE single-row argmax
-    * collect — `max(struct(mmr, -id, rel, ms, v))` carries every field
-    * the driver needs, so there is no second per-round lookup pass.
-    * Lineage is cut by `localCheckpoint` every `checkpointEvery`
-    * rounds. No candidate-candidate self-join ever forms.
+    * [[mmrSelectGrouped]] over one constant group: no loop of its own.
     * [[mmrSelectRecompute]] keeps the direct formulation as the
     * executable spec (OpsSpec asserts incremental ≡ recompute).
     *
-    * Returns selection-ordered `(rank, <idCol>, relevance,
-    * max_sim_prev, mmr)` — max_sim_prev is NULL for rank 1, doubles
-    * rounded to 6 (the float export posture). Stops early when
-    * candidates run out. The vector column is pinned to `array<float>`
-    * up front, so an `array<double>` input works instead of
-    * class-casting mid-loop. */
+    * Returns `(rank, <idCol>, relevance, max_sim_prev, mmr)` ordered by
+    * rank — max_sim_prev is NULL for rank 1, doubles rounded to 6 (the
+    * float export posture). Stops early when candidates run out. The
+    * vector column is pinned to `array<float>` up front, so an
+    * `array<double>` input works instead of class-casting mid-loop. */
   def mmrSelect(vecs: DataFrame, idCol: String, vecCol: String,
-      relCol: String, k: Int, lamNum: Long = 7, lamDen: Long = 10,
-      checkpointEvery: Int = 8): DataFrame = {
-    require(k >= 1, s"k must be >= 1, got $k")
-    require(lamDen > 0 && lamNum >= 0 && lamNum <= lamDen,
-      s"need 0 <= lamNum <= lamDen, got $lamNum/$lamDen")
-    require(checkpointEvery >= 1, "checkpointEvery must be >= 1")
-    val spark = vecs.sparkSession
-    import spark.implicits._
-    // materialize once; each round's greatest-fold layers on top
-    var cur = vecs.select(
-        col(idCol).cast("long").as("__id__"),
-        col(vecCol).cast("array<float>").as("__v__"),
-        col(relCol).cast("double").as("__r__"))
-      .filter(col("__r__").isNotNull)
-      .withColumn("__ms__", lit(null).cast("double"))
-      .localCheckpoint()
-    // (id, rel, maxSimPrev, mmr) in selection order
-    var selected = Vector.empty[(Long, Double, Option[Double], Double)]
-    var lastVec: Seq[Float] = null
-    var exhausted = false
-    for (r <- 1 to k if !exhausted) {
-      if (lastVec != null) {
-        cur = cur
-          .filter(col("__id__") =!= selected.last._1)
-          .withColumn("__ms__", greatest(col("__ms__"),
-            cosine(col("__v__"), array(lastVec.map(x => lit(x)): _*))))
-        if (r % checkpointEvery == 0) cur = cur.localCheckpoint()
-      }
-      val score = (lit(lamNum) * col("__r__") -
-        lit(lamDen - lamNum) * coalesce(col("__ms__"), lit(0.0))) /
-        lit(lamDen)
-      // one argmax struct carries (mmr, id, rel, ms, vec): ONE collect
-      // per round; (m, nid) alone decide the order (ids are unique)
-      val best = cur.withColumn("__mmr__", score)
-        .agg(max(struct(col("__mmr__").as("m"), (-col("__id__")).as("nid"),
-          col("__r__").as("rel"), col("__ms__").as("ms"),
-          col("__v__").as("v"))).as("__b__"))
-        .select(col("__b__.m"), col("__b__.nid"), col("__b__.rel"),
-          col("__b__.ms"), col("__b__.v")).collect().head
-      if (best.isNullAt(0)) exhausted = true
-      else {
-        selected = selected :+ ((-best.getLong(1), best.getDouble(2),
-          if (best.isNullAt(3)) None else Some(best.getDouble(3)),
-          best.getDouble(0)))
-        lastVec = best.getSeq[Float](4)
-      }
-    }
-    def r6(x: Double) = java.math.BigDecimal.valueOf(x)
-      .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
-    selected.zipWithIndex.map { case ((id, rel, ms, mmr), i) =>
-      (i + 1, id, r6(rel), ms.map(r6), r6(mmr))
-    }.toDF("rank", "__pick__", "relevance", "max_sim_prev", "mmr")
-      .select(col("rank"), col("__pick__").as(idCol), col("relevance"),
-        col("max_sim_prev"), col("mmr"))
-  }
+      relCol: String, k: Int, lamNum: Long = 7, lamDen: Long = 10)
+      : DataFrame =
+    mmrSelectGrouped(vecs.withColumn("__one__", lit(0L)), "__one__", idCol,
+        vecCol, relCol, k, lamNum, lamDen)
+      .drop("__one__").orderBy(col("rank"))
 
   /** [[mmrSelect]] run independently over every GROUP of a keyed
     * candidate table in LOCKSTEP — the serving-batch shape (one MMR
-    * rerank per retrieval query): round r computes EVERY group's argmax
-    * in one partial-aggregable `groupBy(group).max(struct)` and ONE
-    * |groups|-row collect, then folds each group's new cosine into its
-    * `__ms__` column via a broadcast join against the collected picks
-    * (a LocalRelation — no self-join against the aggregate, so plans
-    * stay linear in rounds). Value-identical per group to
-    * `mmrSelect(vecs.filter(group === g), ...)` — same argmax struct
-    * order (mmr, then smaller id), same greatest-fold, same float
-    * bits (the pick's vector rides the collect/broadcast unchanged) —
-    * OpsSpec differential-asserts the identity. Driver round trips:
-    * k TOTAL instead of |groups|·k (r13: the q381 chain spent ~70% of
-    * its wall in per-query mmrSelect round trips).
+    * rerank per retrieval query): a million-query batch reranks in k
+    * rounds, not |groups|·k driver round trips (r13: the q381 chain
+    * spent ~70% of its wall in per-query round trips).
     *
-    * Group and id columns are cast to long (the [[mmrSelect]] idCol
-    * contract). Returns `(groupCol, rank, <idCol>, relevance,
-    * max_sim_prev, mmr)`; a group stops early when its candidates run
-    * out. */
+    * Scale shape (INCREMENTAL max-sim): the candidate table carries the
+    * running max-similarity to its group's selected set as a MATERIALIZED
+    * `__ms__` column. Round r computes EVERY group's argmax
+    * `max(struct(mmr, -id, v))` in one partial-aggregable groupBy and
+    * broadcast-joins the picks back by group: the pick is marked with
+    * its rank, and every other open candidate folds exactly ONE new
+    * cosine (against its group's pick) via `greatest(prev_ms, new_sim)`,
+    * value-identical to the full `greatest(sim_1..sim_{r-1})` recompute
+    * because `greatest` (max over non-null values, null iff all null) is
+    * associative. So a selection reads |C|·k sims TOTAL where the naive
+    * recompute reads |C|·k²/2, no candidate-candidate self-join forms,
+    * and no pick vector is ever collected to the driver. The rounds run
+    * as a watched [[Fixpoint.converge]] loop: each is one count that
+    * materializes the candidate table and counts the round's picks; a
+    * round that picks nothing (every group exhausted) ends it early.
+    *
+    * Group and id columns are cast to long; `(group, id)` pairs are
+    * unique. Returns `(groupCol, rank, <idCol>, relevance, max_sim_prev,
+    * mmr)`; a group stops early when its candidates run out. */
   def mmrSelectGrouped(vecs: DataFrame, groupCol: String, idCol: String,
       vecCol: String, relCol: String, k: Int, lamNum: Long = 7,
-      lamDen: Long = 10, checkpointEvery: Int = 8): DataFrame = {
+      lamDen: Long = 10): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     require(lamDen > 0 && lamNum >= 0 && lamNum <= lamDen,
       s"need 0 <= lamNum <= lamDen, got $lamNum/$lamDen")
-    require(checkpointEvery >= 1, "checkpointEvery must be >= 1")
-    val spark = vecs.sparkSession
-    import org.apache.spark.sql.GraftSqlBridge.{toInternalRdd, internalCreateDataFrame}
-    var cur = vecs.select(
+    val score = (lit(lamNum) * col("__r__") -
+      lit(lamDen - lamNum) * coalesce(col("__ms__"), lit(0.0))) /
+      lit(lamDen)
+    // __rank__: the round that picked the row (null while open);
+    // __picked__: picked by the latest round
+    val init = vecs.select(
         col(groupCol).cast("long").as("__g__"),
         col(idCol).cast("long").as("__id__"),
         col(vecCol).cast("array<float>").as("__v__"),
         col(relCol).cast("double").as("__r__"))
       .filter(col("__r__").isNotNull)
       .withColumn("__ms__", lit(null).cast("double"))
-      .localCheckpoint()
-    // r14 (VERDICT_r13 #4 — the fully distributed end state): round r's
-    // per-group argmax is NO LONGER collected to the driver. The picks
-    // stay a DataFrame — materialized through the flat-lineage RDD wrap
-    // (one count action per round, same round-trip count as the old
-    // |groups|-row collect but O(1) driver bytes instead of
-    // O(groups·dim)) — and fold into `__ms__` via a broadcast equi-join,
-    // so a million-query serving batch reranks without the driver ever
-    // holding a pick vector. Because a group's candidate set only
-    // shrinks (one pick removed per round), a group appears in rounds
-    // 1..m consecutively and round number IS its rank. Value identity
-    // with [[mmrSelect]] is unchanged: same argmax struct order, same
-    // greatest-fold, same float bits (vectors now never leave executor
-    // rows at all), and `round(_, 6)` is the same
-    // BigDecimal.valueOf(...).setScale(6, HALF_UP) the driver-side
-    // rounding performed — OpsSpec still differential-asserts
-    // grouped ≡ per-group.
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    var rounds = Vector.empty[DataFrame]
-    var emptyShape: DataFrame = null
-    var done = false
-    for (r <- 1 to k if !done) {
-      val score = (lit(lamNum) * col("__r__") -
-        lit(lamDen - lamNum) * coalesce(col("__ms__"), lit(0.0))) /
-        lit(lamDen)
-      val picksPlan = cur.withColumn("__mmr__", score)
+      .withColumn("__rank__", lit(null).cast("int"))
+      .withColumn("__picked__", lit(false))
+    val res = Fixpoint.converge("mmrSelectGrouped", init, k,
+        Fixpoint.Watch.Flag("__picked__")) { (cur, r) =>
+      val open = col("__rank__").isNull
+      val picks = cur.filter(open).withColumn("__mmr__", score)
         .groupBy(col("__g__"))
         .agg(max(struct(col("__mmr__").as("m"), (-col("__id__")).as("nid"),
-          col("__r__").as("rel"), col("__ms__").as("ms"),
           col("__v__").as("v"))).as("__b__"))
-        .select(col("__g__"), lit(r).as("rank"),
-          (-col("__b__.nid")).as("__pick__"), col("__b__.rel").as("rel"),
-          col("__b__.ms").as("ms"), col("__b__.m").as("mmr"),
+        .select(col("__g__"), (-col("__b__.nid")).as("__pid__"),
           col("__b__.v").as("__pv__"))
-      if (emptyShape == null) emptyShape = picksPlan.limit(0)
-      val rdd = toInternalRdd(picksPlan).map(_.copy()).persist(lvl)
-      val n = rdd.count() // the round's single action
-      Caches.registerRdd(rdd)
-      if (n == 0L) done = true
-      else {
-        val picks = internalCreateDataFrame(spark, rdd, picksPlan.schema)
-        rounds = rounds :+ picks
-        if (r < k) {
-          cur = cur.join(broadcast(picks.select(col("__g__"),
-              col("__pick__").as("__pid__"), col("__pv__"))), Seq("__g__"))
-            .filter(col("__id__") =!= col("__pid__"))
-            .withColumn("__ms__", greatest(col("__ms__"),
-              cosine(col("__v__"), col("__pv__"))))
-            .drop("__pid__", "__pv__")
-          if (r % checkpointEvery == 0) cur = cur.localCheckpoint()
-        }
-      }
+      val hit = coalesce(open && col("__id__") === col("__pid__"), lit(false))
+      // the last round's fold has no reader
+      val ms = if (r == k) col("__ms__")
+        else when(open && !hit && col("__pid__").isNotNull,
+          greatest(col("__ms__"), cosine(col("__v__"), col("__pv__"))))
+          .otherwise(col("__ms__"))
+      cur.join(broadcast(picks), Seq("__g__"), "left")
+        .select(col("__g__"), col("__id__"), col("__v__"), col("__r__"),
+          ms.as("__ms__"),
+          when(hit, lit(r)).otherwise(col("__rank__")).as("__rank__"),
+          hit.as("__picked__"))
     }
-    rounds.reduceOption(_ unionByName _).getOrElse(emptyShape)
-      .select(col("__g__").as(groupCol), col("rank"),
-        col("__pick__").as(idCol), round(col("rel"), 6).as("relevance"),
-        round(col("ms"), 6).as("max_sim_prev"), round(col("mmr"), 6).as("mmr"))
+    res.state.filter(col("__rank__").isNotNull)
+      .select(col("__g__").as(groupCol), col("__rank__").as("rank"),
+        col("__id__").as(idCol), round(col("__r__"), 6).as("relevance"),
+        round(col("__ms__"), 6).as("max_sim_prev"),
+        round(score, 6).as("mmr"))
   }
 
   /** Direct (recompute) formulation of [[mmrSelect]] — each round

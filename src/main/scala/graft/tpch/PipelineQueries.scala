@@ -4792,16 +4792,16 @@ object PipelineQueries {
       // full-depth probe = exact top-8 per surviving query (self hit
       // excluded by ivfTopKWith's query<>neighbor filter). r14: no
       // persist — since the grouped rerank (r13), the candidate table
-      // has exactly ONE consumer (mmrSelectGrouped's initial
-      // localCheckpoint), so the cache write/read was pure overhead.
+      // has exactly ONE consumer (mmrSelectGrouped's round-0 wrap), so
+      // the cache write/read was pure overhead.
       val cands = Similarity.ivfTopKWith(idx, queries, "vec_id",
           "embedding", k = 8, nProbe = 8)
         .join(e.select(col("vec_id").as("neighbor_id"),
           col("embedding")), Seq("neighbor_id"))
-      // r13: all per-query reranks advance in LOCKSTEP — one argmax
-      // collect per MMR round instead of |queries|·k round trips
+      // r13: all per-query reranks advance in LOCKSTEP — one action
+      // per MMR round instead of |queries|·k round trips
       // (value-identical per group; OpsSpec differential-asserts
-      // grouped ≡ per-query mmrSelect)
+      // grouped ≡ per-query mmrSelectRecompute)
       Similarity.mmrSelectGrouped(cands, "query_id", "neighbor_id",
           "embedding", "cosine", k = 3)
         .select(col("query_id"), col("rank"), col("neighbor_id"),

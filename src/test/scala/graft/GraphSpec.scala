@@ -55,25 +55,40 @@ class GraphSpec extends AnyFunSuite with SharedSpark {
     assert(!plan.toLowerCase.contains("cartesian"), plan)
   }
 
+  /** The exact integer PageRank recurrence: ranks start at `scale`, a
+    * node with no in-edge holds `base`, contributions are `rank div
+    * outdeg`. */
+  private def pageRankRef(edges: Seq[(Long, Long)], iters: Int)
+      : Map[Long, Long] = {
+    val (scale, dampNum, dampDen) = (1000000L, 85L, 100L)
+    val base = scale * (dampDen - dampNum) / dampDen
+    val nodes = edges.flatMap(e => Seq(e._1, e._2)).distinct
+    val outDeg = edges.groupBy(_._1).map { case (n, es) => n -> es.size.toLong }
+    var rank = nodes.map(_ -> scale).toMap
+    for (_ <- 1 to iters) {
+      val sums = edges.groupBy(_._2).map { case (n, es) =>
+        n -> es.map(e => rank(e._1) / outDeg(e._1)).sum }
+      rank = nodes.map(n =>
+        n -> sums.get(n).fold(base)(s => base + dampNum * s / dampDen)).toMap
+    }
+    rank
+  }
+
   test("pageRank: deep iteration checkpointing is rank-identical and bounds the plan") {
-    val df = Seq((1L, 2L), (2L, 3L), (3L, 1L), (1L, 3L)).toDF("src", "dst")
-    def run(ckpt: Int) =
-      Graph.pageRank(df, "src", "dst", iters = 10, checkpointEvery = ckpt)
+    val es = Seq((1L, 2L), (2L, 3L), (3L, 1L), (1L, 3L), (4L, 1L))
+    val df = es.toDF("src", "dst")
     try {
-      // bit-identical ranks with and without lineage truncation
-      val plain = run(0).collect().map(r => (r.getLong(0), r.getLong(1)))
-        .toMap
-      val ck = run(3)
-      assert(ck.collect().map(r => (r.getLong(0), r.getLong(1)))
-        .toMap == plain)
-      // the checkpointed 10-iteration plan restarts from the last
-      // materialized round: at most ckpt=3 unrolled joins deep vs 10
-      def depth(p: org.apache.spark.sql.DataFrame) =
-        p.queryExecution.optimizedPlan.collect {
-          case j: org.apache.spark.sql.catalyst.plans.logical.Join => j
-        }.size
-      assert(depth(run(3)) < depth(run(0)),
-        s"checkpoint did not truncate lineage: ${depth(run(3))} vs ${depth(run(0))}")
+      // 10 rounds cross the driver's lineage cut; ranks stay exact
+      val deep = Graph.pageRank(df, "src", "dst", iters = 10)
+      assert(deep.collect().map(r => (r.getLong(0), r.getLong(1))).toMap ==
+        pageRankRef(es, 10))
+      // the 10-round plan restarts from the last cut: at most CutEvery
+      // rank joins after it, plus the final dense fill
+      val joins = deep.queryExecution.optimizedPlan.collect {
+        case j: org.apache.spark.sql.catalyst.plans.logical.Join => j
+      }.size
+      assert(joins <= graft.ops.Fixpoint.CutEvery + 1,
+        s"the cut did not truncate lineage: $joins joins")
     } finally graft.ops.Caches.releaseAll()
   }
 
@@ -153,8 +168,8 @@ class GraphSpec extends AnyFunSuite with SharedSpark {
     }
     val wantDeg = (ref.map(_._1) ++ ref.map(_._2)).groupBy(identity)
       .map { case (n, xs) => n -> xs.size.toLong }
-    val deep = Graph.kCorePeel(big.toDF("s", "d"), "s", "d", 2, 10,
-      checkpointEvery = 3).collect()
+    // 10 rounds cross the driver's lineage cut
+    val deep = Graph.kCorePeel(big.toDF("s", "d"), "s", "d", 2, 10).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(deep == wantDeg)
     graft.ops.Caches.releaseAll()
@@ -206,13 +221,12 @@ class GraphSpec extends AnyFunSuite with SharedSpark {
       graft.ops.Caches.releaseAll()
     }
     // a larger pseudo-random graph agrees too (the argmax/tie path gets
-    // exercised beyond hand cases), and checkpointed ≡ unchckpointed
+    // exercised beyond hand cases), across the driver's lineage cut
     val big = (0 until 400).map(i =>
       ((i * 37 % 97).toLong, (i * 61 % 97 + (i % 3)).toLong))
-    val a = Graph.labelPropagation(big.toDF("s", "d"), "s", "d", 5,
-      checkpointEvery = 2).collect()
+    val a = Graph.labelPropagation(big.toDF("s", "d"), "s", "d", 7).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(a == lpaRef(big, 5))
+    assert(a == lpaRef(big, 7))
     graft.ops.Caches.releaseAll()
   }
 
@@ -292,16 +306,29 @@ class GraphSpec extends AnyFunSuite with SharedSpark {
           if j.condition.isEmpty && !j.joinType.sql.contains("CROSS") => j
     }
     assert(bad.isEmpty, "HITS must never plan a conditionless non-cross join")
-    // scores are checkpoint-cadence-independent (cadence 3 lets the
-    // mutual recurrence double the tree for 3 rounds before the barrier
-    // — still bounded — while 1 barriers every round)
-    val deep = Graph.hits(edges, "src", "dst", iters = 6,
-      checkpointEvery = 1).collect().map(r => (r.getLong(0),
-        r.getLong(1), r.getLong(2))).toSet
-    val sparse = Graph.hits(edges, "src", "dst", iters = 6,
-      checkpointEvery = 3).collect().map(r => (r.getLong(0),
-        r.getLong(1), r.getLong(2))).toSet
-    assert(deep == sparse)
+    // six iterations cut five times: scores are the exact integer
+    // recurrence, replayed here
+    val es = (for (i <- 0L until 40L) yield (i % 7, (i * 3) % 11)).distinct
+    val scale = 1000000L
+    val nodes = es.flatMap(e => Seq(e._1, e._2)).distinct
+    def half(score: Map[Long, Long], from: ((Long, Long)) => Long,
+        to: ((Long, Long)) => Long): Map[Long, Long] = {
+      val raw = es.groupBy(to).map { case (n, xs) =>
+        n -> xs.map(e => BigInt(score.getOrElse(from(e), 0L))).sum }
+      val mx = raw.values.max
+      raw.map { case (n, r) => n -> (r * scale / mx).toLong }
+    }
+    var hub = nodes.map(_ -> scale).toMap
+    var auth = Map.empty[Long, Long]
+    for (_ <- 1 to 6) {
+      auth = half(hub, _._1, _._2)
+      hub = half(auth, _._2, _._1)
+    }
+    val want = nodes.map(n =>
+      (n, hub.getOrElse(n, 0L), auth.getOrElse(n, 0L))).toSet
+    val deep = Graph.hits(edges, "src", "dst", iters = 6)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+    assert(deep == want)
     graft.ops.Caches.releaseAll()
   }
 

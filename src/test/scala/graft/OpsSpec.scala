@@ -334,6 +334,14 @@ class OpsSpec extends AnyFunSuite with SharedSpark {
       .toDF("doc_id", "text")
     val pairs = Dedup.minhashCandidates(d, "doc_id", "text", 8, 4, 3)
     Dedup.nearDupClusters(d, "doc_id", pairs).count()
+    // iterative operators run past a lineage cut: each cut's storage must
+    // be released too, not left for the JVM to collect
+    val ring = (0L until 12L).flatMap(i => Seq((i, (i + 1) % 12), (i, (i + 5) % 12)))
+      .toDF("src", "dst")
+    graft.ops.Profiling.btStrengths(ring, "src", "dst", iters = 3).count()
+    graft.ops.Graph.hits(ring, "src", "dst", iters = 3).count()
+    graft.ops.Graph.kCorePeelConverged(ring, "src", "dst", k = 3, rounds = 3).count()
+    graft.ops.Graph.labelPropagationConverged(ring, "src", "dst", iters = 3).count()
     val br = graft.tpch.TpchModel.browser(spark, "/root/testdata/sf0.001")
     val fused = br.aggregate(drilldown = Seq("returnflag"),
       aggregates = Seq("quantity_sum", "fact_count"))
@@ -458,8 +466,9 @@ class OpsSpec extends AnyFunSuite with SharedSpark {
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2),
         r.getDouble(3), if (r.isNullAt(4)) null else r.getDouble(4),
         r.getDouble(5))).toSet
+    // per-group oracle: the direct recompute formulation
     val perGroup = (0L to 2L).flatMap { g =>
-      Similarity.mmrSelect(emb.filter($"grp" === g), "vec_id",
+      Similarity.mmrSelectRecompute(emb.filter($"grp" === g), "vec_id",
           "embedding", "rel", k = 4)
         .collect().map(r => (g, r.getInt(0), r.getLong(1),
           r.getDouble(2), if (r.isNullAt(3)) null else r.getDouble(3),
@@ -2411,9 +2420,9 @@ class OpsSpec extends AnyFunSuite with SharedSpark {
       d.collect().map(r => (r.getInt(0), r.getLong(1), r.getDouble(2),
         if (r.isNullAt(3)) None else Some(r.getDouble(3)),
         r.getDouble(4))).toSeq
-    // checkpointEvery=3 exercises the mid-loop lineage cut
+    // nine rounds, each cut by the round driver
     val inc = canon(graft.ops.Similarity.mmrSelect(
-      df, "vec_id", "embedding", "rel", k = 9, checkpointEvery = 3))
+      df, "vec_id", "embedding", "rel", k = 9))
     val rec = canon(graft.ops.Similarity.mmrSelectRecompute(
       df, "vec_id", "embedding", "rel", k = 9))
     assert(inc == rec)
