@@ -550,19 +550,10 @@ object Bench {
     val contaminated = retained.filter(p => bestCal > 0 && calib(p) > 2 * bestCal)
     val results = names.map(n =>
       n -> (if (failed(n) || perPass(n).isEmpty) -1.0 else perPass(n).min))
-    // The driver keeps only the LAST 2000 chars of stdout (every round's
-    // `parsed` has been null because the full line never fit), so the
-    // stdout line puts the per-query map FIRST and the headline scalars
-    // LAST — whatever is truncated, the captured tail always ends with
-    // metric/value/failed/contaminated. The complete evidence — full
-    // precision, every pass — goes to BENCH_local.json next to the build.
     // Locale.ROOT: the f-interpolator uses the JVM default locale, and a
     // comma-decimal locale (de, fr, …) would render 3,1416 — invalid JSON
     def fmt4(v: Double): String =
       String.format(java.util.Locale.ROOT, "%.4f", Double.box(v))
-    def r4(v: Double): String = if (v < 0) "-1" else fmt4(v)
-    val qs = results.map { case (k, v) => s"\"" + k + "\":" + r4(v) }
-      .mkString("{", ",", "}")
     val passJson = names.map { n =>
       s"\"" + n + "\":" + perPass.getOrElse(n, Nil).mkString("[", ",", "]")
     }.mkString("{", ",", "}")
@@ -675,21 +666,15 @@ object Bench {
     // COMPACT summary guaranteed to fit the capture window: headline
     // scalars, per-query-evidence pointer ("queries" detail lives in
     // `detail_file`, written above with full precision and every pass),
-    // failure/contamination state, and fp-diff COUNTS. Set
-    // SPARK_GRAFT_BENCH_STDOUT_FULL=1 to restore the historical full
-    // line (kept for byte-level comparison against old rounds).
-    if (sys.env.get("SPARK_GRAFT_BENCH_STDOUT_FULL").contains("1"))
-      println(s"""{"queries":$qs,$summary}""")
-    else {
-      val failedCompact = failed.take(10).map("\"" + _ + "\"")
-        .mkString("[", ",", "]")
-      val runTotalsCompact = allPasses.map(p => fmt4(
-        passData.getOrElse(p, scala.collection.mutable
-          .Map.empty[String, Double]).values.sum))
-        .mkString("[", ",", "]")
-      val fpCompact = s"""{"prev_found":${prevFps.nonEmpty},"same":$fpSame,"new_queries":$fpNew,"changed_n":${fpChanged.size},"strict_changed_n":${fpStrictChanged.size}}"""
-      println(s"""{"metric":"total","unit":"sec","value":${fmt4(total)},"sf":"$sfDir","n_queries":${names.size},"passes":${retained.size},"exec":"full-plan","queries_detail_file":"$detailFile","detail_file":"$detailFile"$subsetJson,"calibration_sec":$calJson,"run_totals_sec":$runTotalsCompact,"n_failed":${failed.size},"failed_head":$failedCompact,"contaminated_passes":$contamJson,"n_skipped_sink_writers":${sinkWriters.size},"plan_fp_diff":$fpCompact}""")
-    }
+    // failure/contamination state, and fp-diff COUNTS.
+    val failedCompact = failed.take(10).map("\"" + _ + "\"")
+      .mkString("[", ",", "]")
+    val runTotalsCompact = allPasses.map(p => fmt4(
+      passData.getOrElse(p, scala.collection.mutable
+        .Map.empty[String, Double]).values.sum))
+      .mkString("[", ",", "]")
+    val fpCompact = s"""{"prev_found":${prevFps.nonEmpty},"same":$fpSame,"new_queries":$fpNew,"changed_n":${fpChanged.size},"strict_changed_n":${fpStrictChanged.size}}"""
+    println(s"""{"metric":"total","unit":"sec","value":${fmt4(total)},"sf":"$sfDir","n_queries":${names.size},"passes":${retained.size},"exec":"full-plan","queries_detail_file":"$detailFile","detail_file":"$detailFile"$subsetJson,"calibration_sec":$calJson,"run_totals_sec":$runTotalsCompact,"n_failed":${failed.size},"failed_head":$failedCompact,"contaminated_passes":$contamJson,"n_skipped_sink_writers":${sinkWriters.size},"plan_fp_diff":$fpCompact}""")
     spark.stop()
   }
 }

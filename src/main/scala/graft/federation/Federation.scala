@@ -130,13 +130,6 @@ final class SlicerStore(
     (resp.statusCode(), resp.body())
   }
 
-  /** POST relay (the `/report` verb); otherwise like [[request]]. */
-  def postCubeRequest(action: String, cube: String, body: String,
-      params: Seq[(String, String)] = Nil): String = {
-    val (status, respBody) = rawPostCubeRequest(action, cube, body, params)
-    checked(action, status, respBody)
-  }
-
   /** Remote cube names (reference `SlicerModelProvider.list_cubes`). */
   def listCubes(): Seq[String] =
     JsonMethods.parse(request("cubes")) match {

@@ -130,11 +130,6 @@ object HashImpls {
     out
   }
 
-  /** Deterministic ±1 Johnson–Lindenstrauss projection of a quantized
-    * float vector — value-identical to the SQL-lambda spec in
-    * [[graft.ops.Similarity.randomProjectionLambda]]: q_i =
-    * floor(x_i·scale + 0.5), sign(j,i) from the parity bit of an LCG mix
-    * of the flat index j·dim+i, out_j = Σ sign·q_i (exact longs). */
   /** Upper-triangle Gram pair structs (i, j, q_i·q_j) for one quantized
     * vector in a single compiled loop — the generator behind
     * [[graft.ops.Similarity.gramMatrix]]; the nested-transform lambda
@@ -166,6 +161,11 @@ object HashImpls {
     new GenericArrayData(out)
   }
 
+  /** Deterministic ±1 Johnson–Lindenstrauss projection of a quantized
+    * float vector — value-identical to the SQL-lambda spec
+    * `SpecTwins.randomProjectionLambda` (CdcProjectionSpec): q_i =
+    * floor(x_i·scale + 0.5), sign(j,i) from the parity bit of an LCG mix
+    * of the flat index j·dim+i, out_j = Σ sign·q_i (exact longs). */
   def randomProjection(a: org.apache.spark.sql.catalyst.util.ArrayData,
       outDims: Int, scale: Long): Array[Long] = {
     val d = a.numElements()
@@ -561,8 +561,8 @@ case class RandomProjectionExpr(child: Expression, outDims: Int, scale: Long)
 /** gram_pairs(vec, scale): upper-triangle (i, j, q_i·q_j) structs of the
   * fixed-point-quantized vector — one JIT-compiled call per row feeding
   * the Gram-matrix partial aggregation; the SQL-lambda twin
-  * ([[graft.ops.Similarity.gramPairsLambda]]) is the cross-validated
-  * executable spec. */
+  * (`SpecTwins.gramPairsLambda`) is the executable spec OpsSpec
+  * cross-validates. */
 case class GramPairsExpr(child: Expression, scale: Long)
     extends UnaryExpression with ImplicitCastInputTypes {
   require(scale >= 1, s"scale must be >= 1, got $scale")

@@ -268,7 +268,7 @@ object TextImpls {
     * used by [[foreachToken]]); gram i = tokens i..i+n-1 joined by
     * single spaces; duplicates dropped keeping first-occurrence order —
     * value-identical to the SQL-lambda spec
-    * ([[graft.ops.Dedup.wordNgramsLambda]]). Fewer than n tokens → empty
+    * (`SpecTwins.wordNgramsLambda`, OpsSpec). Fewer than n tokens → empty
     * array (never a descending bogus-index sequence). */
   def wordNgrams(s: String, n: Int): GenericArrayData = {
     val len = s.length

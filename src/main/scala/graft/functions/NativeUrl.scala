@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Native Catalyst twin of [[graft.ops.UrlOps.canonicalizeLambda]] —
+/** Native Catalyst twin of `SpecTwins.canonicalizeLambda` (UrlOpsSpec) —
   * the same canonicalization contract as one JIT-compiled pass of plain
   * string surgery. The Column composition is the executable spec (and
   * what the q250 DuckDB oracle replays); this expression produces

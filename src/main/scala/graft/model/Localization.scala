@@ -28,7 +28,6 @@ object Localization {
 
   /** Per-locale translation registry. */
   final class Translations private (byLocale: Map[String, JValue]) {
-    def localeNames: Seq[String] = byLocale.keys.toSeq.sorted
     def localize(cube: Cube, locale: String): Cube =
       byLocale.get(locale).map(t => Localization.localizeCube(cube, t))
         .getOrElse(cube)

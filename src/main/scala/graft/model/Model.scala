@@ -39,10 +39,6 @@ final case class Attribute(
     case Some(d)            => s"$d.$name"
     case None               => name
   }
-  def localizedRef(locale: Option[String]): String = locale match {
-    case Some(l) if locales.contains(l) => s"$ref@$l"
-    case _                              => ref
-  }
 }
 
 /** Ordering direction for natural per-level ordering. */
@@ -225,8 +221,6 @@ final case class MeasureAggregate(
     label: Option[String] = None
 ) {
   def ref: String = name
-  /** Base = bare fact column, neither computed nor aggregated. */
-  def isBase: Boolean = function.isEmpty && expression.isEmpty
   /** Names this aggregate depends on (measure or expression identifiers),
     * reference `attributes.py:480-499`. */
   def dependencies: Set[String] = expression match {
@@ -320,9 +314,6 @@ final case class Cube(
   def aggregate(name: String): MeasureAggregate =
     aggregates.find(_.name == name).getOrElse(
       throw new IllegalArgumentException(s"no aggregate '$name' in cube '${this.name}'"))
-
-  def aggregatesFor(names: Seq[String]): Seq[MeasureAggregate] =
-    if (names.isEmpty) aggregates else names.map(aggregate)
 
   /** All dimension attributes + measures + details, by ref. */
   lazy val allAttributes: Map[String, Attribute] = {

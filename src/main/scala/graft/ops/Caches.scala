@@ -4,26 +4,25 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
 
 /** Registry of persisted intermediates created inside library operators
-  * (LSH band tables, label-propagation rounds). Operators register what
-  * they persist; the *consumer* releases after its terminal action —
-  * `Verify`/`Bench` release after each query, `SlicerServer` after each
-  * request. This is what keeps a long-lived process from accumulating one
-  * cached table per call (round-1 finding: persists in
+  * (LSH band tables, the rounds [[Fixpoint]] keeps). Operators register
+  * what they persist; the *consumer* releases after its terminal action:
+  * the catalog mains (`Verify`, `Bench`, `TimeQ`, …) after each query;
+  * the slicer server registers nothing. This keeps a long-lived process
+  * from accumulating one cached table per call (round-1 finding: persists in
   * `minhashCandidates`/`nearDupClusters` were never freed).
   *
   * The registry is THREAD-SCOPED: operators register on the thread that
   * builds the plan (plan construction is driver-side), and `releaseAll`
-  * frees only the calling thread's persists. Two concurrent server
-  * requests therefore cannot release each other's in-flight
-  * intermediates (round-2 finding: a process-global queue made one
-  * request's `releaseAll` unpersist another's LSH band table mid-join,
-  * silently forcing full recomputation). A request handled across
-  * threads must release on the thread that registered.
+  * frees only the calling thread's persists. Two concurrent threads
+  * therefore cannot release each other's in-flight intermediates
+  * (round-2 finding: a process-global queue made one request's
+  * `releaseAll` unpersist another's LSH band table mid-join, silently
+  * forcing full recomputation); register and release on one thread.
   *
   * DataFrame persists are additionally REFERENCE-COUNTED by canonical
   * logical plan (round-9 finding): Spark's `CacheManager` keys cached
   * data by the canonicalized plan, so two threads persisting IDENTICAL
-  * plans (two concurrent requests for the same aggregate) share ONE
+  * plans (two concurrent queries over the same intermediate) share ONE
   * cache entry — thread-scoping alone cannot protect it, because the
   * first thread's unpersist drops the shared entry while the second is
   * mid-read (observed as a 500 `Block rdd_N_M does not exist` under the

@@ -117,8 +117,8 @@ object Dedup {
     *
     * Gram construction runs through the codegen'd
     * [[graft.functions.NativeText.word_ngrams]] (one JIT pass per doc);
-    * [[wordNgramsLambda]] is the value-identical SQL-lambda spec the
-    * DuckDB oracle replays and OpsSpec cross-validates. */
+    * `SpecTwins.wordNgramsLambda` is the value-identical SQL-lambda spec
+    * the DuckDB oracle replays and OpsSpec cross-validates. */
   def decontaminate(
       docs: DataFrame, idCol: String, textCol: String,
       bench: DataFrame, benchTextCol: String, n: Int = 13
@@ -141,26 +141,6 @@ object Dedup {
         (coalesce(col("overlap_ngrams"), lit(0L)) > 0).as("contaminated"))
   }
 
-  /** Duplicated-span profile (the exact-substring-dedup signal of the
-    * published "deduplicating training data" pipelines, at word-shingle
-    * granularity): for each document, how many of its word k-shingles
-    * occur at least `minOcc` times corpus-wide (within-doc repeats
-    * included) and what fraction of its shingles that is — the
-    * drop/trim signal of a span-level deduper.
-    *
-    * Scale shape: explode to (id, shingle-hash) — 8-byte hashes only,
-    * text never shuffles. The corpus-wide occurrence count is a
-    * `groupBy(hash).count()` — map-side partial aggregation collapses
-    * every local repeat of a hot boilerplate shingle BEFORE the
-    * exchange, so a shingle occurring 10⁸ times corpus-wide ships at
-    * most one partial row per map task (a count-over-window would ship
-    * every occurrence to one task). The ≥minOcc survivors (the small
-    * "duplicated span" set) join back onto the gram stream with a plain
-    * equi-join AQE can skew-split; per-doc re-aggregation is the final
-    * shuffle. The hash domain is the minhash shingle space
-    * ([[shingleHashesLambda]]'s poly-fold — the stack's deliberate,
-    * documented approximation); the DuckDB oracle replays the same
-    * hashes bit-for-bit. */
   /** Per-document NOVELTY against a reference corpus — the other side
     * of [[decontaminate]]'s coin: instead of flagging matches, score
     * each document by how much of it is UNSEEN (`n_novel / n_shingles`
@@ -273,6 +253,26 @@ object Dedup {
         sum(when(col("__p").isNull, 1L).otherwise(0L)).as("fn"))
   }
 
+  /** Duplicated-span profile (the exact-substring-dedup signal of the
+    * published "deduplicating training data" pipelines, at word-shingle
+    * granularity): for each document, how many of its word k-shingles
+    * occur at least `minOcc` times corpus-wide (within-doc repeats
+    * included) and what fraction of its shingles that is — the
+    * drop/trim signal of a span-level deduper.
+    *
+    * Scale shape: explode to (id, shingle-hash) — 8-byte hashes only,
+    * text never shuffles. The corpus-wide occurrence count is a
+    * `groupBy(hash).count()` — map-side partial aggregation collapses
+    * every local repeat of a hot boilerplate shingle BEFORE the
+    * exchange, so a shingle occurring 10⁸ times corpus-wide ships at
+    * most one partial row per map task (a count-over-window would ship
+    * every occurrence to one task). The ≥minOcc survivors (the small
+    * "duplicated span" set) join back onto the gram stream with a plain
+    * equi-join AQE can skew-split; per-doc re-aggregation is the final
+    * shuffle. The hash domain is the minhash shingle space
+    * (`SpecTwins.shingleHashesLambda`'s poly-fold — the stack's deliberate,
+    * documented approximation); the DuckDB oracle replays the same
+    * hashes bit-for-bit. */
   def dupSpanProfile(df: DataFrame, idCol: String, textCol: String,
       k: Int = 8, minOcc: Int = 2): DataFrame = {
     require(k >= 1, s"shingle size must be >= 1, got $k")
@@ -495,32 +495,6 @@ object Dedup {
           sep).as(textCol))
   }
 
-  /** SQL-lambda formulation of the [[dedupParagraphs]] rebuild — the
-    * executable spec for [[graft.functions.NativeText.keep_split_parts]]
-    * (O(parts × kept) membership scans, so the op runs the codegen'd
-    * two-pointer twin; OpsSpec asserts value identity). */
-  def keepSplitPartsLambda(text: Column, keep: Column, sep: String): Column =
-    array_join(
-      filter(split(text, java.util.regex.Pattern.quote(sep)),
-        (p, i) => array_contains(keep, i)),
-      sep)
-
-  /** SQL-lambda formulation of distinct word n-grams — the executable
-    * spec for [[graft.functions.NativeText.word_ngrams]] (interpreted
-    * per element, so [[decontaminate]] runs the codegen'd twin; OpsSpec
-    * asserts value identity). */
-  def wordNgramsLambda(c: Column, n: Int): Column = {
-    val words = filter(split(coalesce(c, lit("")), " "),
-      w => length(w) > 0)
-    // guard: Spark's sequence(1, stop) DESCENDS when stop < 1, which
-    // would emit bogus indexes for docs shorter than n words
-    when(size(words) >= n,
-      array_distinct(transform(
-        sequence(lit(1), size(words) - (n - 1)),
-        i => concat_ws(" ", slice(words, i, lit(n))))))
-      .otherwise(array().cast("array<string>"))
-  }
-
   /** Exact dedup returning full surviving rows (window row_number=1). */
   def exactDedup(df: DataFrame, textCol: String, idCol: String): DataFrame = {
     val w = Window.partitionBy(sha2(col(textCol), 256)).orderBy(col(idCol).asc)
@@ -668,38 +642,6 @@ object Dedup {
 
   // ------------------------------------------------------------- MinHash
 
-  /** Engine-independent k-shingle hashes: each token is poly-hashed once,
-    * shingle hash = poly-fold over the k token hashes. O(chars + shingles)
-    * instead of O(k·chars). This SQL-lambda formulation is the executable
-    * spec; the hot path uses the identical-result codegen'd
-    * [[graft.functions.NativeHashes]] expressions (~1000× per-row). */
-  def shingleHashesLambda(text: Column, k: Int): Column = {
-    val toks = split(lower(text), "\\s+")
-    val ths = transform(toks, t => TextAnalysis.polyHash(t))
-    transform(sequence(lit(1), greatest(size(ths) - (k - 1), lit(1))),
-      i => aggregate(slice(ths, i, lit(k)), lit(0L),
-        (acc, h) => pmod(acc * 131L + h, lit(1000000007L))))
-  }
-
-  /** k-word shingles of the lowercased, whitespace-split text.
-    *
-    * Formulated as an `arrays_zip` of k shifted slices, NOT a
-    * `transform(sequence(...), i => slice(toks, i, k))` lambda: a lambda
-    * body that references the computed token array re-tokenizes the
-    * whole document PER SHINGLE POSITION (higher-order functions do not
-    * cache outer subexpressions — measured O(len²), 15× a whole query's
-    * runtime on [[graft.ops.Corpus.ngramLmCounts]] before the same fix).
-    * Here every slice is evaluated once per row and the lambda touches
-    * only its own variable. Short texts (< k tokens) zip-pad with nulls,
-    * which `concat_ws` skips — same single partial shingle as before. */
-  def wordShingles(text: Column, k: Int): Column = {
-    val toks = split(lower(text), "\\s+")
-    val m = greatest(size(toks) - (k - 1), lit(1))
-    val shifted = (0 until k).map(j => slice(toks, lit(j + 1), m).as(s"t$j"))
-    transform(arrays_zip(shifted: _*),
-      s => concat_ws(" ", (0 until k).map(j => s.getField(s"t$j")): _*))
-  }
-
   /** Winnowing fingerprints (the MOSS local document-fingerprinting
     * scheme, Schleimer–Wilkerson–Aiken SIGMOD'03): over the positional
     * word k-shingle hash sequence, every window of `w` consecutive
@@ -713,8 +655,8 @@ object Dedup {
     *
     * Shape: one narrow projection materializes the codegen'd hash array
     * ([[graft.functions.NativeHashes.shingle_hashes]]) so the window
-    * lambdas reference an attribute, not a recomputed subtree (the
-    * [[wordShingles]] O(len²) trap); the per-window rightmost-min is a
+    * lambdas reference an attribute, not a subtree a lambda would
+    * recompute per element (O(len²)); the per-window rightmost-min is a
     * single O(w) index fold. Entirely per-row until the final explode —
     * no shuffle, streams unchanged at any corpus size.
     *
@@ -1016,14 +958,6 @@ object Dedup {
         round(col("jaccard"), 6).as("jaccard"))
   }
 
-  /** Exact Jaccard similarity between the k-shingle sets of two texts. */
-  def jaccardShingles(textA: Column, textB: Column, k: Int): Column = {
-    val sa = array_distinct(wordShingles(textA, k))
-    val sb = array_distinct(wordShingles(textB, k))
-    size(array_intersect(sa, sb)).cast("double") /
-      size(array_union(sa, sb))
-  }
-
   /** Character n-gram Jaccard (set semantics). n ≤ 3 runs as one
     * codegen'd call over packed code-point grams (value-identical to the
     * substring-set formulation below, ~10× cheaper — no string arrays);
@@ -1223,23 +1157,6 @@ object Dedup {
   /** 32-bit SimHash over poly-hashed whitespace tokens (codegen'd). */
   def simhash32(text: Column): Column =
     graft.functions.NativeHashes.simhash32(text)
-
-  /** SQL-lambda formulation of [[simhash32]] — executable spec, used by the
-    * cross-validation test; identical results. */
-  def simhash32Lambda(text: Column): Column = {
-    val hs = transform(split(lower(text), "\\s+"), t => TextAnalysis.polyHash(t))
-    val counts = aggregate(
-      hs,
-      array_repeat(lit(0), 32),
-      (acc, h) => zip_with(acc, sequence(lit(0), lit(31)),
-        (a, j) => a + when(
-          pmod(floor(h.cast("double") / pow(lit(2.0), j)).cast("long"), lit(2L)) === 1,
-          1).otherwise(-1)))
-    aggregate(
-      zip_with(counts, sequence(lit(0), lit(31)),
-        (c, j) => when(c > 0, pow(lit(2.0), j).cast("long")).otherwise(0L)),
-      lit(0L), (acc, v) => acc + v)
-  }
 
   /** Hamming distance between two simhashes. */
   def hamming(a: Column, b: Column): Column =

@@ -22,17 +22,6 @@ object Layout {
   def zorderValue(a: Column, b: Column): Column =
     graft.functions.NativeHashes.zorder2(a, b)
 
-  /** SQL-lambda spec of [[zorderValue]] — bit-identical, mirrored by the
-    * DuckDB oracle. */
-  def zorderValueLambda(a: Column, b: Column): Column = {
-    val x = a.cast("long").bitwiseAND(lit(0x7FFFFFFFL))
-    val y = b.cast("long").bitwiseAND(lit(0x7FFFFFFFL))
-    (0 until 31).map { i =>
-      (shiftleft(shiftright(x, i).bitwiseAND(lit(1L)), 2 * i) +
-        shiftleft(shiftright(y, i).bitwiseAND(lit(1L)), 2 * i + 1)): Column
-    }.reduce(_ + _)
-  }
-
   /** Write `df` z-ordered on (`colA`, `colB`) into `nFiles` range
     * partitions: one pass, one range exchange (sampled boundaries — no
     * global sort), parquet footers then carry tight min/max for BOTH

@@ -1087,10 +1087,10 @@ object Profiling {
     * ordered-fold χ² total against `crit` (default 3.841 = χ²₀.₉₅ for
     * one degree of freedom — pass the right quantile for >2 arms).
     *
-    * Shape: one distinct-unit aggregation (map-side partial), the
-    * |variants|-row expected table is a broadcast literal, and the χ²
-    * total is a single-row ordered fold broadcast back — variants not
-    * in `expected` are someone else's bug and are ignored here.
+    * Shape: one distinct-unit aggregation (map-side partial) joined to
+    * the |variants|-row expected literal, a left join's preserved side
+    * (never built, so no broadcast hint); the χ² total is a single-row
+    * ordered fold broadcast back. Variants outside `expected` are ignored.
     *
     * Returns one row per expected variant: `(variant, observed,
     * expected_n, term, chi2, srm)` — `chi2`/`srm` repeated per row. */
@@ -1109,7 +1109,7 @@ object Profiling {
       .filter(col("variant").isin(expected.map(_._1): _*))
       .groupBy(col("variant"))
       .agg(countDistinct(col("__u__")).as("observed"))
-    val counts = broadcast(exp).join(obs, Seq("variant"), "left")
+    val counts = exp.join(obs, Seq("variant"), "left")
       .select(col("variant"), col("w"),
         coalesce(col("observed"), lit(0L)).as("observed"))
     val tot = counts.agg(sum(col("observed")).as("__n__"))

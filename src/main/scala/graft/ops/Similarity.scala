@@ -37,28 +37,6 @@ object Similarity {
       graft.functions.NativeHashes
         .random_projection(col(vecCol), outDims, scale).as(projCol))
 
-  /** SQL-lambda formulation of [[randomProjection]]'s projection column —
-    * identical values (same LCG parity signs, same exact-integer sums);
-    * the executable spec the DuckDB oracle mirrors and the native
-    * [[graft.functions.RandomProjectionExpr]] is differentialy tested
-    * against. Interpreted per element (~outDims·dim lambda calls/row) —
-    * use the native twin in hot paths. */
-  def randomProjectionLambda(vecCol: Column, outDims: Int,
-      scale: Long = 1000L): Column = {
-    val q = transform(vecCol,
-      x => floor(x.cast("double") * scale + 0.5).cast("long"))
-    val d = size(vecCol)
-    transform(sequence(lit(0), lit(outDims - 1)), j =>
-      aggregate(sequence(lit(0L), d.cast("long") - 1L), lit(0L),
-        (acc, i) => {
-          val idx = j.cast("long") * d.cast("long") + i
-          val v = pmod(lit(1103515245L) * idx + lit(12345L),
-            lit(2147483648L))
-          val bit = pmod(floor(v / 65536.0).cast("long"), lit(2L))
-          acc + (lit(1L) - lit(2L) * bit) * element_at(q, (i + 1).cast("int"))
-        }))
-  }
-
   /** SemDeDup-style semantic near-duplicate pairs: k-means partitions the
     * embedding corpus (fixed-point Lloyd's — [[Clustering.kmeansAssign]]),
     * then EXACT cosine runs only WITHIN clusters. The published
@@ -89,16 +67,10 @@ object Similarity {
   }
 
   /** Exact dot product: Σ a_i·b_i as a left fold (fixed association).
-    * Codegen'd ([[graft.functions.NativeHashes.dot_product]]); the
-    * SQL-lambda twin below is the executable spec. */
+    * Codegen'd ([[graft.functions.NativeHashes.dot_product]]); OpsSpec
+    * checks it against the SQL-lambda spec `SpecTwins.dotLambda`. */
   def dot(a: Column, b: Column): Column =
     graft.functions.NativeHashes.dot_product(a, b)
-
-  /** SQL-lambda formulation of [[dot]] — identical results (same fold
-    * association), used for cross-validation. */
-  def dotLambda(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
-      lit(0.0), (acc, v) => acc + v)
 
   def norm(a: Column): Column = sqrt(dot(a, a))
 
@@ -127,8 +99,8 @@ object Similarity {
     * batch / RAG context.
     *
     * [[mmrSelectGrouped]] over one constant group: no loop of its own.
-    * [[mmrSelectRecompute]] keeps the direct formulation as the
-    * executable spec (OpsSpec asserts incremental ≡ recompute).
+    * OpsSpec asserts it ≡ the direct formulation, the executable spec
+    * `SpecTwins.mmrSelectRecompute`.
     *
     * Returns `(rank, <idCol>, relevance, max_sim_prev, mmr)` ordered by
     * rank — max_sim_prev is NULL for rank 1, doubles rounded to 6 (the
@@ -215,86 +187,12 @@ object Similarity {
         round(score, 6).as("mmr"))
   }
 
-  /** Direct (recompute) formulation of [[mmrSelect]] — each round
-    * recomputes max-sim against ALL selected vectors (|C|·k²/2 sims
-    * total). Value-identical to the incremental fold by the
-    * max-composition identity; kept as the executable spec the
-    * incremental path is differential-tested against. Not for hot
-    * paths. */
-  def mmrSelectRecompute(vecs: DataFrame, idCol: String, vecCol: String,
-      relCol: String, k: Int, lamNum: Long = 7, lamDen: Long = 10)
-      : DataFrame = {
-    require(k >= 1, s"k must be >= 1, got $k")
-    require(lamDen > 0 && lamNum >= 0 && lamNum <= lamDen,
-      s"need 0 <= lamNum <= lamDen, got $lamNum/$lamDen")
-    val spark = vecs.sparkSession
-    import spark.implicits._
-    val base = Caches.registerDf(vecs.select(
-        col(idCol).cast("long").as("__id__"),
-        col(vecCol).cast("array<float>").as("__v__"),
-        col(relCol).cast("double").as("__r__"))
-      .filter(col("__r__").isNotNull)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    // (id, vector, rel, maxSimPrev, mmr) in selection order
-    var selected = Vector.empty[(Long, Seq[Float], Double,
-      Option[Double], Double)]
-    var exhausted = false
-    for (r <- 1 to k if !exhausted) {
-      val cands = selected.map(_._1) match {
-        case ids if ids.isEmpty => base
-        case ids => base.filter(!col("__id__").isInCollection(ids))
-      }
-      val maxSim: Column = selected.map { case (_, v, _, _, _) =>
-        cosine(col("__v__"), array(v.map(x => lit(x)): _*))
-      } match {
-        case s if s.isEmpty => lit(null).cast("double")
-        case Seq(one) => one
-        case many => greatest(many: _*)
-      }
-      val score = (lit(lamNum) * col("__r__") -
-        lit(lamDen - lamNum) * coalesce(col("__ms__"), lit(0.0))) /
-        lit(lamDen)
-      val best = cands.withColumn("__ms__", maxSim)
-        .withColumn("__mmr__", score)
-        .agg(max(struct(col("__mmr__").as("m"), (-col("__id__")).as("nid")))
-          .as("__b__"))
-        .select(col("__b__.m"), col("__b__.nid")).collect().head
-      if (best.isNullAt(0)) exhausted = true
-      else {
-        val id = -best.getLong(1)
-        val row = cands.filter(col("__id__") === id)
-          .withColumn("__ms__", maxSim)
-          .select(col("__v__"), col("__r__"), col("__ms__"))
-          .collect().head
-        selected = selected :+ ((id, row.getSeq[Float](0), row.getDouble(1),
-          if (row.isNullAt(2)) None else Some(row.getDouble(2)),
-          best.getDouble(0)))
-      }
-    }
-    def r6(x: Double) = java.math.BigDecimal.valueOf(x)
-      .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
-    selected.zipWithIndex.map { case ((id, _, rel, ms, mmr), i) =>
-      (i + 1, id, r6(rel), ms.map(r6), r6(mmr))
-    }.toDF("rank", "__pick__", "relevance", "max_sim_prev", "mmr")
-      .select(col("rank"), col("__pick__").as(idCol), col("relevance"),
-        col("max_sim_prev"), col("mmr"))
-  }
-
   /** Sign-bit signature: bit i = (v_i > 0) over the first `bits` dims —
     * a deterministic random-hyperplane LSH (planes = axis planes).
-    * Codegen'd ([[graft.functions.NativeHashes.sign_bits]]); the
-    * SQL-lambda twin below is the cross-validated executable spec. */
+    * Codegen'd ([[graft.functions.NativeHashes.sign_bits]]); OpsSpec
+    * cross-validates it against `SpecTwins.signBitsLambda`. */
   def signBits(v: Column, bits: Int): Column =
     graft.functions.NativeHashes.sign_bits(v, bits)
-
-  /** SQL-lambda formulation of [[signBits]] — identical results (NaN
-    * ranks above zero in SQL comparisons, which the native loop
-    * replicates), used for cross-validation. */
-  def signBitsLambda(v: Column, bits: Int): Column =
-    aggregate(
-      zip_with(slice(v, 1, bits), sequence(lit(0), lit(bits - 1)),
-        (x, i) => when(x > 0, pow(lit(2.0), i).cast("long")).otherwise(0L)),
-      lit(0L), (acc, b) => acc + b)
 
   /** Brute-force cosine top-k: for each row of `queries`, the `k` highest
     * cosine rows of `corpus` (excluding self-matches by id).
@@ -600,10 +498,6 @@ object Similarity {
     topKOf(scored, k)
   }
 
-  /** LSH-bucketed approximate top-k: corpus is bucketed by sign-bit
-    * signature; each query probes only its own bucket (plus optional
-    * 1-bit-flip neighbor buckets for recall). Same output shape as
-    * [[bruteForceTopK]]; recall traded for a |corpus|/2^bits scan. */
   /** Symmetric per-vector int8 quantization — the standard embedding
     * compression before ANN index build or training-data shipping (4×
     * smaller than float32, dot products survive within ~1%). Per vector:
@@ -635,10 +529,14 @@ object Similarity {
   def quantizeInt8Stats(vec: Column): Column =
     graft.functions.NativeHashes.quantize_stats(vec)
 
+  /** LSH-bucketed approximate top-k: corpus is bucketed by sign-bit
+    * signature; each query probes its own bucket and its `bits` 1-bit-flip
+    * neighbor buckets. Same output shape as [[bruteForceTopK]]; recall
+    * traded for a |corpus|/2^bits scan. */
   def lshTopK(
       queries: DataFrame, corpus: DataFrame,
       idCol: String, vecCol: String, k: Int,
-      bits: Int = 8, multiProbe: Boolean = true
+      bits: Int = 8
   ): DataFrame = {
     val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"),
       signBits(col(vecCol), bits).as("bucket"))
@@ -646,9 +544,7 @@ object Similarity {
       signBits(col(vecCol), bits).as("sig"))
     // probe set: own bucket + hamming-1 neighbors
     val probes =
-      if (multiProbe)
-        array(lit(0L) +: (0 until bits).map(i => shiftleft(lit(1L), i)): _*)
-      else array(lit(0L))
+      array(lit(0L) +: (0 until bits).map(i => shiftleft(lit(1L), i)): _*)
     val q = broadcast(
       qBase.select(col("query_id"), col("qv"),
         explode(transform(probes, m => col("sig").bitwiseXOR(m))).as("bucket")))
@@ -879,21 +775,6 @@ object Similarity {
         .gram_pairs(col(vecCol), scale)).as("__e__"))
       .groupBy(col("__e__.i").as("i"), col("__e__.j").as("j"))
       .agg(count(lit(1)).as("n"), sum(col("__e__.p").cast(dec)).as("g"))
-  }
-
-  /** SQL-lambda formulation of [[graft.functions.GramPairsExpr]]'s pair
-    * column — identical structs (same quantization, same upper-triangle
-    * order), the cross-validated executable spec. Interpreted per
-    * element (~d²/2 lambda calls per row) — use the native twin in hot
-    * paths (swap measured ~2× end-to-end on the 64-dim corpus). */
-  def gramPairsLambda(vecCol: Column, scale: Long = 1000L): Column = {
-    val q = transform(vecCol,
-      x => floor(x.cast("double") * scale + 0.5).cast("long"))
-    val n = size(vecCol)
-    flatten(transform(sequence(lit(0), n - 1), i =>
-      transform(sequence(i, n - 1), j =>
-        struct(i.cast("int").as("i"), j.cast("int").as("j"),
-          (element_at(q, i + 1) * element_at(q, j + 1)).as("p")))))
   }
 
   /** Top principal component of the quantized embedding corpus by power

@@ -83,8 +83,8 @@ object TextAnalysis {
 
   /** Language-ID: argmax of stopword hits, ties broken by list order,
     * "und" (undetermined) when no stopword hits at all. Codegen'd
-    * ([[graft.functions.LangIdExpr]]); [[languageIdLambda]] is the
-    * value-identical SQL-lambda spec the oracle mirrors. */
+    * ([[graft.functions.LangIdExpr]]); `SpecTwins.languageIdLambda`
+    * (OpsSpec) is the value-identical SQL-lambda spec the oracle mirrors. */
   def languageId(text: Column): Column =
     graft.functions.NativeText.lang_id(lower(text))
 
@@ -121,17 +121,6 @@ object TextAnalysis {
     * because the q47 oracle SQL is generated from them. */
   def languageIdFull(text: Column): Column =
     graft.functions.NativeText.lang_id_full(lower(text))
-
-  /** The interpreted-lambda formulation of [[languageId]] (executable
-    * spec, cross-validated against the native expression in OpsSpec). */
-  def languageIdLambda(text: Column): Column = {
-    val toks = tokens(text)
-    val scored = stopwords.map { case (lang, _) => (lang, langScore(toks, lang)) }
-    val best = scored.map(_._2).reduce((a, b) => greatest(a, b))
-    scored.foldRight(lit("und")) { case ((lang, score), acc) =>
-      when(score === best && best > 0, lit(lang)).otherwise(acc)
-    }
-  }
 
   /** Quality-scoring feature columns (ratios as exact integer divisions —
     * deterministic across engines). Token arithmetic is pure built-ins:
@@ -180,42 +169,6 @@ object TextAnalysis {
       "distinct_lines" -> nDistinct,
       "dup_line_frac" -> dupFrac,
       "max_line_len" -> st.getItem(2),
-      "word_count" -> wc,
-      "top_word_frac" -> topFrac
-    )
-  }
-
-  /** The interpreted-lambda formulation of [[repetitionFeatures]]
-    * (executable spec, cross-validated against the native pass in
-    * OpsSpec). */
-  def repetitionFeaturesLambda(text: Column): Seq[(String, Column)] = {
-    val lines = filter(split(text, "\n"), l => length(trim(l)) > 0)
-    val nLines = size(lines).cast("long")
-    val nDistinct = size(array_distinct(lines)).cast("long")
-    val dupFrac = when(nLines > 0,
-      round(lit(1.0) - nDistinct.cast("double") / nLines.cast("double"), 6))
-      .otherwise(0.0)
-    val maxLineLen =
-      coalesce(array_max(transform(lines, l => length(l))), lit(0)).cast("long")
-    val words = filter(split(text, "\\s+"), w => length(w) > 0)
-    val wc = size(words).cast("long")
-    // longest equal run in the sorted words = count of the modal word
-    val maxRun = aggregate(sort_array(words),
-      struct(lit("").as("prev"), lit(0L).as("run"), lit(0L).as("best")),
-      (acc, w) => {
-        val run = when(w === acc.getField("prev"), acc.getField("run") + 1)
-          .otherwise(lit(1L))
-        struct(w.as("prev"), run.as("run"),
-          greatest(acc.getField("best"), run).as("best"))
-      },
-      acc => acc.getField("best"))
-    val topFrac = when(wc > 0,
-      round(maxRun.cast("double") / wc.cast("double"), 6)).otherwise(0.0)
-    Seq(
-      "n_lines" -> nLines,
-      "distinct_lines" -> nDistinct,
-      "dup_line_frac" -> dupFrac,
-      "max_line_len" -> maxLineLen,
       "word_count" -> wc,
       "top_word_frac" -> topFrac
     )
@@ -598,7 +551,7 @@ object TextAnalysis {
   /** Per-(group, n) clipped overlap moments via the row-local native
     * expression — clipping never leaves the row, so only |groups|·maxN
     * moment rows ever shuffle (the explode+full-outer-join lambda
-    * formulation — kept below as the cross-validated spec — shuffles
+    * formulation — `SpecTwins.bleuViaGramJoin`, OpsSpec's spec — shuffles
     * every gram of the corpus). */
   private def perNStats(df: DataFrame, groupCol: String, candCol: String,
       refCol: String, maxN: Int, char: Boolean): DataFrame =
@@ -611,31 +564,7 @@ object TextAnalysis {
         sum(col("__s__.tc")).as("__tc__"),
         sum(col("__s__.tr")).as("__tr__"))
 
-  /** Spec twin of [[bleu]] on the distributed gram-join formulation
-    * (regexp + HOF lambdas + full-outer equi join) — value-identical
-    * output, exercised differentially in OpsSpec; [[bleu]] itself runs
-    * the row-local native path. */
-  private[graft] def bleuViaGramJoin(df: DataFrame, groupCol: String,
-      idCol: String, candCol: String, refCol: String,
-      maxN: Int = 4): DataFrame = {
-    def cnt(c: String, out: String) =
-      df.select(col(groupCol).as("__grp__"), col(idCol).as("__id__"),
-          explode(taggedWordGramsLambda(col(c), maxN)).as("__x__"))
-        .groupBy(col("__grp__"), col("__id__"),
-          col("__x__.n").as("__n__"), col("__x__.g").as("__g__"))
-        .agg(count(lit(1)).as(out))
-    val joined = cnt(candCol, "__c__")
-      .join(cnt(refCol, "__r__"),
-        Seq("__grp__", "__id__", "__n__", "__g__"), "full_outer")
-    val perN = joined.groupBy(col("__grp__"), col("__n__"))
-      .agg(sum(least(coalesce(col("__c__"), lit(0L)),
-        coalesce(col("__r__"), lit(0L)))).as("__m__"),
-        sum(coalesce(col("__c__"), lit(0L))).as("__tc__"),
-        sum(coalesce(col("__r__"), lit(0L))).as("__tr__"))
-    bleuTail(df, groupCol, maxN, perN)
-  }
-
-  private def bleuTail(df: DataFrame, groupCol: String, maxN: Int,
+  private[graft] def bleuTail(df: DataFrame, groupCol: String, maxN: Int,
       perN: DataFrame): DataFrame = {
     val wideCols: Seq[Column] =
       Seq(sum(when(col("__n__") === 1, col("__tr__"))).as("ref_len")) ++
@@ -693,29 +622,7 @@ object TextAnalysis {
       perNStats(df, groupCol, candCol, refCol, maxN, char = true))
   }
 
-  /** Spec twin of [[chrF]] on the gram-join formulation (see
-    * [[bleuViaGramJoin]]). */
-  private[graft] def chrfViaGramJoin(df: DataFrame, groupCol: String,
-      idCol: String, candCol: String, refCol: String, maxN: Int = 6,
-      beta: Double = 2.0): DataFrame = {
-    def cnt(c: String, out: String) =
-      df.select(col(groupCol).as("__grp__"), col(idCol).as("__id__"),
-          explode(taggedCharGramsLambda(col(c), maxN)).as("__x__"))
-        .groupBy(col("__grp__"), col("__id__"),
-          col("__x__.n").as("__n__"), col("__x__.g").as("__g__"))
-        .agg(count(lit(1)).as(out))
-    val joined = cnt(candCol, "__c__")
-      .join(cnt(refCol, "__r__"),
-        Seq("__grp__", "__id__", "__n__", "__g__"), "full_outer")
-    val perN = joined.groupBy(col("__grp__"), col("__n__"))
-      .agg(sum(least(coalesce(col("__c__"), lit(0L)),
-        coalesce(col("__r__"), lit(0L)))).as("__m__"),
-        sum(coalesce(col("__c__"), lit(0L))).as("__tc__"),
-        sum(coalesce(col("__r__"), lit(0L))).as("__tr__"))
-    chrfTail(df, groupCol, maxN, beta, perN)
-  }
-
-  private def chrfTail(df: DataFrame, groupCol: String, maxN: Int,
+  private[graft] def chrfTail(df: DataFrame, groupCol: String, maxN: Int,
       beta: Double, perN: DataFrame): DataFrame = {
     val wideCols: Seq[Column] = (1 to maxN).flatMap(n => Seq(
       sum(when(col("__n__") === n, col("__m__"))).as(s"match_$n"),
@@ -749,38 +656,6 @@ object TextAnalysis {
           coalesce(col(s"totc_$n"), lit(0L)).as(s"totc_$n"),
           coalesce(col(s"totr_$n"), lit(0L)).as(s"totr_$n"))) ++ Seq(
         when(nUsable > 0, round(fSum / nUsable, 6)).as("chrf")): _*)
-  }
-
-  /** Interpreted-lambda twin of
-    * [[graft.functions.NativeText.tagged_word_ngrams]] — the executable
-    * spec (builtin regexp + HOF shapes, DuckDB-replayable),
-    * cross-validated element-for-element in OpsSpec. The native
-    * expression is what [[bleu]] runs: HOF lambdas are interpreted per
-    * GRAM, which measured >10× slower at corpus scale. */
-  private[graft] def taggedWordGramsLambda(c: Column, maxN: Int): Column = {
-    val ws = regexp_extract_all(lower(c), lit("[^\\s]+"), lit(0))
-    def gramsFor(n: Int): Column =
-      if (n == 1) ws
-      else when(size(ws) >= n,
-        transform(sequence(lit(1), size(ws) - (n - 1)),
-          i => concat_ws(" ", slice(ws, i, lit(n)))))
-        .otherwise(array().cast("array<string>"))
-    concat((1 to maxN).map(n => transform(gramsFor(n),
-      g => struct(lit(n).as("n"), g.as("g")))): _*)
-  }
-
-  /** Interpreted-lambda twin of
-    * [[graft.functions.NativeText.tagged_char_ngrams]] (see
-    * [[taggedWordGramsLambda]]). */
-  private[graft] def taggedCharGramsLambda(c: Column, maxN: Int): Column = {
-    val s = regexp_replace(lower(c), lit("\\s+"), lit(""))
-    def grams(n: Int): Column =
-      when(length(s) >= n,
-        transform(sequence(lit(1), length(s) - (n - 1)),
-          i => s.substr(i, lit(n))))
-        .otherwise(array().cast("array<string>"))
-    concat((1 to maxN).map(n => transform(grams(n),
-      g => struct(lit(n).as("n"), g.as("g")))): _*)
   }
 
   /** Deflate compression-ratio quality signal — the classic

@@ -40,10 +40,10 @@ object UrlOps {
 
   /** Remaining-length cap for positional substrings (URLs are far
     * shorter; `Int.MaxValue` would overflow pos+len inside substring). */
-  private val MaxLen = 1 << 20
+  private[graft] val MaxLen = 1 << 20
 
   /** Everything before the first `#` (the whole string when absent). */
-  private def stripFragment(u: Column): Column = substring_index(u, "#", 1)
+  private[graft] def stripFragment(u: Column): Column = substring_index(u, "#", 1)
 
   /** Canonical URL per the object contract. Input must look like
     * `scheme://authority[/path][?query][#frag]`; anything without
@@ -51,54 +51,13 @@ object UrlOps {
     * [[isWellFormed]]).
     *
     * This is the NATIVE one-pass expression
-    * ([[graft.functions.UrlCanonExpr]]); [[canonicalizeLambda]] is the
-    * builtin-composition executable spec producing identical values
+    * ([[graft.functions.UrlCanonExpr]]); `SpecTwins.canonicalizeLambda`
+    * is the builtin-composition executable spec producing identical values
     * (asserted in UrlOpsSpec over the full synthetic corpus) — the
     * interpreted HOF filter + sort in the composition measured
     * ~0.3 ms/row, the native pass is what a crawl-scale pipeline runs. */
   def canonicalize(u: Column): Column =
     graft.functions.NativeUrl.url_canon(u)
-
-  /** Builtin-composition spec of [[canonicalize]] — DuckDB-replayable
-    * step for step (the q250 oracle mirrors it). */
-  def canonicalizeLambda(u: Column): Column = {
-    val nf        = stripFragment(u)
-    val schemeRaw = substring_index(nf, "://", 1)
-    val scheme    = lower(schemeRaw)
-    val rest      = nf.substr(length(schemeRaw) + lit(4), lit(MaxLen))
-    val authority = substring_index(rest, "/", 1)
-    val pathq     = rest.substr(length(authority) + lit(1), lit(MaxLen))
-
-    val hp    = lower(authority)
-    val noWww = when(hp.startsWith("www."),
-      hp.substr(lit(5), lit(MaxLen))).otherwise(hp)
-    val host = when(scheme === "http" && noWww.endsWith(":80"),
-        noWww.substr(lit(1), length(noWww) - 3))
-      .when(scheme === "https" && noWww.endsWith(":443"),
-        noWww.substr(lit(1), length(noWww) - 4))
-      .otherwise(noWww)
-
-    val pathRaw = substring_index(pathq, "?", 1)
-    val query = when(length(pathq) > length(pathRaw),
-      pathq.substr(length(pathRaw) + lit(2), lit(MaxLen)))
-      .otherwise(lit(""))
-
-    val collapsed = regexp_replace(pathRaw, "/+", "/")
-    val path0 = when(collapsed === "", lit("/")).otherwise(collapsed)
-    val path = when(length(path0) > 1 && path0.endsWith("/"),
-      path0.substr(lit(1), length(path0) - 1)).otherwise(path0)
-
-    val kept = array_sort(filter(split(query, "&"), t => {
-      val name = substring_index(t, "=", 1)
-      t =!= "" && !name.startsWith("utm_") &&
-        !trackingParams.foldLeft(lit(false))((acc, p) => acc || name === p)
-    }))
-    val qs = when(size(kept) > 0, concat(lit("?"), array_join(kept, "&")))
-      .otherwise(lit(""))
-
-    when(nf.contains("://"),
-      concat(scheme, lit("://"), host, path, qs)).otherwise(lower(nf))
-  }
 
   /** True when the URL has a `scheme://` and a non-empty authority —
     * the rows [[canonicalize]]'s full contract applies to. */

@@ -4801,7 +4801,7 @@ object PipelineQueries {
       // r13: all per-query reranks advance in LOCKSTEP — one action
       // per MMR round instead of |queries|·k round trips
       // (value-identical per group; OpsSpec differential-asserts
-      // grouped ≡ per-query mmrSelectRecompute)
+      // grouped ≡ per-query SpecTwins.mmrSelectRecompute)
       Similarity.mmrSelectGrouped(cands, "query_id", "neighbor_id",
           "embedding", "cosine", k = 3)
         .select(col("query_id"), col("rank"), col("neighbor_id"),

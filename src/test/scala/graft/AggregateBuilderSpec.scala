@@ -1,22 +1,13 @@
 package graft
 
-import java.nio.file.{Files, Path, Paths}
-
-import scala.jdk.CollectionConverters._
-
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SourceTree.sources
 
 /** One aggregate builder: `Browser.aggregate` picks its own response plan,
   * so the server carries no copy of the one-pass eligibility rule, and
   * `aggregateFused` is a forwarder nothing in `src/main` calls. */
 class AggregateBuilderSpec extends AnyFunSuite {
-
-  private def sources(dir: String): Seq[(Path, String)] = {
-    val walk = Files.walk(Paths.get(dir))
-    try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
-      .map(p => p -> new String(Files.readAllBytes(p), "UTF-8"))
-    finally walk.close()
-  }
 
   private def occurrences(text: String, word: String): Int =
     word.r.findAllMatchIn(text).size

@@ -153,7 +153,7 @@ class CdcProjectionSpec extends AnyFunSuite with SharedSpark {
     val both = df.select(col("vec_id"),
       graft.functions.NativeHashes
         .random_projection(col("embedding"), 8, 1000L).as("a"),
-      Similarity.randomProjectionLambda(col("embedding"), 8).as("b"))
+      SpecTwins.randomProjectionLambda(col("embedding"), 8).as("b"))
     assert(both.filter(not(col("a") === col("b"))).count() == 0)
   }
 

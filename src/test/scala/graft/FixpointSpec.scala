@@ -1,15 +1,12 @@
 package graft
 
-import java.nio.file.{Files, Path, Paths}
-
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ops.{Caches, Dedup, Fixpoint}
 import graft.ops.Fixpoint.{Budget, Watch}
+import graft.SourceTree.sources
 
 /** The round driver of the iterative operators: one action per watched
   * round, at most two rounds held, one non-convergence rule, one record
@@ -120,13 +117,6 @@ class FixpointSpec extends AnyFunSuite with SharedSpark {
     assert(res.state.select(col("label")).distinct().as[Long].collect()
       .toSeq == Seq(1L))
     Caches.releaseAll()
-  }
-
-  private def sources(dir: String): Seq[(Path, String)] = {
-    val walk = Files.walk(Paths.get(dir))
-    try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
-      .map(p => p -> new String(Files.readAllBytes(p), "UTF-8"))
-    finally walk.close()
   }
 
   test("one lineage-cut idiom: only Fixpoint cuts rounds, and no operator " +

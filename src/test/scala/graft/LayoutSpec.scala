@@ -28,7 +28,7 @@ class LayoutSpec extends AnyFunSuite with SharedSpark {
       .toDF("a", "b")
     val bad = df.select(
       Layout.zorderValue(col("a"), col("b")).as("n"),
-      Layout.zorderValueLambda(col("a"), col("b")).as("l"))
+      SpecTwins.zorderValueLambda(col("a"), col("b")).as("l"))
       .filter(col("n") =!= col("l")).count()
     assert(bad == 0)
   }

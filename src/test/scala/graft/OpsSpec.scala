@@ -24,7 +24,7 @@ class OpsSpec extends AnyFunSuite with SharedSpark {
   test("native simhash == SQL-lambda simhash on real documents") {
     val diff = docs.select(
       NativeHashes.simhash32(col("text")).as("a"),
-      Dedup.simhash32Lambda(col("text")).as("b"))
+      SpecTwins.simhash32Lambda(col("text")).as("b"))
       .filter(col("a") =!= col("b")).count()
     assert(diff == 0)
   }
@@ -32,7 +32,7 @@ class OpsSpec extends AnyFunSuite with SharedSpark {
   test("native minhash signature == SQL-lambda shingle pipeline") {
     val n = 8
     val fromNative = Dedup.withMinhashSignature(docs, "text", n, 3, Seq(col("doc_id")))
-    val lambdaSh = Dedup.shingleHashesLambda(col("text"), 3)
+    val lambdaSh = SpecTwins.shingleHashesLambda(col("text"), 3)
     val fromLambda = docs.select(col("doc_id") +: Dedup.minhashParams(n).zipWithIndex.map {
       case ((a, b), i) =>
         array_min(transform(lambdaSh, h => pmod(h * a + b, lit(Dedup.MinhashP)))).as(s"mh_$i")
@@ -44,7 +44,7 @@ class OpsSpec extends AnyFunSuite with SharedSpark {
   test("native lang_id == SQL-lambda languageId on real documents + edges") {
     val diff = docs.select(
       TextAnalysis.languageId(col("text")).as("a"),
-      TextAnalysis.languageIdLambda(col("text")).as("b"))
+      SpecTwins.languageIdLambda(col("text")).as("b"))
       .filter(col("a") =!= col("b")).count()
     assert(diff == 0)
     // whitespace/tie/unicode edges must agree too
@@ -53,7 +53,7 @@ class OpsSpec extends AnyFunSuite with SharedSpark {
       .toDF("text")
     val ediff = edges.select(
       TextAnalysis.languageId(col("text")).as("a"),
-      TextAnalysis.languageIdLambda(col("text")).as("b"))
+      SpecTwins.languageIdLambda(col("text")).as("b"))
       .filter(col("a") =!= col("b")).count()
     assert(ediff == 0)
   }
@@ -88,7 +88,7 @@ class OpsSpec extends AnyFunSuite with SharedSpark {
     val edges = docs.select(col("text"))
       .union(Seq("", "\n\n", "  \n x \n x \n  ", "a a a\tb\nc c").toDF("text"))
     val native = TextAnalysis.repetitionFeatures(col("text"))
-    val lambda = TextAnalysis.repetitionFeaturesLambda(col("text"))
+    val lambda = SpecTwins.repetitionFeaturesLambda(col("text"))
     val cmp = native.zip(lambda).map { case ((n, nc), (_, lc)) =>
       !(nc <=> lc) }.reduce(_ || _)
     assert(edges.filter(cmp).count() == 0)
@@ -468,7 +468,7 @@ class OpsSpec extends AnyFunSuite with SharedSpark {
         r.getDouble(5))).toSet
     // per-group oracle: the direct recompute formulation
     val perGroup = (0L to 2L).flatMap { g =>
-      Similarity.mmrSelectRecompute(emb.filter($"grp" === g), "vec_id",
+      SpecTwins.mmrSelectRecompute(emb.filter($"grp" === g), "vec_id",
           "embedding", "rel", k = 4)
         .collect().map(r => (g, r.getInt(0), r.getLong(1),
           r.getDouble(2), if (r.isNullAt(3)) null else r.getDouble(3),
@@ -484,7 +484,7 @@ class OpsSpec extends AnyFunSuite with SharedSpark {
     val b = emb.limit(50).select($"vec_id", $"embedding".as("b"))
     val both = a.join(b, "vec_id")
       .select(Similarity.dot(col("a"), col("b")).as("x"),
-        Similarity.dotLambda(col("a"), col("b")).as("y"))
+        SpecTwins.dotLambda(col("a"), col("b")).as("y"))
     assert(both.filter(col("x") =!= col("y")).count() == 0)
   }
 
@@ -863,7 +863,7 @@ class OpsSpec extends AnyFunSuite with SharedSpark {
     for (bits <- Seq(8, 16)) {
       val diff = emb.select(
         Similarity.signBits(col("embedding"), bits).as("a"),
-        Similarity.signBitsLambda(col("embedding"), bits).as("b"))
+        SpecTwins.signBitsLambda(col("embedding"), bits).as("b"))
         .filter(col("a") =!= col("b")).count()
       assert(diff == 0, s"bits=$bits")
     }
@@ -876,7 +876,7 @@ class OpsSpec extends AnyFunSuite with SharedSpark {
     ).toDF("embedding")
     val ediff = edges.select(
       Similarity.signBits(col("embedding"), 8).as("a"),
-      Similarity.signBitsLambda(col("embedding"), 8).as("b"))
+      SpecTwins.signBitsLambda(col("embedding"), 8).as("b"))
       .filter(col("a") =!= col("b")).count()
     assert(ediff == 0)
     // array<double> callers get an analysis-time cast to array<float>
@@ -1068,7 +1068,7 @@ class OpsSpec extends AnyFunSuite with SharedSpark {
       .toDF("i", "t", "keep", "want")
     val got = df.select(col("i"), col("want"),
       NativeText.keep_split_parts(col("t"), col("keep"), "\n\n").as("nat"),
-      Dedup.keepSplitPartsLambda(col("t"), col("keep"), "\n\n").as("lam"))
+      SpecTwins.keepSplitPartsLambda(col("t"), col("keep"), "\n\n").as("lam"))
       .collect()
     got.foreach { r =>
       assert(r.getAs[String]("nat") == r.getAs[String]("want"), r)
@@ -1094,7 +1094,7 @@ class OpsSpec extends AnyFunSuite with SharedSpark {
     import graft.functions.NativeText
     val diff = docs.select(
       NativeText.word_ngrams(coalesce(col("text"), lit("")), 8).as("a"),
-      Dedup.wordNgramsLambda(col("text"), 8).as("b"))
+      SpecTwins.wordNgramsLambda(col("text"), 8).as("b"))
       .filter(!(col("a") <=> col("b"))).count()
     assert(diff == 0)
     // tokenization is on U+0020 ONLY (tabs/newlines are token chars),
@@ -1106,7 +1106,7 @@ class OpsSpec extends AnyFunSuite with SharedSpark {
     for (n <- Seq(1, 2, 3)) {
       val ediff = edges.select(
         NativeText.word_ngrams(coalesce(col("text"), lit("")), n).as("a"),
-        Dedup.wordNgramsLambda(col("text"), n).as("b"))
+        SpecTwins.wordNgramsLambda(col("text"), n).as("b"))
         .filter(!(col("a") <=> col("b"))).count()
       assert(ediff == 0, s"n=$n")
     }
@@ -2238,7 +2238,7 @@ class OpsSpec extends AnyFunSuite with SharedSpark {
       graft.functions.NativeHashes.gram_pairs(col("vec"), 1000L)
         .as("p")).orderBy("id").collect().map(_.toSeq)
     val lambda = df.select(col("id"),
-      graft.ops.Similarity.gramPairsLambda(col("vec"), 1000L).as("p"))
+      SpecTwins.gramPairsLambda(col("vec"), 1000L).as("p"))
       .orderBy("id").collect().map(_.toSeq)
     assert(native.toSeq == lambda.toSeq)
     // SQL registration round-trip
@@ -2280,14 +2280,14 @@ class OpsSpec extends AnyFunSuite with SharedSpark {
       val w = texts.select(
         graft.functions.NativeText.tagged_word_ngrams(lower(col("t")),
           maxN).cast("array<struct<n:int,g:string>>").as("a"),
-        graft.ops.TextAnalysis.taggedWordGramsLambda(col("t"), maxN)
+        SpecTwins.taggedWordGramsLambda(col("t"), maxN)
           .cast("array<struct<n:int,g:string>>").as("b"))
         .collect()
       w.foreach(r => assert(r.get(0) == r.get(1), r))
       val c = texts.select(
         graft.functions.NativeText.tagged_char_ngrams(lower(col("t")),
           maxN).cast("array<struct<n:int,g:string>>").as("a"),
-        graft.ops.TextAnalysis.taggedCharGramsLambda(col("t"), maxN)
+        SpecTwins.taggedCharGramsLambda(col("t"), maxN)
           .cast("array<struct<n:int,g:string>>").as("b"))
         .collect()
       c.foreach(r => assert(r.get(0) == r.get(1), r))
@@ -2310,11 +2310,11 @@ class OpsSpec extends AnyFunSuite with SharedSpark {
       d.orderBy("g").collect().map(_.toSeq).toSeq
     assert(rows(graft.ops.TextAnalysis.bleu(docs, "g", "id", "cand",
         "ref", maxN = 3)) ==
-      rows(graft.ops.TextAnalysis.bleuViaGramJoin(docs, "g", "id",
+      rows(SpecTwins.bleuViaGramJoin(docs, "g", "id",
         "cand", "ref", maxN = 3)))
     assert(rows(graft.ops.TextAnalysis.chrF(docs, "g", "id", "cand",
         "ref", maxN = 4)) ==
-      rows(graft.ops.TextAnalysis.chrfViaGramJoin(docs, "g", "id",
+      rows(SpecTwins.chrfViaGramJoin(docs, "g", "id",
         "cand", "ref", maxN = 4)))
   }
 
@@ -2423,7 +2423,7 @@ class OpsSpec extends AnyFunSuite with SharedSpark {
     // nine rounds, each cut by the round driver
     val inc = canon(graft.ops.Similarity.mmrSelect(
       df, "vec_id", "embedding", "rel", k = 9))
-    val rec = canon(graft.ops.Similarity.mmrSelectRecompute(
+    val rec = canon(SpecTwins.mmrSelectRecompute(
       df, "vec_id", "embedding", "rel", k = 9))
     assert(inc == rec)
     assert(inc.size == 9)
