@@ -177,7 +177,7 @@ object ScaleStress {
           Multimodal.withSyntheticAvi(docs, "doc_id"))
         (st.queryExecution.toRdd.count(), sig(st))
       }
-      // q72 shape: WAV PCM construct→javax.sound decode→stats — same
+      // q72 shape: WAV PCM construct→RIFF decode→stats — same
       // linear-CPU/no-shuffle claim for the audio tier
       timed(scale, "audio_decode") {
         val st = Multimodal.decodeAudioStats(

@@ -17,7 +17,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * the difference between a toy and a 100 TB dedup pass.
   *
   * All hashes are the engine-independent polynomial scheme of
-  * [[graft.ops.TextAnalysis.polyHash]], so the DuckDB oracle replays them.
+  * [[NativeHashes.poly_hash]], so the DuckDB oracle replays them.
   */
 object HashImpls {
   val P: Long = 1000000007L

@@ -420,7 +420,7 @@ object Corpus {
     import spark.implicits._
     val avail = df.groupBy(col(sourceCol).cast("string").as("source"))
       .agg(sum(col(tokCol)).cast("long").as("n_tokens"))
-    val policy = broadcast(shareMicro.toDF("source", "share_micro"))
+    val policy = shareMicro.toDF("source", "share_micro")
     val joined = avail.join(policy, Seq("source"), "full_outer")
       .select(col("source"),
         coalesce(col("n_tokens"), lit(0L)).as("n_tokens"),

@@ -12,12 +12,12 @@ import org.apache.spark.util.LongAccumulator
   * training, Bradley–Terry). It owns the four jobs every round loop
   * has, each done here once:
   *
-  *  - **Materialization.** A round is cut from its lineage by ONE idiom:
-  *    its executed `RDD[InternalRow]`, persisted, re-wrapped as a
-  *    DataFrame leaf ([[GraftSqlBridge.internalCreateDataFrame]]).
-  *    Catalyst then plans a constant-depth tree per round, and no
-  *    checkpoint directory is needed. The wrap is lazy: the first action
-  *    that reads the round fills it.
+  *  - **Materialization.** A round is cut from its lineage by ONE idiom,
+  *    [[persistedLeaf]]: its executed `RDD[InternalRow]`, persisted,
+  *    re-wrapped as a DataFrame leaf. Catalyst then plans a
+  *    constant-depth tree per round, and no checkpoint directory is
+  *    needed. The wrap is lazy: the first action that reads the round
+  *    fills it.
   *  - **Storage.** Round r−1 is released once round r is filled, so a
   *    running loop holds at most two rounds; the final one is registered
   *    with [[Caches]] for the consumer to release. A released round
@@ -85,7 +85,20 @@ object Fixpoint {
     * uncut plan doubles per round. */
   val CutEachRound = 1
 
-  private val Level = StorageLevel.MEMORY_AND_DISK
+  /** The one lineage cut of `graft`: `d`'s executed `RDD[InternalRow]`,
+    * each row passed to `observe` and copied, persisted MEMORY_AND_DISK
+    * and re-wrapped as a DataFrame leaf (a `LogicalRDD`). Lazy: the first
+    * action that reads the leaf fills it, and a lost block is recomputed
+    * from the lineage on its next read. The caller releases the RDD. Used
+    * by every round here and by the pre-joined star
+    * ([[graft.star.PrejoinedStar]]). */
+  private[graft] def persistedLeaf(d: DataFrame,
+      observe: InternalRow => Unit = _ => ()): (DataFrame, RDD[InternalRow]) = {
+    val rdd = GraftSqlBridge.toInternalRdd(d).mapPartitions { it =>
+      it.map { r => observe(r); r.copy() }
+    }.persist(StorageLevel.MEMORY_AND_DISK)
+    (GraftSqlBridge.internalCreateDataFrame(d.sparkSession, rdd, d.schema), rdd)
+  }
 
   /** A wrapped round and the counters its filling pass adds to. */
   private final class Wrapped(val df: DataFrame, val rdd: RDD[InternalRow],
@@ -93,8 +106,7 @@ object Fixpoint {
       val hash: LongAccumulator)
 
   private def wrap(d: DataFrame, watch: Option[Watch]): Wrapped = {
-    val spark = d.sparkSession
-    val sc = spark.sparkContext
+    val sc = d.sparkSession.sparkContext
     val schema = d.schema
     val (rows, flagged, hash) =
       (sc.longAccumulator, sc.longAccumulator, sc.longAccumulator)
@@ -108,17 +120,13 @@ object Fixpoint {
       XxHash64(schema.fields.toIndexedSeq.zipWithIndex.sortBy(_._1.name)
         .map { case (f, i) => BoundReference(i, f.dataType, f.nullable) }, 42L)
     else null
-    val rdd = GraftSqlBridge.toInternalRdd(d).mapPartitions { it =>
-      it.map { r =>
-        rows.add(1L)
-        if (flagOrd >= 0 && !r.isNullAt(flagOrd) && r.getBoolean(flagOrd))
-          flagged.add(1L)
-        if (fp != null) hash.add(fp.eval(r).asInstanceOf[Long])
-        r.copy()
-      }
-    }.persist(Level)
-    new Wrapped(GraftSqlBridge.internalCreateDataFrame(spark, rdd, schema),
-      rdd, rows, flagged, hash)
+    val (df, rdd) = persistedLeaf(d, { r =>
+      rows.add(1L)
+      if (flagOrd >= 0 && !r.isNullAt(flagOrd) && r.getBoolean(flagOrd))
+        flagged.add(1L)
+      if (fp != null) hash.add(fp.eval(r).asInstanceOf[Long])
+    })
+    new Wrapped(df, rdd, rows, flagged, hash)
   }
 
   private def release(w: Wrapped): Unit = w.rdd.unpersist(blocking = false)

@@ -214,12 +214,17 @@ object Multimodal {
       media_id: Long, format: String, sample_rate: Int, channels: Int,
       bits_per_sample: Int, n_samples: Long, duration_ms: Long)
 
-  /** REAL (codec-free) WAV header parse: RIFF/WAVE `fmt ` + `data` chunks
-    * are plain little-endian bytes — rate/channels/width/sample-count need
-    * no decoder, exactly like [[sniffImage]] for images. Walks the chunk
-    * list (fmt is not always first; LIST/fact chunks are common), so
-    * real-world files parse too. */
-  def sniffWav(b: Array[Byte]): Option[(Int, Int, Int, Long)] = {
+  /** What the RIFF/WAVE chunk walk reads: the first `fmt ` chunk's format
+    * tag, rate, channels and sample width, and the offset and declared
+    * size of the first `data` chunk. */
+  private final case class WavChunks(tag: Int, rate: Int, channels: Int,
+      bits: Int, dataAt: Int, dataBytes: Long)
+
+  /** The chunk walk under [[sniffWav]] and [[AudioCodec]]; None when `b` is
+    * not RIFF/WAVE or lacks either chunk. Walks the chunk list (fmt is not
+    * always first; LIST/fact chunks are common), so real-world files
+    * parse too. */
+  private def walkWav(b: Array[Byte]): Option[WavChunks] = {
     def u8(i: Int) = b(i) & 0xff
     def le16(i: Int) = u8(i) | (u8(i + 1) << 8)
     def le32(i: Int): Long = (u8(i) | (u8(i + 1) << 8) | (u8(i + 2) << 16) |
@@ -227,29 +232,36 @@ object Multimodal {
     if (b.length < 36 || b(0) != 'R' || b(1) != 'I' || b(2) != 'F' || b(3) != 'F' ||
       b(8) != 'W' || b(9) != 'A' || b(10) != 'V' || b(11) != 'E') return None
     var i = 12
-    var rate = -1; var channels = -1; var bits = -1
+    var fmtAt = -1; var dataAt = -1
     var dataBytes = -1L
-    while (i + 8 <= b.length && (rate < 0 || dataBytes < 0)) {
+    while (i + 8 <= b.length && (fmtAt < 0 || dataAt < 0)) {
       val id = new String(b, i, 4, java.nio.charset.StandardCharsets.US_ASCII)
       val size = le32(i + 4)
-      if (id == "fmt " && i + 24 <= b.length) {
-        channels = le16(i + 10)
-        rate = le32(i + 12).toInt
-        bits = le16(i + 22)
-      } else if (id == "data") dataBytes = size
+      if (id == "fmt " && fmtAt < 0 && i + 24 <= b.length) fmtAt = i + 8
+      else if (id == "data" && dataAt < 0) { dataAt = i + 8; dataBytes = size }
       // chunks are word-aligned: odd sizes carry a pad byte; a corrupt
       // huge size must terminate the walk, not wrap the index
       val next = i.toLong + 8 + size + (size & 1)
       if (next <= i || next > Int.MaxValue) i = b.length
       else i = next.toInt
     }
-    // sub-byte widths (4-bit IMA ADPCM is a real-world format) would make
-    // the block divisor 0 — that's a "can't count samples" sentinel, not
-    // an ArithmeticException killing the task
-    if (rate <= 0 || channels <= 0 || bits < 8 || bits % 8 != 0 ||
-      dataBytes < 0) None
-    else Some((rate, channels, bits, dataBytes / (channels * (bits / 8))))
+    if (fmtAt < 0 || dataAt < 0) None
+    else Some(WavChunks(le16(fmtAt), le32(fmtAt + 4).toInt, le16(fmtAt + 2),
+      le16(fmtAt + 14), dataAt, dataBytes))
   }
+
+  /** REAL (codec-free) WAV header parse: RIFF/WAVE `fmt ` + `data` chunks
+    * are plain little-endian bytes — rate/channels/width/sample-count need
+    * no decoder, exactly like [[sniffImage]] for images. */
+  def sniffWav(b: Array[Byte]): Option[(Int, Int, Int, Long)] =
+    walkWav(b).flatMap { w =>
+      // sub-byte widths (4-bit IMA ADPCM is a real-world format) would
+      // make the block divisor 0 — that's a "can't count samples"
+      // sentinel, not an ArithmeticException killing the task
+      if (w.rate <= 0 || w.channels <= 0 || w.bits < 8 || w.bits % 8 != 0) None
+      else Some((w.rate, w.channels, w.bits,
+        w.dataBytes / (w.channels * (w.bits / 8))))
+    }
 
   /** Per-blob audio metadata, batched like [[imageMetadata]] — parallel,
     * no shuffle, no codec. */
@@ -296,56 +308,36 @@ object Multimodal {
 
   // ------------------------------------------------------- real PCM decode
 
-  /** REAL audio decode on the JDK's `javax.sound.sampled` — the audio twin
-    * of [[ImageCodec]]: `AudioSystem` parses the WAV container and hands
-    * back raw PCM frames with their format, zero external dependencies. */
+  /** REAL audio decode, codec-free — the audio twin of [[ImageCodec]]:
+    * linear PCM is plain bytes, so the samples are read straight off the
+    * `data` chunk that [[sniffWav]]'s chunk walk finds. */
   object AudioCodec {
-    /** Decode to (sampleRate, channels, per-channel sample values).
-      * 16-bit PCM is little-endian signed; 8-bit is unsigned (the WAV
-      * conventions `AudioSystem` reports through `AudioFormat`). None
-      * when no installed reader recognizes the payload. */
+    /** Decode to (sampleRate, channels, per-channel sample values). Only
+      * linear PCM (format tag 1) at 8 bits (unsigned) or 16 bits (signed
+      * little-endian) is in scope; 24/32-bit, float, u-law/a-law and
+      * non-WAV payloads (AIFF, AU) are the documented "did not decode"
+      * sentinel None, never silently-wrong stats. A `data` chunk shorter
+      * than its declared size yields the whole frames present. */
     def decodePcm(media: Array[Byte]): Option[(Int, Int, Array[Array[Int]])] =
-      try {
-        val in = javax.sound.sampled.AudioSystem.getAudioInputStream(
-          new java.io.ByteArrayInputStream(media))
-        val fmt = in.getFormat
-        // the sample loop below reads exactly 1 or 2 bytes per sample:
-        // 24/32-bit or float frames would be mis-read as 16-bit and u-law/
-        // a-law bytes treated as linear PCM — silently wrong stats. Only
-        // linear PCM at 8/16 bits is in scope; everything else is the
-        // documented "did not decode" sentinel.
-        val enc = fmt.getEncoding
-        val pcmOk = (enc == javax.sound.sampled.AudioFormat.Encoding.PCM_SIGNED ||
-          enc == javax.sound.sampled.AudioFormat.Encoding.PCM_UNSIGNED) &&
-          (fmt.getSampleSizeInBits == 8 || fmt.getSampleSizeInBits == 16)
-        if (!pcmOk) { in.close(); return None }
-        val data = in.readAllBytes()
-        in.close()
-        val channels = fmt.getChannels
-        val bytesPer = fmt.getSampleSizeInBits / 8
-        val n = data.length / (channels * bytesPer)
-        val out = Array.ofDim[Int](channels, n)
+      walkWav(media).filter(w => w.tag == 1 && (w.bits == 8 || w.bits == 16) &&
+        w.rate > 0 && w.channels > 0).map { w =>
+        val bytesPer = w.bits / 8
+        val present = math.min(w.dataBytes, (media.length - w.dataAt).toLong)
+        val n = (present / (w.channels * bytesPer)).toInt
+        val out = Array.ofDim[Int](w.channels, n)
         var j = 0
         while (j < n) {
           var c = 0
-          while (c < channels) {
-            val off = (j * channels + c) * bytesPer
+          while (c < w.channels) {
+            val off = w.dataAt + (j * w.channels + c) * bytesPer
             out(c)(j) =
-              if (bytesPer == 1) data(off) & 0xff // 8-bit PCM is unsigned
-              else {
-                // sign extends from whichever byte is the HIGH one
-                val b0 = data(off); val b1 = data(off + 1)
-                if (fmt.isBigEndian) (b0.toInt << 8) | (b1 & 0xff)
-                else (b1.toInt << 8) | (b0 & 0xff)
-              }
+              if (bytesPer == 1) media(off) & 0xff // 8-bit PCM is unsigned
+              else (media(off + 1).toInt << 8) | (media(off) & 0xff)
             c += 1
           }
           j += 1
         }
-        Some((fmt.getSampleRate.toInt, channels, out))
-      } catch {
-        case _: javax.sound.sampled.UnsupportedAudioFileException => None
-        case _: java.io.IOException                               => None
+        (w.rate, w.channels, out)
       }
   }
 

@@ -13,11 +13,6 @@ import org.apache.spark.sql.functions._
   */
 object TextAnalysis {
 
-  /** Whitespace tokens of the lowercased text (any whitespace run — a
-    * literal-space split broke language-ID on tab/newline-separated
-    * text). */
-  def tokens(text: Column): Column = split(lower(text), "\\s+")
-
   /** Token count on raw whitespace split. */
   def tokenCount(text: Column): Column = size(split(text, "\\s+"))
 
@@ -35,18 +30,6 @@ object TextAnalysis {
       transform(sequence(lit(1), length(text) - (n - 1)),
         i => text.substr(i, lit(n))))
       .otherwise(array().cast("array<string>"))
-
-  /** Deterministic polynomial rolling hash over the characters of a string:
-    * fold (acc·131 + codepoint) mod 1e9+7. Unlike xxhash64/murmur it is
-    * trivially reproducible in any engine (the DuckDB oracle replays it
-    * with list_reduce), which is what a cross-system fingerprint needs.
-    * This is the SQL-lambda executable spec; hot paths use the codegen'd
-    * [[graft.functions.NativeHashes.poly_hash]] (identical results). */
-  def polyHash(s: Column): Column =
-    aggregate(
-      filter(split(s, ""), c => c =!= ""),
-      lit(0L),
-      (acc, c) => pmod(acc * 131L + ascii(c), lit(1000000007L)))
 
   /** Document fingerprint: poly-hash of the whitespace-normalized,
     * lowercased text (codegen'd). */
@@ -73,13 +56,6 @@ object TextAnalysis {
     * is the point. */
   val stopwords: Seq[(String, Seq[String])] =
     graft.functions.TextImpls.stopwords
-
-  /** Per-language stopword-hit count over the token array (the SQL-lambda
-    * executable spec; hot paths use the native twins below). */
-  def langScore(toks: Column, lang: String): Column = {
-    val words = stopwords.toMap.apply(lang)
-    size(filter(toks, t => t.isin(words: _*)))
-  }
 
   /** Language-ID: argmax of stopword hits, ties broken by list order,
     * "und" (undetermined) when no stopword hits at all. Codegen'd

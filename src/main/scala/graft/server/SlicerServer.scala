@@ -543,7 +543,7 @@ final class SlicerServer(workspace: Workspace, port: Int = 0,
       }
       var truncated = false
       val results = b.report(reqCell, items).map { case (qname, df) =>
-        val (json, t) = graft.formats.Formats.toJsonArrayTruncated(df)
+        val (json, t) = graft.formats.Formats.toJsonArrayTruncated(df, RecordLimit)
         truncated ||= t
         s"${jstr(qname)}: $json"
       }
@@ -632,7 +632,7 @@ final class SlicerServer(workspace: Workspace, port: Int = 0,
         Resp(200, "", XlsxMime, truncated, raw = Some(bytes),
           attachment = Some(s"$stem.xlsx"))
       } else {
-        val (json, truncated) = graft.formats.Formats.toJsonArrayTruncated(df)
+        val (json, truncated) = graft.formats.Formats.toJsonArrayTruncated(df, RecordLimit)
         Resp(200, json, "application/json", truncated)
       }
     }

@@ -1,8 +1,11 @@
 package graft.star
 
-import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 import graft.exprs.ExprLang
+import graft.ops.Fixpoint
 import graft.model._
 
 /** Maps logical attribute refs to physical (table, column) pairs.
@@ -265,44 +268,45 @@ final class StarSchema(
 
 /** One pre-joined star of a cube, built on first use and shared by every
   * browser of the cube (all identities, restriction cells, locales and
-  * hierarchy limits). The star is locally checkpointed: its rows live in
-  * the block manager and its lineage, with the broadcast relations and
-  * compiled plan of the build, is released. A lost block rebuilds the star
-  * on the next request; [[drop]] releases it for good, after which
-  * requests answer from their join trees. The owner
+  * hierarchy limits). The star is the round wrap of the iterative
+  * operators ([[graft.ops.Fixpoint.persistedLeaf]]): the full join's rows,
+  * persisted as they are first read, under a leaf that keeps the join's
+  * lineage. The first joined request fills it inside its own query; a
+  * lost block is recomputed on its next read. [[drop]] releases it for
+  * good, after which requests answer from their join trees. The owner
   * ([[graft.workspace.Workspace]]) drops it when a table of the cube's
   * store is re-registered or the cube switches to a denormalized table. */
 final class PrejoinedStar(cubeName: String) {
-  private var current: Option[DataFrame] = None
+  private var current: Option[(DataFrame, RDD[InternalRow])] = None
   private var dropped = false
   private var builds = 0
 
-  /** The star, built from `build` when absent or when a block of it was
-    * lost; None once dropped. Concurrent first requests build it once. */
+  /** The star, wrapped over `build` when absent; None once dropped.
+    * Concurrent first requests wrap it once. */
   def frame(build: => DataFrame): Option[DataFrame] = synchronized {
     if (dropped) None
     else {
-      if (!current.exists(GraftSqlBridge.checkpointBlocksPresent)) {
-        current.foreach(GraftSqlBridge.unpersistCheckpoint)
-        val star = build.localCheckpoint(eager = true)
-        GraftSqlBridge.nameCheckpoint(star, s"${PrejoinedStar.RddName} '$cubeName'")
-        current = Some(star)
+      if (current.isEmpty) {
+        val (star, rdd) = Fixpoint.persistedLeaf(build)
+        rdd.setName(s"${PrejoinedStar.RddName} '$cubeName'")
+        current = Some((star, rdd))
         builds += 1
       }
-      current
+      current.map(_._1)
     }
   }
 
-  /** How many times the star was built (a rebuild counts). */
+  /** How many times the star was built. */
   def buildCount: Int = synchronized(builds)
 
-  /** The star as last built; None before the first build and once dropped. */
-  private[graft] def built: Option[DataFrame] = synchronized(current)
+  /** The star's persisted rows; None before the first build and once
+    * dropped. */
+  private[graft] def built: Option[RDD[InternalRow]] = synchronized(current.map(_._2))
 
   /** Release the star's blocks; later requests read their join trees. */
   def drop(): Unit = synchronized {
     dropped = true
-    current.foreach(GraftSqlBridge.unpersistCheckpoint)
+    current.foreach(_._2.unpersist(blocking = false))
     current = None
   }
 }

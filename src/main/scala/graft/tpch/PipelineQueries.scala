@@ -9,7 +9,7 @@ import graft.ops.{Clustering, Corpus, Dedup, EventAnalytics, Incremental, Simila
   * `events` tables.
   *
   * Oracle strategy: the ops are built on an engine-independent polynomial
-  * hash ([[TextAnalysis.polyHash]]) and fixed-association float folds, so
+  * hash ([[graft.functions.NativeHashes.poly_hash]]) and fixed-association float folds, so
   * even MinHash signatures, SimHash bits, and cosine scores are replayed
   * exactly in DuckDB SQL (list lambdas) — far stronger than rows-only
   * checks for ops conventionally considered "not SQL-expressible".
@@ -457,7 +457,7 @@ object PipelineQueries {
        |SELECT * FROM ($out) ORDER BY rank""".stripMargin
   }
 
-  /** DuckDB replay of TextAnalysis.polyHash over a string expression. */
+  /** DuckDB replay of `poly_hash` over a string expression. */
   private def dpolyhash(sexpr: String): String =
     s"list_reduce(list_prepend(CAST(0 AS BIGINT), " +
       s"list_transform(string_split($sexpr, ''), c -> CAST(ascii(c) AS BIGINT))), " +
@@ -3260,7 +3260,7 @@ object PipelineQueries {
 
     // multimodal audio tier, REAL decode: synthesize a full PCM WAV per
     // doc (every 16-bit sample a linear function of doc_id/index/channel),
-    // decode it back through javax.sound.sampled, emit per-channel
+    // decode its PCM back off the RIFF data chunk, emit per-channel
     // mean/extrema; the oracle recomputes the statistics arithmetically —
     // the audio twin of q69's image round-trip
     "q72_audio_decode" -> ((s, dir) =>

@@ -1,6 +1,5 @@
 package org.apache.spark.sql
 
-import org.apache.spark.SparkEnv
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
@@ -9,11 +8,11 @@ import org.apache.spark.sql.types.StructType
 /** Bridge into `private[sql]` surface: Column ↔ Catalyst Expression
   * conversion for our custom native expressions (Spark 4 removed the
   * public `new Column(expr)` constructor; `classic.ExpressionUtils` is the
-  * blessed internal path), plus `internalCreateDataFrame` for wrapping an
-  * `RDD[InternalRow]` back into a DataFrame (used by iterative algorithms
-  * to truncate Catalyst lineage per round without a checkpoint directory),
+  * blessed internal path), `toInternalRdd` and `internalCreateDataFrame`
+  * for the one lineage cut, `graft.ops.Fixpoint.persistedLeaf` (the
+  * iterative operators' rounds and the slicer's pre-joined stars), and
   * the `private[spark]` listener-bus drain and codegen counters behind
-  * `graft.RunMeter`, and the block checks of `graft.star.PrejoinedStar`.
+  * `graft.RunMeter`.
   */
 object GraftSqlBridge {
   /** Wait until every listener event posted so far has been delivered. */
@@ -35,31 +34,6 @@ object GraftSqlBridge {
       spark: SparkSession, rdd: RDD[InternalRow], schema: StructType): DataFrame =
     spark.asInstanceOf[classic.SparkSession]
       .internalCreateDataFrame(rdd, schema, isStreaming = false)
-
-  /** The RDD under a Dataset returned by `localCheckpoint`. */
-  private def checkpointRdd(df: DataFrame): RDD[_] =
-    df.asInstanceOf[classic.Dataset[Row]].logicalPlan match {
-      case r: execution.LogicalRDD => r.rdd
-      case other => throw new IllegalArgumentException(
-        s"not a checkpointed Dataset: ${other.nodeName}")
-    }
-
-  /** Whether a block manager still holds every partition of a locally
-    * checkpointed Dataset (a missing one fails every read of it). */
-  def checkpointBlocksPresent(df: DataFrame): Boolean = {
-    val rdd = checkpointRdd(df)
-    val ids: Array[org.apache.spark.storage.BlockId] =
-      rdd.partitions.indices.map(i => org.apache.spark.storage.RDDBlockId(rdd.id, i)).toArray
-    SparkEnv.get.blockManager.master.getLocations(ids).forall(_.nonEmpty)
-  }
-
-  /** Name the RDD of a locally checkpointed Dataset. */
-  def nameCheckpoint(df: DataFrame, name: String): Unit =
-    checkpointRdd(df).setName(name)
-
-  /** Drop the blocks of a locally checkpointed Dataset. */
-  def unpersistCheckpoint(df: DataFrame): Unit =
-    checkpointRdd(df).unpersist(blocking = false)
 
   /** Whole-stage and expression classes Janino compiled in this JVM. */
   def codegenCompiles: Long =

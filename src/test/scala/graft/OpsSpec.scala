@@ -16,7 +16,7 @@ class OpsSpec extends AnyFunSuite with SharedSpark {
   test("native poly_hash == SQL-lambda polyHash on real documents") {
     val diff = docs.select(
       NativeHashes.poly_hash(col("text")).as("a"),
-      TextAnalysis.polyHash(col("text")).as("b"))
+      SpecTwins.polyHashLambda(col("text")).as("b"))
       .filter(col("a") =!= col("b")).count()
     assert(diff == 0)
   }
@@ -63,7 +63,7 @@ class OpsSpec extends AnyFunSuite with SharedSpark {
     // exactly as shipped before the native rewrite
     val toks = split(col("text"), " ")
     val nToks = size(toks)
-    val nStop = TextAnalysis.langScore(split(lower(col("text")), " "), "en")
+    val nStop = SpecTwins.langScoreLambda(split(lower(col("text")), " "), "en")
     val meanTokLen = aggregate(toks, lit(0L), (acc, t) => acc + length(t))
       .cast("double") / nToks
     val edges = docs.select(col("text"))
@@ -751,6 +751,13 @@ class OpsSpec extends AnyFunSuite with SharedSpark {
     assert(Multimodal.AudioCodec.decodePcm(wavWith(24, 1)).isEmpty)
     assert(Multimodal.AudioCodec.decodePcm(wavWith(32, 1)).isEmpty)
     assert(Multimodal.AudioCodec.decodePcm(wavWith(32, 3)).isEmpty) // IEEE float
+    // 8-bit PCM is unsigned; a data chunk shorter than its declared size
+    // yields the whole frames present
+    val pcm8 = Multimodal.wavHeader(8000, 1, 8, 4L) ++ Array[Byte](0, 127, -128, -1)
+    def samples(b: Array[Byte]) =
+      Multimodal.AudioCodec.decodePcm(b).map(d => (d._1, d._2, d._3.head.toSeq))
+    assert(samples(pcm8).contains((8000, 1, Seq(0, 127, 128, 255))))
+    assert(samples(pcm8.dropRight(1)).contains((8000, 1, Seq(0, 127, 128))))
   }
 
   test("AVI walk + frame sampling: construct↔walk round-trip, stride, garbage") {

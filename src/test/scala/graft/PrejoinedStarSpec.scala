@@ -5,7 +5,9 @@ import scala.util.Try
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.{DataFrame, GraftSqlBridge}
+import org.apache.spark.SparkEnv
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.storage.RDDBlockId
 import graft.auth.HierarchyLimit
 import graft.browser.Browser
 import graft.cells.CutParser
@@ -16,9 +18,10 @@ import graft.workspace.Workspace
 /** The per-cube pre-joined star: a workspace browser answering from it
   * gives the same answers as a browser over the pruned join tree, for
   * random requests of every verb; only a cube whose joins are all
-  * verified `match` joins reads it; a lost block rebuilds it; and
-  * re-registering a table or switching the cube to a denormalized table
-  * drops it. The star is a small TPC-H-shaped one built here. */
+  * verified `match` joins reads it; a lost block is recomputed, not
+  * rebuilt; and re-registering a table or switching the cube to a
+  * denormalized table drops it. The star is a small TPC-H-shaped one
+  * built here. */
 class PrejoinedStarSpec extends AnyFunSuite with SharedSpark {
 
   import spark.implicits._
@@ -225,20 +228,23 @@ class PrejoinedStarSpec extends AnyFunSuite with SharedSpark {
     assert(ws.prejoinedStar("sales").forall(_.buildCount == 0))
   }
 
-  test("a lost block of the star rebuilds it on the next request") {
+  test("a lost block of the star is recomputed on the next request, not rebuilt") {
     val ws = workspace(cube)
     val b = ws.browser("sales")
     def regionCounts = rows(b.aggregate(drilldown = Seq("customer:region")).cells)
     val before = regionCounts
     val star = ws.prejoinedStar("sales").get
-    val built = star.built.get
-    GraftSqlBridge.unpersistCheckpoint(built)
-    val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
-    while (GraftSqlBridge.checkpointBlocksPresent(built) && System.nanoTime() < deadline)
-      Thread.sleep(20)
-    assert(!GraftSqlBridge.checkpointBlocksPresent(built))
+    val rdd = star.built.get
+    val blocks = rdd.partitions.indices.map(RDDBlockId(rdd.id, _))
+    def cachedPartitions: Int = blocks.count(SparkEnv.get.blockManager.master.contains)
+    assert(cachedPartitions == blocks.size)
+    // block by block, so the RDD keeps its storage level (an unpersist
+    // would not)
+    blocks.foreach(SparkEnv.get.blockManager.removeBlock(_))
+    assert(cachedPartitions == 0)
     assert(regionCounts == before)
-    assert(star.buildCount == 2)
+    assert(star.buildCount == 1)
+    assert(cachedPartitions == blocks.size)
   }
 
   test("re-registering a table drops the cube's browsers and star: browsing sees the new rows") {

@@ -127,12 +127,33 @@ object SpecTwins {
 
   // ---------------------------------------------------------- TextAnalysis
 
+  /** Whitespace tokens of the lowercased text (any whitespace run — a
+    * literal-space split broke language-ID on tab/newline-separated
+    * text). */
+  def tokens(text: Column): Column = split(lower(text), "\\s+")
+
+  /** [[graft.functions.NativeHashes.poly_hash]]: the polynomial rolling
+    * hash over the characters of a string, fold (acc·131 + codepoint) mod
+    * 1e9+7, as the list fold the DuckDB oracle replays. */
+  def polyHashLambda(s: Column): Column =
+    aggregate(
+      filter(split(s, ""), c => c =!= ""),
+      lit(0L),
+      (acc, c) => pmod(acc * 131L + ascii(c), lit(1000000007L)))
+
+  /** Per-language stopword-hit count over the token array (the native
+    * form is [[graft.functions.StopwordHitsExpr]]). */
+  def langScoreLambda(toks: Column, lang: String): Column = {
+    val words = TextAnalysis.stopwords.toMap.apply(lang)
+    size(filter(toks, t => t.isin(words: _*)))
+  }
+
   /** [[graft.ops.TextAnalysis.languageId]]: per-language stopword hits
     * over the token array, argmax in list order, "und" on no hit. */
   def languageIdLambda(text: Column): Column = {
-    val toks = TextAnalysis.tokens(text)
+    val toks = tokens(text)
     val scored = TextAnalysis.stopwords.map { case (lang, _) =>
-      (lang, TextAnalysis.langScore(toks, lang)) }
+      (lang, langScoreLambda(toks, lang)) }
     val best = scored.map(_._2).reduce((a, b) => greatest(a, b))
     scored.foldRight(lit("und")) { case ((lang, score), acc) =>
       when(score === best && best > 0, lit(lang)).otherwise(acc)
@@ -267,7 +288,7 @@ object SpecTwins {
     * shingle space of [[graft.functions.NativeHashes.shingle_hashes]]). */
   def shingleHashesLambda(text: Column, k: Int): Column = {
     val toks = split(lower(text), "\\s+")
-    val ths = transform(toks, t => TextAnalysis.polyHash(t))
+    val ths = transform(toks, t => polyHashLambda(t))
     transform(sequence(lit(1), greatest(size(ths) - (k - 1), lit(1))),
       i => aggregate(slice(ths, i, lit(k)), lit(0L),
         (acc, h) => pmod(acc * 131L + h, lit(1000000007L))))
@@ -275,7 +296,7 @@ object SpecTwins {
 
   /** [[graft.ops.Dedup.simhash32]] over poly-hashed whitespace tokens. */
   def simhash32Lambda(text: Column): Column = {
-    val hs = transform(split(lower(text), "\\s+"), t => TextAnalysis.polyHash(t))
+    val hs = transform(split(lower(text), "\\s+"), t => polyHashLambda(t))
     val counts = aggregate(
       hs,
       array_repeat(lit(0), 32),

@@ -17,7 +17,8 @@ class SpecTwinsSpec extends AnyFunSuite {
     "repetitionFeaturesLambda", "taggedWordGramsLambda",
     "taggedCharGramsLambda", "bleuViaGramJoin", "chrfViaGramJoin",
     "keepSplitPartsLambda", "wordNgramsLambda", "shingleHashesLambda",
-    "simhash32Lambda", "zorderValueLambda", "canonicalizeLambda")
+    "simhash32Lambda", "zorderValueLambda", "canonicalizeLambda",
+    "polyHashLambda", "langScoreLambda")
 
   private def defines(text: String, name: String): Boolean =
     s"\\bdef $name\\b".r.findFirstIn(text).isDefined
