@@ -1,10 +1,11 @@
 package graft
 import org.apache.spark.sql.{SparkSession, DataFrame}
 import graft.cells._
-import graft.tpch.TpchModel
+import graft.tpch.{Gate, TpchModel}
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
-  * Query catalog lives in [[graft.tpch.Queries]]. */
+  * Query catalog lives in the gate registries of [[graft.tpch.Queries]]
+  * and [[graft.tpch.PipelineQueries]]. */
 object SparkEntry {
   /** Flagship query on /root/testdata/sf0.001 (SURVEY §7.2): slice on
     * customer region, drill down to month, aggregate sums + count through
@@ -18,14 +19,16 @@ object SparkEntry {
     ).cells
   }
 
-  /** One entry per implemented operator from SURVEY.md §2, plus the
-    * training-data pipeline operators (dedup / similarity / text /
-    * multimodal / sessionization). */
+  /** Both gate catalogs: one entry per implemented operator from SURVEY.md
+    * §2, plus the training-data pipeline operators (dedup / similarity /
+    * text / multimodal / sessionization), each beside its DuckDB oracle. */
+  private lazy val gates = Gate.registry(
+    graft.tpch.Queries.registry ++ graft.tpch.PipelineQueries.registry: _*)
+
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    graft.tpch.Queries.all ++ graft.tpch.PipelineQueries.all
+    gates.map(g => g.name -> g.query).toMap
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops. */
-  def oracleSql: Map[String, String] =
-    graft.tpch.Queries.oracle ++ graft.tpch.PipelineQueries.oracle
+    * the same parquet tables. */
+  def oracleSql: Map[String, String] = gates.map(g => g.name -> g.oracle).toMap
 }

@@ -18,8 +18,9 @@ object Formats {
   def writeJsonLines(df: DataFrame, path: String): Unit =
     df.write.mode(SaveMode.Overwrite).json(path)
 
-  /** Quoted + escaped JSON string (shared by the server's renderer and the
-    * cross-table formatter — one escaping implementation). */
+  /** Quoted + escaped JSON string (shared by the server's renderer, the
+    * cross-table formatter, the JSON request log and `Verify`'s
+    * oracle_sql.json — one escaping implementation). */
   def jsonString(s: String): String =
     "\"" + Option(s).getOrElse("").flatMap {
       case '"'  => "\\\""
@@ -30,6 +31,14 @@ object Formats {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
+
+  /** One CSV field: quoted, inner quotes doubled, when it holds a comma,
+    * a quote, CR or LF (shared by the server's CSV responses and the CSV
+    * request log). */
+  def csvField(s: String): String =
+    if (s.exists(c => c == ',' || c == '"' || c == '\n' || c == '\r'))
+      "\"" + s.replace("\"", "\"\"") + "\""
+    else s
 
   /** The named columns of a row as one JSON object, with the bytes
     * `Dataset.toJSON` writes for that row (both use the session's JSON

@@ -2,6 +2,7 @@ package graft.server
 
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths, StandardOpenOption}
+import graft.formats.Formats
 
 /** Server request logging (reference `cubes/server/logging.py:70-268`):
   * every logged browser call (aggregate / facts / members) produces one
@@ -69,22 +70,6 @@ object RequestLog {
     Files.write(p, (line + "\n").getBytes(StandardCharsets.UTF_8),
       StandardOpenOption.CREATE, StandardOpenOption.APPEND)
   }
-
-  private[server] def csvField(v: String): String =
-    if (v.exists(c => c == ',' || c == '"' || c == '\n' || c == '\r'))
-      "\"" + v.replace("\"", "\"\"") + "\""
-    else v
-
-  private[server] def jsonStr(v: String): String =
-    "\"" + v.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
 }
 
 /** One sink for request records (reference `RequestLogHandler`,
@@ -117,7 +102,7 @@ final class CsvFileRequestLogHandler(path: String) extends RequestLogHandler {
   override def writeRecord(record: Map[String, String]): Unit =
     RequestLog.appendLine(path,
       RequestLog.Items.map(k =>
-        RequestLog.csvField(record.getOrElse(k, ""))).mkString(","))
+        Formats.csvField(record.getOrElse(k, ""))).mkString(","))
 }
 
 /** Appends one JSON object per line (reference `JSONRequestLogHandler`,
@@ -127,7 +112,7 @@ final class JsonLinesRequestLogHandler(path: String)
   override def writeRecord(record: Map[String, String]): Unit =
     RequestLog.appendLine(path,
       RequestLog.Items.flatMap(k => record.get(k).map(v =>
-        s"${RequestLog.jsonStr(k)}: ${RequestLog.jsonStr(v)}"))
+        s"${Formats.jsonString(k)}: ${Formats.jsonString(v)}"))
         .mkString("{", ", ", "}"))
 }
 

@@ -783,11 +783,7 @@ final class SlicerServer(workspace: Workspace, port: Int = 0,
       val rows = fetched.take(limit)
       def cell(v: Any): String = v match {
         case null => ""
-        case other =>
-          val s = String.valueOf(other)
-          if (s.exists(c => c == ',' || c == '"' || c == '\n' || c == '\r'))
-            "\"" + s.replace("\"", "\"\"") + "\""
-          else s
+        case other => graft.formats.Formats.csvField(String.valueOf(other))
       }
       val headerLines = header match {
         case Some(cells) => Seq(cells.map(cell).mkString(","))

@@ -22,6 +22,16 @@ class GateContractSpec extends AnyFunSuite with SharedSpark {
     assert(orphans.isEmpty, s"oracles without query: $orphans")
   }
 
+  test("a registry with a repeated gate name fails, naming it") {
+    import graft.tpch.Gate
+    def gate(name: String) = Gate(name, (s, _) => s.range(1).toDF(), "SELECT 1")
+    val e = intercept[IllegalArgumentException](
+      Gate.registry(gate("q1_a"), gate("q2_b"), gate("q1_a")))
+    assert(e.getMessage.contains("duplicate gate names: q1_a"), e.getMessage)
+    assert(Gate.registry(gate("q1_a"), gate("q2_b")).map(_.name) ==
+      Seq("q1_a", "q2_b"))
+  }
+
   test("containerColumns flags array/map/struct, passes scalars") {
     val df = Seq((1L, "x")).toDF("id", "s")
       .withColumn("arr", array(lit(1), lit(2)))
