@@ -353,6 +353,33 @@ object Bench {
     if (peaks.isEmpty) 0L else peaks.sum / (1024L * 1024L)
   }
 
+  /** A `plan_fp`-style map (query -> hex fingerprint) under `key` of a
+    * bench artifact's text. */
+  private def fpMapFrom(txt: String, key: String): Option[Map[String, String]] =
+    ("\"" + key + "\":\\{([^}]*)\\}").r.findFirstMatchIn(txt)
+      .map(_.group(1)).map { body =>
+        "\"([^\"]+)\":\"([0-9a-f]*)\"".r.findAllMatchIn(body)
+          .map(m => m.group(1) -> m.group(2)).toMap
+      }
+
+  /** The plan-fingerprint baseline: `plan_fp` and `plan_fp_strict` of the
+    * full-catalog `BENCH_local.json` in `dir`, this checkout's own last
+    * pass; None when there is none. A committed `BENCH_rNN_local.json`
+    * comes from another host and round, and a subset run's
+    * `BENCH_local_subset.json` covers part of the catalog, so neither is
+    * a baseline. */
+  def planFpBaseline(dir: java.io.File)
+      : Option[(Map[String, String], Map[String, String])] =
+    scala.util.Try(new String(java.nio.file.Files.readAllBytes(
+      new java.io.File(dir, "BENCH_local.json").toPath), "UTF-8")).toOption
+      .flatMap(txt => fpMapFrom(txt, "plan_fp").map(primary =>
+        (primary, fpMapFrom(txt, "plan_fp_strict").getOrElse(Map.empty[String, String]))))
+
+  /** `plan_fp_diff` when the checkout has no baseline: nothing is diffed,
+    * so no count is reported. */
+  private val NoFpBaselineJson =
+    """{"baseline":null,"note":"no BENCH_local.json in this checkout: plans not diffed"}"""
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = Sessions.local(Sessions.cpus)
@@ -581,45 +608,27 @@ object Bench {
     val jvmJson = allPasses.map(p =>
       s"""{"pass":$p,"gc_ms":${gcMs.getOrElse(p, -1L)},"heap_peak_mb":${heapPeak.getOrElse(p, -1L)}}""")
       .mkString("[", ",", "]")
-    // plan-fingerprint diff vs the previous round's committed
-    // BENCH_local.json (or BENCH_rNN_local.json fallback): "identical
-    // fingerprint + slower wall" = environment, "changed fingerprint" =
-    // plan regression — the r9→r10 uniform-drift triage, automated.
+    // plan-fingerprint diff vs this checkout's previous full-catalog
+    // BENCH_local.json: "identical fingerprint + slower wall" =
+    // environment, "changed fingerprint" = plan regression — the r9→r10
+    // uniform-drift triage, automated.
     val fpJson = names.map(n =>
       s"\"" + n + "\":\"" + planFp.getOrElse(n, "") + "\"")
       .mkString("{", ",", "}")
     val fpStrictJson = names.map(n =>
       s"\"" + n + "\":\"" + planFpStrict.getOrElse(n, "") + "\"")
       .mkString("{", ",", "}")
-    def fpMapFrom(txt: String, key: String): Option[Map[String, String]] =
-      ("\"" + key + "\":\\{([^}]*)\\}").r.findFirstMatchIn(txt)
-        .map(_.group(1)).map { body =>
-          "\"([^\"]+)\":\"([0-9a-f]*)\"".r.findAllMatchIn(body)
-            .map(m => m.group(1) -> m.group(2)).toMap
-        }
-    val (prevFps, prevFpsStrict): (Map[String, String], Map[String, String]) = {
-      // numeric round sort: lexicographic collation would diff r100
-      // against the wrong baseline once rounds outgrow two digits
-      val candidates = "BENCH_local.json" +: new java.io.File(".")
-        .list().toSeq.filter(_.matches("BENCH_r\\d+_local\\.json"))
-        .sortBy(f => "\\d+".r.findFirstIn(f).get.toInt).reverse
-      candidates.flatMap { f =>
-        try {
-          val txt = new String(java.nio.file.Files.readAllBytes(
-            java.nio.file.Paths.get(f)), "UTF-8")
-          fpMapFrom(txt, "plan_fp").map(primary =>
-            (primary, fpMapFrom(txt, "plan_fp_strict").getOrElse(
-              Map.empty[String, String])))
-        } catch { case _: Throwable => None }
-      }.headOption.getOrElse((Map.empty, Map.empty))
-    }
+    val baseline = planFpBaseline(new java.io.File("."))
+    val (prevFps, prevFpsStrict) = baseline.getOrElse((Map.empty[String, String],
+      Map.empty[String, String]))
     val fpChanged = names.filter(n => prevFps.get(n)
       .exists(p => p.nonEmpty && planFp.getOrElse(n, "").nonEmpty
         && p != planFp(n)))
     val fpSame = names.count(n => prevFps.get(n).contains(planFp.getOrElse(n, "-")))
     val fpNew = names.count(n => !prevFps.contains(n))
-    val fpDiffJson = s"""{"prev_found":${prevFps.nonEmpty},"same":$fpSame,"new_queries":$fpNew,"changed":${
-      fpChanged.take(20).map("\"" + _ + "\"").mkString("[", ",", "]")}}"""
+    val fpDiffJson = if (baseline.isEmpty) NoFpBaselineJson
+      else s"""{"baseline":"BENCH_local.json","prev_found":true,"same":$fpSame,"new_queries":$fpNew,"changed":${
+        fpChanged.take(20).map("\"" + _ + "\"").mkString("[", ",", "]")}}"""
     // strict diff is advisory (the bistable queries legitimately flip):
     // read it as "strict changed + primary same + flat wall = AQE",
     // "strict changed + slower wall = strategy regression to triage"
@@ -628,8 +637,9 @@ object Bench {
         && p != planFpStrict(n)))
     val fpStrictSame = names.count(n =>
       prevFpsStrict.get(n).contains(planFpStrict.getOrElse(n, "-")))
-    val fpStrictDiffJson = s"""{"prev_found":${prevFpsStrict.nonEmpty},"same":$fpStrictSame,"changed":${
-      fpStrictChanged.take(40).map("\"" + _ + "\"").mkString("[", ",", "]")}}"""
+    val fpStrictDiffJson = if (baseline.isEmpty) NoFpBaselineJson
+      else s"""{"baseline":"BENCH_local.json","prev_found":${prevFpsStrict.nonEmpty},"same":$fpStrictSame,"changed":${
+        fpStrictChanged.take(40).map("\"" + _ + "\"").mkString("[", ",", "]")}}"""
     val pinnedProbeJson = pinnedProbes.toSeq.sortBy(_._1).map { case (n, ps) =>
       s"\"" + n + "\":" + ps.map(fmt4).mkString("[", ",", "]")
     }.mkString("{", ",", "}")
@@ -673,7 +683,8 @@ object Bench {
       passData.getOrElse(p, scala.collection.mutable
         .Map.empty[String, Double]).values.sum))
       .mkString("[", ",", "]")
-    val fpCompact = s"""{"prev_found":${prevFps.nonEmpty},"same":$fpSame,"new_queries":$fpNew,"changed_n":${fpChanged.size},"strict_changed_n":${fpStrictChanged.size}}"""
+    val fpCompact = if (baseline.isEmpty) NoFpBaselineJson
+      else s"""{"baseline":"BENCH_local.json","prev_found":true,"same":$fpSame,"new_queries":$fpNew,"changed_n":${fpChanged.size},"strict_changed_n":${fpStrictChanged.size}}"""
     println(s"""{"metric":"total","unit":"sec","value":${fmt4(total)},"sf":"$sfDir","n_queries":${names.size},"passes":${retained.size},"exec":"full-plan","queries_detail_file":"$detailFile","detail_file":"$detailFile"$subsetJson,"calibration_sec":$calJson,"run_totals_sec":$runTotalsCompact,"n_failed":${failed.size},"failed_head":$failedCompact,"contaminated_passes":$contamJson,"n_skipped_sink_writers":${sinkWriters.size},"plan_fp_diff":$fpCompact}""")
     spark.stop()
   }

@@ -32,10 +32,24 @@ object Verify {
       if (args.length > 2 && !sqlOnly) Some(args(2).split(",").toSet)
       else None
     def keepOracle(name: String) = only.forall(_.contains(name))
-    def keep(name: String) = !sqlOnly && keepOracle(name)
+    new java.io.File(outDir).mkdirs()
+    // the oracle dump needs no session: --sql-only starts no Spark
+    if (!sqlOnly) runQueries(sfDir, outDir, keepOracle)
+    // keys sorted: two runs of one commit write the same bytes; every
+    // control char in the SQL is escaped, or a reader's json.load fails
+    import graft.formats.Formats.jsonString
+    val json = SparkEntry.oracleSql.toSeq.sortBy(_._1)
+      .filter(kv => keepOracle(kv._1))
+      .map { case (k, v) => s"${jsonString(k)}: ${jsonString(v)}" }
+      .mkString("{", ",", "}")
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+  }
+
+  /** Each kept gate query's result → parquet under `outDir`. */
+  private def runQueries(sfDir: String, outDir: String,
+      keep: String => Boolean): Unit = {
     val spark = Sessions.local(Sessions.cpus)
     spark.sparkContext.setLogLevel("WARN")
-    new java.io.File(outDir).mkdirs()
     SparkEntry.queries.filter(kv => keep(kv._1)).foreach { case (name, fn) =>
       try {
         val df = fn(spark, sfDir)
@@ -66,14 +80,6 @@ object Verify {
       }
       finally graft.ops.Caches.releaseAll()
     }
-    // keys sorted: two runs of one commit write the same bytes; every
-    // control char in the SQL is escaped, or a reader's json.load fails
-    import graft.formats.Formats.jsonString
-    val json = SparkEntry.oracleSql.toSeq.sortBy(_._1)
-      .filter(kv => keepOracle(kv._1))
-      .map { case (k, v) => s"${jsonString(k)}: ${jsonString(v)}" }
-      .mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }
 }

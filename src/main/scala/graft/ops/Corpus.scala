@@ -1326,16 +1326,7 @@ object Corpus {
     require(!quasiCols.contains(sensitiveCol),
       "sensitive column cannot be a quasi-identifier")
     require(tNum >= 0 && tDen > 0, "bad t threshold")
-    val st = df.schema(sensitiveCol).dataType
-    val ok = st match {
-      case org.apache.spark.sql.types.ByteType |
-           org.apache.spark.sql.types.ShortType |
-           org.apache.spark.sql.types.IntegerType |
-           org.apache.spark.sql.types.LongType => true
-      case _ => false
-    }
-    require(ok, s"tCloseness requires an integral sensitive column " +
-      s"(quantize upstream); '$sensitiveCol' is $st")
+    Profiling.requireIntegral(df, sensitiveCol, "tCloseness")
     val dec38 = org.apache.spark.sql.types.DataTypes
       .createDecimalType(38, 0)
     def dd(c: Column) = c.cast(dec38)

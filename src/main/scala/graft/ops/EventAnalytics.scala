@@ -1723,18 +1723,8 @@ object EventAnalytics {
     * S = 0. */
   def mannKendall(df: DataFrame, keyCol: String, xCol: String,
       yCol: String, zCrit: Double = 1.96): DataFrame = {
-    Seq(xCol, yCol).foreach { c =>
-      val t = df.schema(c).dataType
-      val ok = t match {
-        case org.apache.spark.sql.types.ByteType |
-             org.apache.spark.sql.types.ShortType |
-             org.apache.spark.sql.types.IntegerType |
-             org.apache.spark.sql.types.LongType => true
-        case _ => false
-      }
-      require(ok, s"mannKendall requires integral columns " +
-        s"(quantize upstream); '$c' is $t")
-    }
+    Seq(xCol, yCol).foreach(
+      graft.ops.Profiling.requireIntegral(df, _, "mannKendall"))
     val zc2Micro = math.round(zCrit * zCrit * 1e6)
     val dec = org.apache.spark.sql.types.DataTypes.createDecimalType(38, 0)
     val series = df.select(col(keyCol).as("__k__"),
@@ -1791,16 +1781,7 @@ object EventAnalytics {
   def diffInDiff(df: DataFrame, variantCol: String, postCol: String,
       valueCol: String, treatment: String, control: String,
       zCrit: Double = 1.96): DataFrame = {
-    val t = df.schema(valueCol).dataType
-    val ok = t match {
-      case org.apache.spark.sql.types.ByteType |
-           org.apache.spark.sql.types.ShortType |
-           org.apache.spark.sql.types.IntegerType |
-           org.apache.spark.sql.types.LongType => true
-      case _ => false
-    }
-    require(ok, s"diffInDiff requires an integral value " +
-      s"(quantize upstream); '$valueCol' is $t")
+    graft.ops.Profiling.requireIntegral(df, valueCol, "diffInDiff")
     val zc2Micro = math.round(zCrit * zCrit * 1e6)
     val dec = org.apache.spark.sql.types.DataTypes.createDecimalType(38, 0)
     def dd(c: Column) = c.cast(dec)

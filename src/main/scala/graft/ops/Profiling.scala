@@ -271,17 +271,7 @@ object Profiling {
     * wrong when it isn't). */
   def prCurve(df: DataFrame, scoreCol: String,
       labelCol: String): DataFrame = {
-    val it = df.schema(scoreCol).dataType
-    val integral = it match {
-      case org.apache.spark.sql.types.ByteType |
-           org.apache.spark.sql.types.ShortType |
-           org.apache.spark.sql.types.IntegerType |
-           org.apache.spark.sql.types.LongType => true
-      case _ => false
-    }
-    require(integral,
-      s"prCurve requires an integral score (quantize upstream); " +
-        s"'$scoreCol' is $it")
+    requireIntegral(df, scoreCol, "prCurve")
     val perScore = df.groupBy(col(scoreCol).cast("long").as("score"))
       .agg(sum(when(col(labelCol), 1L).otherwise(0L)).as("__pos__"),
         sum(when(col(labelCol), 0L).otherwise(1L)).as("__neg__"))
@@ -786,16 +776,7 @@ object Profiling {
       probsPct.forall(p => p >= 1 && p <= 99) &&
       probsPct == probsPct.sorted && probsPct.distinct == probsPct,
       s"probs must be sorted distinct percentages in [1, 99]: $probsPct")
-    val it = df.schema(valueCol).dataType
-    val integral = it match {
-      case org.apache.spark.sql.types.ByteType |
-           org.apache.spark.sql.types.ShortType |
-           org.apache.spark.sql.types.IntegerType |
-           org.apache.spark.sql.types.LongType => true
-      case _ => false
-    }
-    require(integral, s"quantileBuckets requires an integral value " +
-      s"(quantize upstream); '$valueCol' is $it")
+    requireIntegral(df, valueCol, "quantileBuckets")
     val bs = quantileBoundaries(df, valueCol, probsPct)
     val bucketCol = bs.foldLeft(lit(1)) { (acc, b) =>
       acc + when(col(valueCol).cast("long") > b, 1).otherwise(0)
@@ -903,19 +884,7 @@ object Profiling {
     * Integral coordinates required: the strict within-partition frame
     * uses a value-range offset of 1. */
   def skyline2d(df: DataFrame, xCol: String, yCol: String): DataFrame = {
-    def requireIntegral(c: String): Unit = {
-      val t = df.schema(c).dataType
-      val ok = t match {
-        case org.apache.spark.sql.types.ByteType |
-             org.apache.spark.sql.types.ShortType |
-             org.apache.spark.sql.types.IntegerType |
-             org.apache.spark.sql.types.LongType => true
-        case _ => false
-      }
-      require(ok, s"skyline2d needs integral coordinates " +
-        s"(quantize upstream); '$c' is $t")
-    }
-    requireIntegral(xCol); requireIntegral(yCol)
+    Seq(xCol, yCol).foreach(requireIntegral(df, _, "skyline2d"))
     val spark = df.sparkSession
     val x = col(xCol).cast("long")
     val y = col(yCol).cast("long")
@@ -972,19 +941,7 @@ object Profiling {
     * one row: (n_a, n_b, d_num, d_den, d_at, d) — `d_at` the smallest
     * value attaining the max, `d = d_num/d_den` rounded 6. */
   def ksTest(a: DataFrame, b: DataFrame, valueCol: String): DataFrame = {
-    def requireIntegral(df: DataFrame): Unit = {
-      val t = df.schema(valueCol).dataType
-      val ok = t match {
-        case org.apache.spark.sql.types.ByteType |
-             org.apache.spark.sql.types.ShortType |
-             org.apache.spark.sql.types.IntegerType |
-             org.apache.spark.sql.types.LongType => true
-        case _ => false
-      }
-      require(ok, s"ksTest requires an integral value " +
-        s"(quantize upstream); '$valueCol' is $t")
-    }
-    requireIntegral(a); requireIntegral(b)
+    Seq(a, b).foreach(requireIntegral(_, valueCol, "ksTest"))
     val ha = a.filter(col(valueCol).isNotNull)
       .groupBy(col(valueCol).cast("long").as("__v__"))
       .agg(count(lit(1)).as("__ca__"))
@@ -1419,19 +1376,7 @@ object Profiling {
     * values fit. */
   def wasserstein1(a: DataFrame, b: DataFrame,
       valueCol: String): DataFrame = {
-    def requireIntegral(df: DataFrame): Unit = {
-      val t = df.schema(valueCol).dataType
-      val ok = t match {
-        case org.apache.spark.sql.types.ByteType |
-             org.apache.spark.sql.types.ShortType |
-             org.apache.spark.sql.types.IntegerType |
-             org.apache.spark.sql.types.LongType => true
-        case _ => false
-      }
-      require(ok, s"wasserstein1 requires an integral value " +
-        s"(quantize upstream); '$valueCol' is $t")
-    }
-    requireIntegral(a); requireIntegral(b)
+    Seq(a, b).foreach(requireIntegral(_, valueCol, "wasserstein1"))
     def dec(c: Column) = c.cast("decimal(38,0)")
     val ha = a.filter(col(valueCol).isNotNull)
       .groupBy(col(valueCol).cast("long").as("__v__"))
@@ -1478,16 +1423,7 @@ object Profiling {
     * ess/n ratio rounded 6; null for groups whose weights sum to 0. */
   def effectiveSampleSize(df: DataFrame, groupCol: String,
       weightCol: String): DataFrame = {
-    val t = df.schema(weightCol).dataType
-    val ok = t match {
-      case org.apache.spark.sql.types.ByteType |
-           org.apache.spark.sql.types.ShortType |
-           org.apache.spark.sql.types.IntegerType |
-           org.apache.spark.sql.types.LongType => true
-      case _ => false
-    }
-    require(ok, s"effectiveSampleSize requires an integral weight " +
-      s"(quantize upstream); '$weightCol' is $t")
+    requireIntegral(df, weightCol, "effectiveSampleSize")
     def dec(c: Column) = c.cast("decimal(38,0)")
     df.filter(col(weightCol).isNotNull)
       .groupBy(col(groupCol))
@@ -1526,16 +1462,7 @@ object Profiling {
       scoreCol: String, alphaNum: Long, alphaDen: Long): DataFrame = {
     require(alphaNum >= 0 && alphaDen > 0 && alphaNum <= alphaDen,
       s"alpha must be in [0,1]: $alphaNum/$alphaDen")
-    val t = df.schema(scoreCol).dataType
-    val ok = t match {
-      case org.apache.spark.sql.types.ByteType |
-           org.apache.spark.sql.types.ShortType |
-           org.apache.spark.sql.types.IntegerType |
-           org.apache.spark.sql.types.LongType => true
-      case _ => false
-    }
-    require(ok, s"conformalThreshold requires an integral score " +
-      s"(quantize upstream); '$scoreCol' is $t")
+    requireIntegral(df, scoreCol, "conformalThreshold")
     val hist = df.filter(col(scoreCol).isNotNull)
       .groupBy(col(groupCol), col(scoreCol).cast("long").as("__v__"))
       .agg(count(lit(1)).as("__c__"))
@@ -1569,16 +1496,7 @@ object Profiling {
     * Returns (group, n, mean, loo_mean, influence). */
   def leaveOneOutMeans(df: DataFrame, groupCol: String,
       valueCol: String): DataFrame = {
-    val t = df.schema(valueCol).dataType
-    val ok = t match {
-      case org.apache.spark.sql.types.ByteType |
-           org.apache.spark.sql.types.ShortType |
-           org.apache.spark.sql.types.IntegerType |
-           org.apache.spark.sql.types.LongType => true
-      case _ => false
-    }
-    require(ok, s"leaveOneOutMeans requires an integral value " +
-      s"(quantize upstream); '$valueCol' is $t")
+    requireIntegral(df, valueCol, "leaveOneOutMeans")
     def dec(c: Column) = c.cast("decimal(38,0)")
     val base = df.filter(col(valueCol).isNotNull)
       .select(col(groupCol), col(valueCol).cast("long").as("__v__"))
@@ -1721,16 +1639,7 @@ object Profiling {
     * decimal(38,0); cast at the export boundary when values fit. */
   def rankSumTest(df: DataFrame, groupCol: String, labelCol: String,
       valueCol: String, zCrit: Double = 1.96): DataFrame = {
-    val t = df.schema(valueCol).dataType
-    val ok = t match {
-      case org.apache.spark.sql.types.ByteType |
-           org.apache.spark.sql.types.ShortType |
-           org.apache.spark.sql.types.IntegerType |
-           org.apache.spark.sql.types.LongType => true
-      case _ => false
-    }
-    require(ok, s"rankSumTest requires an integral value " +
-      s"(quantize upstream); '$valueCol' is $t")
+    requireIntegral(df, valueCol, "rankSumTest")
     val zc2Micro = math.round(zCrit * zCrit * 1e6)
     val hist = df
       .filter(col(valueCol).isNotNull && col(labelCol).isNotNull)
@@ -1810,16 +1719,7 @@ object Profiling {
     * row carries nulls for the comparison columns. */
   def welchTTest(df: DataFrame, variantCol: String, valueCol: String,
       control: String, zCrit: Double = 1.96): DataFrame = {
-    val t = df.schema(valueCol).dataType
-    val ok = t match {
-      case org.apache.spark.sql.types.ByteType |
-           org.apache.spark.sql.types.ShortType |
-           org.apache.spark.sql.types.IntegerType |
-           org.apache.spark.sql.types.LongType => true
-      case _ => false
-    }
-    require(ok, s"welchTTest requires an integral value " +
-      s"(quantize upstream); '$valueCol' is $t")
+    requireIntegral(df, valueCol, "welchTTest")
     val zc2Micro = math.round(zCrit * zCrit * 1e6)
     def dec(c: Column) = c.cast("decimal(38,0)")
     val per = df.filter(col(valueCol).isNotNull)

@@ -1,8 +1,9 @@
 package graft.star
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge}
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.UnsafeRow
 import org.apache.spark.sql.functions._
 import graft.exprs.ExprLang
 import graft.ops.Fixpoint
@@ -161,12 +162,13 @@ final class StarSchema(
   /** Build the pruned, qualified star for the given base physical refs.
     * Output columns are `alias__column` for (at least) the needed columns.
     * A request whose pruned tree still holds a join reads a projection of
-    * the cube's pre-joined star when [[prejoinable]]; otherwise, and for
-    * fact-only requests, the tree is built here. */
+    * the cube's pre-joined star when [[prejoinable]], building the star if
+    * need be; a fact-only request reads it only once it is built.
+    * Otherwise the tree is built here. */
   def star(phys0: Iterable[PhysicalRef]): DataFrame = {
     val (phys, eliminated) = eliminateKeyOnlyJoins(phys0)
     val joins = orderedJoins(requiredAliases(phys))
-    var starDf = (if (joins.isEmpty) None else fromPrejoined(phys))
+    var starDf = fromPrejoined(phys, joined = joins.nonEmpty)
       .getOrElse(joinTree(phys, joins))
     // expose eliminated keys under their original qualified names (resolve
     // chains: an eliminated alias's provider may itself be eliminated)
@@ -256,12 +258,14 @@ final class StarSchema(
   }
 
   /** `phys` projected from the pre-joined star, or None when the cube is
-    * not [[prejoinable]], has no shared star, or a ref is not in it. */
-  private def fromPrejoined(phys: Seq[PhysicalRef]): Option[DataFrame] = {
+    * not [[prejoinable]], has no shared star, or a ref is not in it. A
+    * `joined` request builds the star when absent; a fact-only one reads
+    * it only once built and never builds it. */
+  private def fromPrejoined(phys: Seq[PhysicalRef], joined: Boolean): Option[DataFrame] = {
     val cols = phys.map(p => PhysicalRef(p.table, p.column)).distinct
     prejoined.filter(_ => prejoinable && cols.forall(prejoinedColumns))
-      .flatMap(_.frame(joinTree(prejoinedColumns.toSeq,
-        orderedJoins(cube.joins.map(_.detailAlias).toSet))))
+      .flatMap(p => if (joined) p.frame(joinTree(prejoinedColumns.toSeq,
+        orderedJoins(cube.joins.map(_.detailAlias).toSet))) else p.ifBuilt)
       .map(_.select(cols.map(p => col(s"`${qual(p.table, p.column)}`")): _*))
   }
 }
@@ -270,30 +274,60 @@ final class StarSchema(
   * browser of the cube (all identities, restriction cells, locales and
   * hierarchy limits). The star is the round wrap of the iterative
   * operators ([[graft.ops.Fixpoint.persistedLeaf]]): the full join's rows,
-  * persisted as they are first read, under a leaf that keeps the join's
-  * lineage. The first joined request fills it inside its own query; a
-  * lost block is recomputed on its next read. [[drop]] releases it for
-  * good, after which requests answer from their join trees. The owner
+  * persisted, under a leaf that keeps the join's lineage. The first
+  * joined request fills it with one `count`, which also measures it. A
+  * star no larger than the session's `spark.sql.autoBroadcastJoinThreshold`
+  * (Spark's bound for a relation small enough to ship whole; negative
+  * turns this off) is read as one partition that declares it: every
+  * aggregate, distinct and sort over it plans with no exchange, so a
+  * request runs as one stage. A lost block is recomputed on its next
+  * read. [[drop]] releases the star for good, after which requests
+  * answer from their join trees. The owner
   * ([[graft.workspace.Workspace]]) drops it when a table of the cube's
   * store is re-registered or the cube switches to a denormalized table. */
 final class PrejoinedStar(cubeName: String) {
-  private var current: Option[(DataFrame, RDD[InternalRow])] = None
+  // volatile: [[ifBuilt]] reads it without waiting on a build
+  @volatile private var current: Option[(DataFrame, RDD[InternalRow])] = None
   private var dropped = false
   private var builds = 0
 
-  /** The star, wrapped over `build` when absent; None once dropped.
-    * Concurrent first requests wrap it once. */
+  /** The star, built and filled from `build` when absent; None once
+    * dropped. Concurrent first requests build it once. */
   def frame(build: => DataFrame): Option[DataFrame] = synchronized {
     if (dropped) None
     else {
       if (current.isEmpty) {
-        val (star, rdd) = Fixpoint.persistedLeaf(build)
-        rdd.setName(s"${PrejoinedStar.RddName} '$cubeName'")
-        current = Some((star, rdd))
+        current = Some(fill(build))
         builds += 1
       }
       current.map(_._1)
     }
+  }
+
+  /** The star if it is built; never builds it. */
+  def ifBuilt: Option[DataFrame] = current.map(_._1)
+
+  /** `build` persisted, filled and measured, and the leaf that serves it. */
+  private def fill(build: DataFrame): (DataFrame, RDD[InternalRow]) = {
+    val spark = build.sparkSession
+    val bytes = spark.sparkContext.longAccumulator
+    val (wrapped, rdd) = Fixpoint.persistedLeaf(build, {
+      case r: UnsafeRow => bytes.add(r.getSizeInBytes.toLong)
+      case _ => ()
+    })
+    rdd.setName(s"${PrejoinedStar.RddName} '$cubeName'")
+    // a failed fill leaves no blocks behind; the next request builds anew
+    val rows = try rdd.count() catch { case e: Throwable =>
+      rdd.unpersist(blocking = false); throw e
+    }
+    val bound = spark.sessionState.conf.autoBroadcastJoinThreshold
+    val single = bound >= 0 && bytes.value <= bound
+    PrejoinedStar.log.info(s"${PrejoinedStar.RddName} '$cubeName': $rows rows, " +
+      s"${bytes.value} bytes, ${rdd.getNumPartitions} partitions, " +
+      s"served as one partition: $single (bound $bound bytes)")
+    if (single)
+      (GraftSqlBridge.singlePartitionDataFrame(spark, rdd.coalesce(1), build.schema), rdd)
+    else (wrapped, rdd)
   }
 
   /** How many times the star was built. */
@@ -301,7 +335,7 @@ final class PrejoinedStar(cubeName: String) {
 
   /** The star's persisted rows; None before the first build and once
     * dropped. */
-  private[graft] def built: Option[RDD[InternalRow]] = synchronized(current.map(_._2))
+  private[graft] def built: Option[RDD[InternalRow]] = current.map(_._2)
 
   /** Release the star's blocks; later requests read their join trees. */
   def drop(): Unit = synchronized {
@@ -316,4 +350,6 @@ object PrejoinedStar {
     * it): a star lives as long as its workspace serves the cube, unlike the
     * per-request and per-operator persists. */
   val RddName = "pre-joined star of cube"
+
+  private val log = org.slf4j.LoggerFactory.getLogger(classOf[PrejoinedStar])
 }

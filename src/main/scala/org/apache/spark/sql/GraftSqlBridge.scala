@@ -10,7 +10,8 @@ import org.apache.spark.sql.types.StructType
   * public `new Column(expr)` constructor; `classic.ExpressionUtils` is the
   * blessed internal path), `toInternalRdd` and `internalCreateDataFrame`
   * for the one lineage cut, `graft.ops.Fixpoint.persistedLeaf` (the
-  * iterative operators' rounds and the slicer's pre-joined stars), and
+  * iterative operators' rounds and the slicer's pre-joined stars),
+  * `singlePartitionDataFrame` for a small star read as one partition, and
   * the `private[spark]` listener-bus drain and codegen counters behind
   * `graft.RunMeter`.
   */
@@ -34,6 +35,19 @@ object GraftSqlBridge {
       spark: SparkSession, rdd: RDD[InternalRow], schema: StructType): DataFrame =
     spark.asInstanceOf[classic.SparkSession]
       .internalCreateDataFrame(rdd, schema, isStreaming = false)
+
+  /** Wrap a one-partition InternalRow RDD as a DataFrame leaf that
+    * declares `SinglePartition`: Catalyst plans an aggregate, a distinct
+    * or a global sort over it with no exchange. */
+  def singlePartitionDataFrame(
+      spark: SparkSession, rdd: RDD[InternalRow], schema: StructType): DataFrame = {
+    require(rdd.getNumPartitions == 1,
+      s"a single-partition leaf needs one partition, not ${rdd.getNumPartitions}")
+    val session = spark.asInstanceOf[classic.SparkSession]
+    classic.Dataset.ofRows(session, execution.LogicalRDD(
+      catalyst.types.DataTypeUtils.toAttributes(schema), rdd,
+      outputPartitioning = catalyst.plans.physical.SinglePartition)(session))
+  }
 
   /** Whole-stage and expression classes Janino compiled in this JVM. */
   def codegenCompiles: Long =

@@ -7,6 +7,10 @@ import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.SparkEnv
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.physical.SinglePartition
+import org.apache.spark.sql.execution.{LogicalRDD, RDDScanExec}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.storage.RDDBlockId
 import graft.auth.HierarchyLimit
 import graft.browser.Browser
@@ -18,11 +22,14 @@ import graft.workspace.Workspace
 /** The per-cube pre-joined star: a workspace browser answering from it
   * gives the same answers as a browser over the pruned join tree, for
   * random requests of every verb; only a cube whose joins are all
-  * verified `match` joins reads it; a lost block is recomputed, not
-  * rebuilt; and re-registering a table or switching the cube to a
+  * verified `match` joins reads it; a small star is read as one
+  * partition, so joined requests plan no exchange; a fact-only request
+  * reads it once built and never builds it; a lost block is recomputed,
+  * not rebuilt; and re-registering a table or switching the cube to a
   * denormalized table drops it. The star is a small TPC-H-shaped one
   * built here. */
-class PrejoinedStarSpec extends AnyFunSuite with SharedSpark {
+class PrejoinedStarSpec extends AnyFunSuite with SharedSpark
+    with AdaptiveSparkPlanHelper {
 
   import spark.implicits._
 
@@ -187,6 +194,18 @@ class PrejoinedStarSpec extends AnyFunSuite with SharedSpark {
   private def joinsIn(df: DataFrame): Int =
     df.queryExecution.optimizedPlan.collect { case p if p.nodeName == "Join" => p }.size
 
+  /** The LogicalRDD leaves of `df`'s plan: a star read. */
+  private def starLeaves(df: DataFrame): Seq[LogicalRDD] =
+    df.queryExecution.optimizedPlan.collect { case l: LogicalRDD => l }
+
+  /** `df` run, and the exchanges and RDD scans of its final plan (query
+    * stages included). */
+  private def executed(df: DataFrame): (Seq[Exchange], Seq[RDDScanExec]) = {
+    df.collect()
+    val plan = df.queryExecution.executedPlan
+    (collect(plan) { case e: Exchange => e }, collect(plan) { case s: RDDScanExec => s })
+  }
+
   test("random requests of every verb answer from the pre-joined star as from the join tree") {
     val ws = workspace(cube)
     val samples = (1L to 48L).map(i =>
@@ -201,17 +220,76 @@ class PrejoinedStarSpec extends AnyFunSuite with SharedSpark {
     assert(answered >= samples.size * 3 / 4, s"$answered of ${samples.size} answered")
     val star = ws.prejoinedStar("sales").get
     assert(star.buildCount == 1, "every browser of the cube shares one star")
-    // a joined request reads the star, with no join left in its plan; a
-    // fact-only one keeps the bare fact scan
+    // a joined request reads the star, with no join left in its plan; so
+    // does a fact-only one, now that the star is built
     val (b, _) = variants.head.of(ws, cube)
     val joined = b.aggregate(drilldown = Seq("customer:region")).cells
     assert(joinsIn(joined) == 0 && joinsIn(variants.head.of(ws, cube)._2
       .aggregate(drilldown = Seq("customer:region")).cells) == 4)
-    assert(joined.queryExecution.optimizedPlan.collect {
-      case p if p.nodeName == "LogicalRDD" => p }.nonEmpty)
-    val factOnly = b.aggregate(drilldown = Seq("returnflag")).cells
-    assert(factOnly.queryExecution.optimizedPlan.collect {
-      case p if p.nodeName == "LogicalRDD" => p }.isEmpty)
+    assert(starLeaves(joined).nonEmpty)
+    assert(starLeaves(b.aggregate(drilldown = Seq("returnflag")).cells).nonEmpty)
+  }
+
+  test("a small star is one partition: joined aggregate, members and facts plan no exchange") {
+    val ws = workspace(cube)
+    val b = ws.browser("sales")
+    val requests = Seq(
+      "aggregate" -> b.aggregate(CutParser.parseCell("date:2021"),
+        Seq("customer:region", "part:brand"), Seq("fact_count", "price_avg", "parts")).cells,
+      "members" -> b.members(CutParser.parseCell("customer:ASIA"), "customer", Some(2)),
+      "facts" -> b.facts(CutParser.parseCell("customer:EUROPE"),
+        Seq("customer.name", "part.brand"), page = Some(1), pageSize = Some(5)))
+    requests.foreach { case (verb, df) =>
+      assert(joinsIn(df) == 0, verb)
+      val (exchanges, scans) = executed(df)
+      assert(exchanges.isEmpty, s"$verb: ${exchanges.map(_.nodeName)}")
+      assert(scans.nonEmpty && scans.forall(s =>
+        s.outputPartitioning == SinglePartition && s.rdd.getNumPartitions == 1), verb)
+    }
+    // one partition is a view of the persisted rows, not a second copy
+    val star = ws.prejoinedStar("sales").get
+    assert(star.buildCount == 1 && star.built.get.getNumPartitions > 1)
+  }
+
+  test("a star above the session's broadcast threshold keeps its partitions and answers alike") {
+    val ws = workspace(cube)
+    val tree = new Browser(cube, new StarSchema(cube, base("lineitem"), base), spark)
+    val saved = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    // under the star's 34 KB, over every dimension table: the joins stay
+    // broadcast and the star keeps the fact's partitions
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "16k")
+    try {
+      val b = ws.browser("sales")
+      val joined = b.aggregate(drilldown = Seq("customer:nation", "date:year"))
+      val answer = rows(joined.cells) ++ rows(joined.summary.get)
+      val star = ws.prejoinedStar("sales").get
+      val parts = star.built.get.getNumPartitions
+      assert(parts > 1)
+      assert(starLeaves(joined.cells).map(_.rdd.getNumPartitions) == Seq(parts))
+      val (_, scans) = executed(joined.cells)
+      assert(scans.nonEmpty && scans.forall(_.outputPartitioning != SinglePartition))
+      val expected = tree.aggregate(drilldown = Seq("customer:nation", "date:year"))
+      assert(answer == rows(expected.cells) ++ rows(expected.summary.get))
+    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", saved)
+  }
+
+  test("a fact-only request reads the fact scan until a joined request has built the star") {
+    val ws = workspace(cube)
+    val b = ws.browser("sales")
+    val star = ws.prejoinedStar("sales").get
+    def factOnly = b.aggregate(drilldown = Seq("returnflag"),
+      aggregates = Seq("fact_count", "quantity_sum"))
+    def answer(r: graft.browser.AggregationResult) = rows(r.cells) ++ rows(r.summary.get)
+    val before = factOnly
+    assert(starLeaves(before.cells).isEmpty && joinsIn(before.cells) == 0)
+    val fromScan = answer(before)
+    assert(star.buildCount == 0, "a fact-only request never builds the star")
+    rows(b.aggregate(drilldown = Seq("customer:region")).cells)
+    assert(star.buildCount == 1)
+    val after = factOnly
+    assert(starLeaves(after.cells).nonEmpty)
+    assert(answer(after) == fromScan)
+    assert(star.buildCount == 1)
   }
 
   test("a cube with one unverified join never reads the star") {
@@ -235,6 +313,9 @@ class PrejoinedStarSpec extends AnyFunSuite with SharedSpark {
     val before = regionCounts
     val star = ws.prejoinedStar("sales").get
     val rdd = star.built.get
+    // requests read the persisted rows through the one-partition view
+    assert(starLeaves(b.aggregate(drilldown = Seq("customer:region")).cells)
+      .map(_.rdd.getNumPartitions) == Seq(1) && rdd.getNumPartitions > 1)
     val blocks = rdd.partitions.indices.map(RDDBlockId(rdd.id, _))
     def cachedPartitions: Int = blocks.count(SparkEnv.get.blockManager.master.contains)
     assert(cachedPartitions == blocks.size)
